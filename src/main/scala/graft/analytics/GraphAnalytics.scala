@@ -1,10 +1,11 @@
 package graft.analytics
 
 import graft.ingest.Refresh.GraphStore
-import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph, VertexId}
+import org.apache.spark.graphx.{EdgeDirection, Edge => GxEdge, Graph => GxGraph, VertexId}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 import org.apache.spark.storage.StorageLevel
 
 /** Bulk graph analytics over the property-graph store via GraphX
@@ -140,7 +141,6 @@ object GraphAnalytics {
     */
   def shortestPathsFrom(spark: SparkSession, g: GxGraph[String, String],
       sources: DataFrame): DataFrame = {
-    import org.apache.spark.graphx.EdgeDirection
     import spark.implicits._
     val srcRdd: RDD[(VertexId, Long)] = sources
       .select(col(sources.columns.head).cast("long")).as[Long].rdd.map(id => (id, 0L))
@@ -168,46 +168,94 @@ object GraphAnalytics {
       min("degree").as("min_degree"), max("degree").as("max_degree"),
       avg("degree").as("avg_degree"), count(lit(1)).as("n_vertices"))
 
+  /** The canonical undirected simple graph of an edge frame: each
+    * endpoint pair once as (least, greatest), self-loops and null
+    * endpoints dropped, vertices = the remaining edge endpoints. The
+    * endpoint columns must hold integral ids (they become VertexIds).
+    */
+  private def simpleGraph(edges: DataFrame, srcCol: String,
+      dstCol: String): GxGraph[Int, Int] = {
+    val (a, b) = (col(srcCol), col(dstCol))
+    val pairs = edges.where(a =!= b)
+      .select(least(a, b).cast("long"), greatest(a, b).cast("long")).distinct()
+      .rdd.map(r => GxEdge(r.getLong(0), r.getLong(1), 0))
+    GxGraph.fromEdges(pairs, 0, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The id type of an edge frame's endpoint columns (the wider of the two). */
+  private def idType(edges: DataFrame, srcCol: String, dstCol: String): DataType =
+    edges.select(least(col(srcCol), col(dstCol))).schema.head.dataType
+
   /** Blast radius: all nodes within `maxHops` of `startIds` along the given
     * relationship types, ignoring direction — e.g. "which VMs transitively
     * depend on datastore X" via CONNECTED_DATASTORE/ON_DATASTORE/
-    * VDISK_FOR_VM. Iterative frontier expansion with DataFrame joins (each
-    * hop is one shuffle against the filtered edge set — no full-graph
-    * materialization, hop count bounded).
+    * VDISK_FOR_VM. Returns (id, label, key, hops), `hops` minimal; a start
+    * id is hop 0 even when no edge of `relTypes` touches it. A Pregel
+    * min-hop BFS over the relType-filtered [[simpleGraph]]: superstep h
+    * sends only from the previous hop's frontier (`EdgeDirection.Either`),
+    * one Spark job per hop.
     */
   def blastRadius(store: GraphStore, startIds: DataFrame,
       relTypes: Set[String], maxHops: Int = 4): DataFrame = {
-    val rel = store.edges.filter(col("relType").isInCollection(relTypes))
-    // Iterative joins: truncate lineage every hop (localCheckpoint) or the
-    // logical plan doubles per iteration and canonicalization blows the
-    // driver heap long before the data does.
-    val und = rel.select(col("src").as("a"), col("dst").as("b"))
-      .unionAll(rel.select(col("dst").as("a"), col("src").as("b")))
-      .distinct().localCheckpoint(true)
-    var frontier = startIds.select(col("id")).distinct()
-      .withColumn("hops", lit(0)).localCheckpoint(true)
-    var reached = frontier
-    var hop = 0
-    var grew = true
-    while (hop < maxHops && grew) {
-      hop += 1
-      // The frontier-growth count rides the hop's checkpoint as an
-      // observed metric, and `reached` stays a plain union of the hops'
-      // checkpointed leaves (r16) — previously each hop paid two extra
-      // actions (a count and a re-checkpoint of the whole reached set).
-      val obs = org.apache.spark.sql.Observation()
-      val next = frontier.join(und, frontier("id") === und("a"))
-        .select(col("b").as("id")).distinct()
-        .join(reached.select("id"), Seq("id"), "left_anti")
-        .withColumn("hops", lit(hop))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      grew = obs.get("n").asInstanceOf[Long] > 0L
-      reached = reached.unionByName(next)
-      frontier = next
-    }
-    reached.join(store.nodes, Seq("id"))
+    require(maxHops >= 0)
+    val starts = startIds.select(col("id")).distinct()
+    val unreached = Int.MaxValue
+    val init = simpleGraph(store.edges.filter(col("relType").isInCollection(relTypes)),
+      "src", "dst")
+      .outerJoinVertices(starts.rdd.map(r => (r.getLong(0), 0)))((_, _, s) =>
+        s.getOrElse(unreached))
+    val bfs = if (maxHops == 0) init else init.pregel(unreached, maxHops, EdgeDirection.Either)(
+      (_, h, msg) => math.min(h, msg),
+      t => if (t.srcAttr < t.dstAttr - 1) Iterator((t.dstId, t.srcAttr + 1))
+        else if (t.dstAttr < t.srcAttr - 1) Iterator((t.srcId, t.dstAttr + 1))
+        else Iterator.empty,
+      math.min)
+    val spark = store.edges.sparkSession
+    import spark.implicits._
+    bfs.vertices.filter { case (_, h) => h > 0 && h != unreached }.toDF("id", "hops")
+      .unionAll(starts.withColumn("hops", lit(0)))
+      .join(store.nodes, Seq("id"))
       .select(col("id"), col("label"), col("key"), col("hops"))
+  }
+
+  /** k-core decomposition by iterative peeling: repeatedly delete every
+    * vertex whose CURRENT degree (within the surviving subgraph) is
+    * below `k` until none remains — the classic graph-quality trim
+    * (spam/bot rings and weakly-attached tendrils peel away; what
+    * survives is the densely-knit core). `edges` are undirected pairs,
+    * canonicalized by [[simpleGraph]]. Returns (v, core_degree) for the
+    * surviving vertices; an empty frame when no k-core exists.
+    *
+    * Runs to the FIXPOINT (a round that deletes no edge), bounded by
+    * `maxRounds` — non-convergence within the bound throws loudly (the
+    * [[graft.llmops.Dedup.resolveClusters]] discipline) rather than
+    * returning a half-peeled graph. A round is a GraphX degree
+    * aggregation plus `subgraph`: one Spark job. Because the fixpoint is
+    * stable, an oracle may replay MORE rounds than the engine needed:
+    * extra rounds are no-ops — which is what lets a fixed-unroll SQL
+    * replay hash-match a data-dependent iteration count.
+    */
+  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
+      maxRounds: Int = 30): DataFrame = {
+    require(k >= 1 && maxRounds >= 1)
+    var g = simpleGraph(edges, srcCol, dstCol).cache()
+    var nEdges = g.numEdges
+    var round = 0
+    var stable = false
+    while (!stable && round < maxRounds) {
+      round += 1
+      val next = g.outerJoinVertices(g.degrees)((_, _, d) => d.getOrElse(0))
+        .subgraph(vpred = (_, d) => d >= k).cache()
+      val n = next.numEdges
+      g.unpersist(blocking = false)
+      g = next
+      stable = n == nEdges
+      nEdges = n
+    }
+    require(stable, s"k-core did not converge within $maxRounds rounds")
+    // the last round removed no edge, so each survivor's degree is its in-core degree
+    toDF(edges.sparkSession, g.vertices.mapValues(_.toLong), "core_degree")
+      .select(col("id").cast(idType(edges, srcCol, dstCol)).as("v"), col("core_degree"))
   }
 
   /** Community detection by DETERMINISTIC synchronous label propagation
@@ -217,93 +265,38 @@ object GraphAnalytics {
     * places stock LPA is nondeterministic (random vertex order, random
     * tie pick) both pinned, so `iters` rounds produce one well-defined
     * answer any engine can replay (GraphX's own LPA keeps hash-map tie
-    * order — not oracle-checkable).
+    * order — not oracle-checkable). A round is one GraphX
+    * `aggregateMessages` of per-label neighbor counts plus the argmax:
+    * one Spark job. Synchronous LPA can 2-cycle on bipartite structure —
+    * callers pick `iters` (and see the spec's oscillation pin).
     *
-    * DataFrame-native rather than Pregel: per round ONE edge⋈labels
-    * equi-join plus a map-side-combining (vertex, label) count and a
-    * `min_by` argmax — two shuffles bounded by |E| and |V|·distinct-
-    * neighbor-labels; the labels table localCheckpoints between rounds
-    * (the [[blastRadius]] lineage discipline). Synchronous LPA can
-    * 2-cycle on bipartite structure — callers pick `iters` (and see the
-    * spec's oscillation pin); labels after round t are the full state,
-    * so convergence checks are a one-line diff of successive rounds.
-    *
-    * `edges` are undirected pairs (symmetrized + deduped here);
+    * `edges` are undirected pairs, canonicalized by [[simpleGraph]];
     * vertices = edge endpoints (isolated vertices have no neighbors to
     * vote — add them downstream as their own singleton communities).
     * Returns (v, community).
     */
-  /** k-core decomposition by iterative peeling: repeatedly delete every
-    * vertex whose CURRENT degree (within the surviving subgraph) is
-    * below `k` until none remains — the classic graph-quality trim
-    * (spam/bot rings and weakly-attached tendrils peel away; what
-    * survives is the densely-knit core). Returns the surviving vertices
-    * with their in-core degree; an empty frame when no k-core exists.
-    *
-    * Runs to the FIXPOINT (a round that deletes nothing), bounded by
-    * `maxRounds` — non-convergence within the bound throws loudly (the
-    * [[graft.llmops.Dedup.resolveClusters]] discipline) rather than
-    * returning a half-peeled graph. Convergence is ≤ |V| rounds in
-    * theory, a handful in practice (each round is one degree aggregation
-    * + one semi-join over the shrinking edge set, checkpointed — the
-    * per-round cost DROPS as the graph peels). Because the fixpoint is
-    * stable, an oracle may replay MORE rounds than the engine needed:
-    * extra rounds are no-ops — which is what lets a fixed-unroll SQL
-    * replay hash-match a data-dependent iteration count.
-    */
-  def kCore(edges: DataFrame, srcCol: String, dstCol: String, k: Int,
-      maxRounds: Int = 30): DataFrame = {
-    require(k >= 1 && maxRounds >= 1)
-    val obs0 = org.apache.spark.sql.Observation()
-    var und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionAll(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct().observe(obs0, count(lit(1)).as("n")).localCheckpoint(true)
-    // Edge counts ride the checkpoints as observed metrics and the
-    // previous round's count carries over (r16) — the stability check
-    // previously re-counted BOTH frames every round (two extra actions).
-    var nEdges = obs0.get("n").asInstanceOf[Long]
-    var round = 0
-    var stable = false
-    while (!stable && round < maxRounds) {
-      round += 1
-      val keep = und.groupBy("u").agg(count(lit(1)).as("__d"))
-        .filter(col("__d") >= k).select("u").localCheckpoint(true)
-      val obs = org.apache.spark.sql.Observation()
-      val pruned = und
-        .join(keep, Seq("u"), "left_semi")
-        .join(keep.select(col("u").as("v")), Seq("v"), "left_semi")
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      val nPruned = obs.get("n").asInstanceOf[Long]
-      stable = nPruned == nEdges
-      nEdges = nPruned
-      und = pruned
-    }
-    require(stable, s"k-core did not converge within $maxRounds rounds")
-    und.groupBy(col("u").as("v")).agg(count(lit(1)).as("core_degree"))
-  }
-
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int): DataFrame = {
     require(iters >= 0)
-    val und = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .unionAll(edges.select(col(dstCol).as("u"), col(srcCol).as("v")))
-      .filter(col("u") =!= col("v"))
-      .distinct().localCheckpoint(true)
-    val verts = und.select(col("u").as("vtx")).distinct()
-    var labels = verts.select(col("vtx"), col("vtx").as("lbl"))
-      .localCheckpoint(true)
-    for (_ <- 1 to iters) {
-      val counts = und
-        .join(labels.select(col("vtx").as("v"), col("lbl")), Seq("v"))
-        .groupBy(col("u"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      val next = counts.groupBy(col("u"))
-        .agg(min_by(col("lbl"), struct(-col("cnt"), col("lbl"))).as("newLbl"))
-      labels = verts.join(next, verts("vtx") === next("u"), "left")
-        .select(col("vtx"), coalesce(col("newLbl"), col("vtx")).as("lbl"))
-        .localCheckpoint(true)
+    type Counts = Map[VertexId, Long]
+    def merge(x: Counts, y: Counts): Counts = {
+      val (big, small) = if (x.size >= y.size) (x, y) else (y, x)
+      small.foldLeft(big) { case (m, (l, n)) => m.updated(l, m.getOrElse(l, 0L) + n) }
     }
-    labels.select(col("vtx").as("v"), col("lbl").as("community"))
+    var g = simpleGraph(edges, srcCol, dstCol).mapVertices((v, _) => v).cache()
+    for (_ <- 1 to iters) {
+      val counts = g.aggregateMessages[Counts](t => {
+        t.sendToDst(Map(t.srcAttr -> 1L))
+        t.sendToSrc(Map(t.dstAttr -> 1L))
+      }, merge)
+      val next = g.outerJoinVertices(counts)((_, lbl, c) =>
+        c.fold(lbl)(_.minBy { case (l, n) => (-n, l) }._1)).cache()
+      next.edges.count()
+      g.unpersist(blocking = false)
+      g = next
+    }
+    val t = idType(edges, srcCol, dstCol)
+    toDF(edges.sparkSession, g.vertices, "community")
+      .select(col("id").cast(t).as("v"), col("community").cast(t))
   }
 }

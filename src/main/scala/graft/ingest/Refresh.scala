@@ -1,7 +1,7 @@
 package graft.ingest
 
 import graft.operators.Upsert
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -42,10 +42,6 @@ object Refresh {
     StructField("props", MapType(StringType, StringType), nullable = true)))
 
   final case class GraphStore(nodes: DataFrame, edges: DataFrame)
-
-  def emptyStore(spark: SparkSession): GraphStore = GraphStore(
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], nodeSchema),
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], edgeSchema))
 
   /** One full refresh of `store` from a workbook. */
   def refresh(store: GraphStore, wb: Workbook.Sheets): GraphStore = {

@@ -1071,8 +1071,8 @@ object Dedup {
     * components are near-cliques (every member resembles the survivor), so
     * 2–3 rounds is typical regardless of corpus size. `localCheckpoint`
     * per round truncates lineage, the same discipline as
-    * GraphAnalytics.blastRadius — without it the iterated plan doubles per
-    * round. For adversarial long-chain graphs the escalation is the
+    * [[connectedComponentsStars]] — without it the iterated plan doubles
+    * per round. For adversarial long-chain graphs the escalation is the
     * large-star/small-star alternation (Kiveris et al., "Connected
     * Components in MapReduce and Beyond") or GraphX connectedComponents;
     * `maxIters` bounds the worst case either way.

@@ -149,22 +149,4 @@ object Upsert {
       }
     others.unionByName(merged)
   }
-
-  /** Sweep edges after a node sweep: an edge survives only if both
-    * endpoints survive (DETACH DELETE semantics, M8). Tenant's edges are
-    * rebuilt from the batch (the mark phase drops them all up front — M7).
-    */
-  def markSweepEdges(
-      existingEdges: DataFrame,
-      incomingEdges: DataFrame,
-      survivingNodeIds: DataFrame, // single column "id"
-      tenantCol: String,
-      tenant: String): DataFrame = {
-    val others = existingEdges.filter(col(tenantCol) =!= tenant || col(tenantCol).isNull)
-    val ids = survivingNodeIds.select(col("id"))
-    val mine = incomingEdges
-      .join(ids.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-      .join(ids.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-    others.unionByName(mine.select(existingEdges.columns.map(col).toSeq: _*))
-  }
 }

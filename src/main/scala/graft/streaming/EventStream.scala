@@ -40,16 +40,6 @@ object EventStream {
       .agg(count(lit(1)).as("n"))
       .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
-  /** Sliding-window sums (width/slide), watermarked. */
-  def slidingSums(events: DataFrame, width: String = "10 minutes",
-      slide: String = "5 minutes", lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), width, slide), col("event_type"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("value").cast("decimal(18,2)")).cast("double").as("sum_value"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"),
-        col("sum_value"))
-
   /** Per-user session windows (gap-based) with a watermark — the streaming
     * sessionization operator. State per (user, open session) is bounded by
     * the watermark: sessions older than `lateness` finalize and evict.
@@ -63,16 +53,6 @@ object EventStream {
       .select(col("session_window.start").as("session_start"),
         col("session_window.end").as("session_end"),
         col("user_id"), col("n_events"), col("sum_value"))
-
-  /** Exactly-once event dedup inside the watermark horizon: duplicate
-    * event_ids arriving within `lateness` of each other collapse to the
-    * first occurrence; state evicts with the watermark (bounded — the
-    * difference from a naive global dropDuplicates, whose state grows
-    * forever on an unbounded stream).
-    */
-  def dedupedEvents(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .dropDuplicatesWithinWatermark("event_id")
 
   /** Custom keyed state via mapGroupsWithState: per-user running totals
     * (event count + value sum) maintained across micro-batches — the

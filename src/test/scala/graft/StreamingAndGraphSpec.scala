@@ -443,14 +443,23 @@ class StreamingAndGraphSpec extends SparkTestBase {
     }
   }
 
+  private def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+  // two 4-cliques {1..4} and {10..13} joined by one bridge 4–10
+  private val twoCliques =
+    clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++ Seq((4L, 10L))
+  // a 4-clique (every vertex degree 3) with a pendant chain 4–20–21
+  private val cliqueWithTendril = clique(Seq(1L, 2L, 3L, 4L)) ++ Seq((4L, 20L), (20L, 21L))
+  /** The same undirected graph written the untidy way edge feeds do:
+    * every edge also reversed, some twice, plus a self-loop per vertex. */
+  private def untidy(edges: Seq[(Long, Long)]) =
+    edges ++ edges.map(_.swap) ++ edges.take(2) ++
+      edges.flatMap { case (a, b) => Seq(a, b) }.distinct.map(v => (v, v))
+
   test("labelPropagation: two cliques resolve to their min labels; bipartite 2-cycle pinned") {
     import spark.implicits._
-    // two 4-cliques {1..4} and {10..13} joined by one bridge 4–10: after
-    // a few rounds each clique carries its minimum label, and the bridge
-    // does not merge them (each endpoint's clique majority wins 3:1).
-    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
-    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ clique(Seq(10L, 11L, 12L, 13L)) ++
-      Seq((4L, 10L))).toDF("a", "b")
+    // after a few rounds each clique carries its minimum label, and the
+    // bridge does not merge them (each endpoint's clique majority wins 3:1).
+    val edges = twoCliques.toDF("a", "b")
     val out = GraphAnalytics.labelPropagation(edges, "a", "b", iters = 4)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(Seq(1L, 2L, 3L, 4L).forall(out(_) == 1L), s"clique 1 labels: $out")
@@ -468,12 +477,9 @@ class StreamingAndGraphSpec extends SparkTestBase {
 
   test("kCore: tendrils peel, the dense core survives with in-core degrees") {
     import spark.implicits._
-    // a 4-clique (every vertex degree 3) with a pendant chain 4–20–21:
-    // the 3-core is exactly the clique; the chain peels in two rounds
-    // (21 first, then 20 — its degree DROPS when 21 leaves).
-    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
-    val edges = (clique(Seq(1L, 2L, 3L, 4L)) ++ Seq((4L, 20L), (20L, 21L)))
-      .toDF("a", "b")
+    // the 3-core of the clique with a pendant chain is exactly the
+    // clique: 20 (degree 2) and 21 (degree 1) peel away.
+    val edges = cliqueWithTendril.toDF("a", "b")
     val core3 = GraphAnalytics.kCore(edges, "a", "b", k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(core3 == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L),
@@ -482,6 +488,43 @@ class StreamingAndGraphSpec extends SparkTestBase {
     assert(GraphAnalytics.kCore(edges, "a", "b", k = 4).count() == 0L)
     // k = 1 keeps everything (every vertex has an edge).
     assert(GraphAnalytics.kCore(edges, "a", "b", k = 1).count() == 6L)
+  }
+
+  test("kCore and labelPropagation ignore self-loops, duplicate and reversed edges") {
+    import spark.implicits._
+    def core(e: Seq[(Long, Long)], k: Int) =
+      GraphAnalytics.kCore(e.toDF("a", "b"), "a", "b", k).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+    def lpa(e: Seq[(Long, Long)], iters: Int) =
+      GraphAnalytics.labelPropagation(e.toDF("a", "b"), "a", "b", iters).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toMap
+    for (k <- 1 to 3)
+      assert(core(untidy(cliqueWithTendril), k) == core(cliqueWithTendril, k), s"k = $k")
+    for (iters <- Seq(1, 4))
+      assert(lpa(untidy(twoCliques), iters) == lpa(twoCliques, iters), s"iters = $iters")
+    // the id type of the endpoint columns carries through to the output
+    val intEdges = cliqueWithTendril.map { case (a, b) => (a.toInt, b.toInt) }.toDF("a", "b")
+    assert(GraphAnalytics.kCore(intEdges, "a", "b", k = 3).schema("v").dataType ==
+      org.apache.spark.sql.types.IntegerType)
+    assert(GraphAnalytics.labelPropagation(intEdges, "a", "b", iters = 1)
+      .schema.map(_.dataType).distinct == Seq(org.apache.spark.sql.types.IntegerType))
+  }
+
+  test("kCore and labelPropagation issue about one Spark job per round") {
+    import spark.implicits._
+    // A round planned as its own Catalyst query costs several jobs (AQE
+    // stages, checkpoints); a GraphX superstep costs one. The bound is
+    // rounds + 4: building the graph, the first materialization and the
+    // result's collect.
+    val (lpa, lpaJobs) = countJobs(
+      GraphAnalytics.labelPropagation(twoCliques.toDF("a", "b"), "a", "b", iters = 5).collect())
+    assert(lpa.length == 8)
+    assert(lpaJobs <= 5 + 4, s"labelPropagation(iters = 5) ran $lpaJobs jobs")
+    // the tendril peels in one round and a second finds the fixpoint
+    val (core, coreJobs) = countJobs(
+      GraphAnalytics.kCore(cliqueWithTendril.toDF("a", "b"), "a", "b", k = 3).collect())
+    assert(core.length == 4)
+    assert(coreJobs <= 2 + 4, s"kCore(k = 3) ran $coreJobs jobs")
   }
 
   test("dataCardStream: card is batch-split-invariant, restart-safe, exact below k") {
@@ -1155,6 +1198,27 @@ class StreamingAndGraphSpec extends SparkTestBase {
     // hosts connected to the datastore are in the radius too.
     val hosts = radius.filter(col("label") === "Vspherehost").count()
     assert(hosts == 2)
+  }
+
+  test("blastRadius: minimal hops, capped at maxHops; an edgeless start is hop 0 alone") {
+    import spark.implicits._
+    val nodes = (1L to 9L).map(id => (id, "N", s"n$id")).toDF("id", "label", "key")
+    // chain 1–2–3–4–5–7 along R, with a shortcut 1–4 (stored reversed and
+    // twice) that puts 4 at hop 1, not 3; 8 touches only an S edge and 9
+    // no edge at all.
+    val edges = Seq((1L, 2L, "R"), (3L, 2L, "R"), (3L, 4L, "R"), (4L, 5L, "R"),
+      (5L, 7L, "R"), (4L, 1L, "R"), (4L, 1L, "R"), (8L, 1L, "S"))
+      .toDF("src", "dst", "relType")
+    val store = Refresh.GraphStore(nodes, edges)
+    def radius(start: Seq[Long], maxHops: Int) =
+      GraphAnalytics.blastRadius(store, start.toDF("id"), Set("R"), maxHops)
+        .collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("hops"))).toMap
+    assert(radius(Seq(1L), 4) == Map(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 5L -> 2, 7L -> 3))
+    assert(radius(Seq(1L), 2) == Map(1L -> 0, 2L -> 1, 4L -> 1, 3L -> 2, 5L -> 2))
+    assert(radius(Seq(1L), 0) == Map(1L -> 0))
+    assert(radius(Seq(8L), 4) == Map(8L -> 0))
+    assert(radius(Seq(9L), 4) == Map(9L -> 0))
+    assert(radius(Seq(9L, 7L, 7L), 1) == Map(9L -> 0, 7L -> 0, 5L -> 1))
   }
 
   test("GraphX triangle count finds the host-cluster-vcenter triangles") {

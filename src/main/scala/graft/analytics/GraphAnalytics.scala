@@ -169,21 +169,22 @@ object GraphAnalytics {
       avg("degree").as("avg_degree"), count(lit(1)).as("n_vertices"))
 
   /** The canonical undirected simple graph of an edge frame: each
-    * endpoint pair once as (least, greatest), self-loops and null
-    * endpoints dropped, vertices = the remaining edge endpoints. The
-    * endpoint columns must hold integral ids (they become VertexIds).
+    * endpoint pair once as (least, greatest), null endpoints dropped,
+    * vertices = the remaining edge endpoints. Self-loops are dropped
+    * unless `keepSelfLoops`, which keeps a self-paired id as a vertex.
+    * The endpoint columns must hold integral ids (they become VertexIds).
     */
-  private def simpleGraph(edges: DataFrame, srcCol: String,
-      dstCol: String): GxGraph[Int, Int] = {
+  private[graft] def simpleGraph(edges: DataFrame, srcCol: String,
+      dstCol: String, keepSelfLoops: Boolean = false): GxGraph[Int, Int] = {
     val (a, b) = (col(srcCol), col(dstCol))
-    val pairs = edges.where(a =!= b)
+    val pairs = edges.where(if (keepSelfLoops) a.isNotNull && b.isNotNull else a =!= b)
       .select(least(a, b).cast("long"), greatest(a, b).cast("long")).distinct()
       .rdd.map(r => GxEdge(r.getLong(0), r.getLong(1), 0))
     GxGraph.fromEdges(pairs, 0, StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
   }
 
   /** The id type of an edge frame's endpoint columns (the wider of the two). */
-  private def idType(edges: DataFrame, srcCol: String, dstCol: String): DataType =
+  private[graft] def idType(edges: DataFrame, srcCol: String, dstCol: String): DataType =
     edges.select(least(col(srcCol), col(dstCol))).schema.head.dataType
 
   /** Blast radius: all nodes within `maxHops` of `startIds` along the given
@@ -227,9 +228,8 @@ object GraphAnalytics {
     * surviving vertices; an empty frame when no k-core exists.
     *
     * Runs to the FIXPOINT (a round that deletes no edge), bounded by
-    * `maxRounds` — non-convergence within the bound throws loudly (the
-    * [[graft.llmops.Dedup.resolveClusters]] discipline) rather than
-    * returning a half-peeled graph. A round is a GraphX degree
+    * `maxRounds` — non-convergence within the bound throws loudly rather
+    * than returning a half-peeled graph. A round is a GraphX degree
     * aggregation plus `subgraph`: one Spark job. Because the fixpoint is
     * stable, an oracle may replay MORE rounds than the engine needed:
     * extra rounds are no-ops — which is what lets a fixed-unroll SQL

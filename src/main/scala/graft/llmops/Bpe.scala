@@ -18,8 +18,7 @@ import org.apache.spark.sql.functions._
   * vocabulary — millions of rows, not billions of documents — and each
   * of the K rounds is one pair-count groupBy over it plus a windowed
   * rewrite, K bounded. The argmax pair per round is a 1-row driver
-  * action (the model itself is K rows — bounded by construction, like
-  * the convergence fingerprints in [[Dedup.resolveClusters]]).
+  * action (the model itself is K rows — bounded by construction).
   *
   * Everything is deterministic — ties break by (pair frequency DESC,
   * left ASC, right ASC) — and every step is windows + integer

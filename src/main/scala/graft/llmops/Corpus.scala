@@ -94,10 +94,9 @@ object Corpus {
     * eval-contamination bug ([[withSplit]] hashes each doc independently,
     * so a 0.9-Jaccard twin of a training document lands in test 20% of
     * the time). `clusters` is the `(v, cluster)` labeling from
-    * [[Dedup.resolveClusters]] / [[Dedup.connectedComponentsStars]];
-    * documents absent from it are singletons and fall back to their own
-    * key — the same hash mechanism, so with an empty cluster table this
-    * degrades exactly to [[withSplit]].
+    * [[Dedup.resolveClusters]]; documents absent from it are singletons
+    * and fall back to their own key — the same hash mechanism, so with an
+    * empty cluster table this degrades exactly to [[withSplit]].
     *
     * The effective split key is exposed as `split_key` so downstream
     * audits can verify the no-straddle invariant with one groupBy.

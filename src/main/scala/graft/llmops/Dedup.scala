@@ -1,5 +1,6 @@
 package graft.llmops
 
+import graft.analytics.GraphAnalytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1061,149 +1062,29 @@ object Dedup {
         (col("__n") - coalesce(col("n_lines_kept"), lit(0L))).as("n_lines_removed"))
   }
 
-  /** Resolve near-dup pairs into clusters: connected components over the
-    * pair graph by iterative min-label propagation, entirely in DataFrame
-    * joins. Returns one row per vertex appearing in any pair:
-    * (v, cluster) with cluster = the minimum vertex id in its component.
+  /** Resolve near-dup pairs into clusters: the connected components of
+    * the pair graph, by GraphX `connectedComponents` over the canonical
+    * (least, greatest) distinct edge set
+    * ([[graft.analytics.GraphAnalytics.simpleGraph]]). Returns one row
+    * per endpoint of a non-null pair: (v, cluster) with cluster = the
+    * minimum vertex id in its component, both columns of the id columns'
+    * type. A self-pair is kept as a self-loop, so a self-paired id comes
+    * back as its own cluster.
     *
-    * Scale notes: each round is two shuffles (edge⋈label join + groupBy
-    * min) and convergence takes O(component diameter) rounds — near-dup
-    * components are near-cliques (every member resembles the survivor), so
-    * 2–3 rounds is typical regardless of corpus size. `localCheckpoint`
-    * per round truncates lineage, the same discipline as
-    * [[connectedComponentsStars]] — without it the iterated plan doubles
-    * per round. For adversarial long-chain graphs the escalation is the
-    * large-star/small-star alternation (Kiveris et al., "Connected
-    * Components in MapReduce and Beyond") or GraphX connectedComponents;
-    * `maxIters` bounds the worst case either way.
+    * Scale notes: a superstep is one Spark job and sends messages only
+    * along edges whose endpoints still disagree; the run ends when none
+    * does, after O(component diameter) supersteps. Near-dup components
+    * are near-cliques (every member resembles the survivor), so 2–3
+    * supersteps is typical regardless of corpus size; a long chain takes
+    * more supersteps but still resolves.
     */
-  def resolveClusters(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 20): DataFrame = {
-    val undObs = org.apache.spark.sql.Observation()
-    val und = pairs.select(col(aCol).as("v"), col(bCol).as("u"))
-      .unionAll(pairs.select(col(bCol).as("v"), col(aCol).as("u")))
-      .distinct().observe(undObs, count(lit(1)).as("n")).localCheckpoint(true)
-    // Empty pair graph → empty labels: skip the loop (r16; a streaming
-    // caller's day-one batch hits this constantly).
-    if (undObs.get("n").asInstanceOf[Long] == 0L)
-      return und.select(col("v"), col("v").as("cluster"))
-    // r16: iteration 1 is FUSED with label init — labels₀ is the identity,
-    // so round one's neighbor-min is simply min(v, min over neighbors),
-    // one groupBy instead of init-checkpoint + join + groupBy. Same
-    // monotone min fixpoint, one round of budget effectively added.
-    val obs1 = org.apache.spark.sql.Observation()
-    var labels = und.groupBy("v")
-      .agg(least(col("v"), min(col("u"))).as("cluster"))
-      .observe(obs1, count(when(col("cluster") < col("v"), 1)).as("chg"))
-      .localCheckpoint(true)
-    var converged = obs1.get("chg").asInstanceOf[Long] == 0L
-    var it = 0
-    while (!converged && it < maxIters) {
-      it += 1
-      val nbrMin = und.join(labels.select(col("v").as("u"), col("cluster")), Seq("u"))
-        .groupBy("v").agg(min("cluster").as("_nbr_min"))
-      // The changed-label count rides the checkpoint materialization as
-      // an observed metric (r16) — previously a separate filter.isEmpty
-      // action per round doubled the loop's job count.
-      val obs = org.apache.spark.sql.Observation(s"graft_cc_$it")
-      val next = labels.withColumnRenamed("cluster", "_prev")
-        .join(nbrMin, Seq("v"), "left")
-        .select(col("v"), col("_prev"),
-          least(col("_prev"), coalesce(col("_nbr_min"), col("_prev"))).as("cluster"))
-        .observe(obs, count(when(col("cluster") < col("_prev"), 1)).as("chg"))
-        .localCheckpoint(true)
-      converged = obs.get("chg").asInstanceOf[Long] == 0L
-      labels = next.select("v", "cluster")
-    }
-    // An unconverged exit would hand back plausible-looking but WRONG
-    // labels (a long chain's far end still carrying a non-minimal id).
-    // Fail loudly instead of silently: callers with genuinely deep
-    // components should use [[connectedComponentsStars]], whose round
-    // count is logarithmic in the component size.
-    if (!converged) throw new IllegalStateException(
-      s"resolveClusters did not converge in $maxIters rounds — component " +
-        "diameter exceeds the label-propagation budget; use " +
-        "connectedComponentsStars for adversarial (long-chain) pair graphs")
-    labels
-  }
-
-  /** Connected components by large-star / small-star alternation
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — the adversarial-graph escalation for
-    * [[resolveClusters]]. Label propagation needs O(diameter) rounds,
-    * which is fine for near-clique dedup components but pathological for
-    * chain-shaped graphs (transcription chains, near-dup ladders); the
-    * star alternation converges in O(log n) rounds regardless of shape
-    * because every round contracts tall trees toward their minimum.
-    *
-    * Same output contract as [[resolveClusters]]: one (v, cluster) row
-    * per vertex of the pair graph, cluster = component minimum. Each
-    * round is two grouped aggregations + two joins over the (shrinking)
-    * edge set; `localCheckpoint` truncates iterated lineage exactly as in
-    * the propagation loop.
-    */
-  def connectedComponentsStars(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 50): DataFrame = {
-    // Canonical directed edge set: (u, v) with u > v, no self-loops.
-    var edges = pairs
-      .select(col(aCol).as("a"), col(bCol).as("b"))
-      .filter(col("a") =!= col("b"))
-      .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))
-      .distinct().localCheckpoint(true)
-    val vertices = pairs.select(col(aCol).as("v"))
-      .unionAll(pairs.select(col(bCol).as("v"))).distinct().localCheckpoint(true)
-    var converged = false
-    var it = 0
-    // Cheap order-insensitive convergence fingerprint: (count, hash-XOR).
-    // XOR, not sum: ANSI mode makes a sum of 64-bit hashes overflow.
-    def fingerprint(e: DataFrame): (Long, Long) = {
-      val r = e.agg(count(lit(1)),
-        coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L))).head()
-      (r.getLong(0), r.getLong(1))
-    }
-    // Per round the fingerprint rides the checkpoint materialization as
-    // observed metrics (r16) — previously a separate aggregate action per
-    // round doubled the loop's job count.
-    val fpCols = Seq(count(lit(1)).as("n"),
-      coalesce(bit_xor(xxhash64(col("u"), col("v"))), lit(0L)).as("x"))
-    var fp = fingerprint(edges)
-    while (!converged && it < maxIters) {
-      it += 1
-      // Large-star: group the undirected neighborhood by u; connect every
-      // strictly LARGER neighbor to m = min(neighborhood ∪ {u}).
-      val nbrs = edges.unionAll(edges.select(col("v").as("u"), col("u").as("v")))
-      val mins = nbrs.groupBy("u").agg(min(col("v")).as("m0"))
-        .select(col("u"), least(col("m0"), col("u")).as("m"))
-      val large = nbrs.join(mins, Seq("u"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v")).distinct()
-      // Small-star: on the canonical (u > v) orientation, connect every
-      // smaller neighbor (and u itself) to m = min of the small side.
-      val sMins = large.groupBy("u").agg(min(col("v")).as("m"))
-      val obs = org.apache.spark.sql.Observation(s"graft_ccs_$it")
-      val small = large.join(sMins, Seq("u"))
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .unionAll(sMins.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v")).distinct()
-        .observe(obs, fpCols.head, fpCols.tail: _*)
-        .localCheckpoint(true)
-      // Unchanged edge set = fixed point of the round = disjoint stars.
-      val m = obs.get
-      val nfp = (m("n").asInstanceOf[Long], m("x").asInstanceOf[Long])
-      converged = nfp == fp
-      fp = nfp
-      edges = small
-    }
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStars did not converge in $maxIters rounds")
-    // At convergence the edge set is a disjoint union of stars: every
-    // non-root has exactly one edge (v, root). Roots label themselves.
-    val nonRoots = edges.select(col("u").as("v"), col("v").as("cluster"))
-    val roots = vertices.join(nonRoots.select("v"), Seq("v"), "left_anti")
-      .select(col("v"), col("v").as("cluster"))
-    nonRoots.unionAll(roots)
+  def resolveClusters(pairs: DataFrame, aCol: String, bCol: String): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    val t = GraphAnalytics.idType(pairs, aCol, bCol)
+    GraphAnalytics.simpleGraph(pairs, aCol, bCol, keepSelfLoops = true)
+      .connectedComponents().vertices.toDF("v", "cluster")
+      .select(col("v").cast(t), col("cluster").cast(t))
   }
 
   /** The dedup decision table: every document labeled with its cluster

@@ -697,9 +697,8 @@ object Similarity {
     * assignment (map-side `min_by` partial agg); the mean's
     * groupBy(cell, dim) combines map-side, so the shuffle carries
     * ≤ partitions × nlist × dim partial rows, not the corpus. Only the
-    * nlist-row centroid table localCheckpoints between iterations
-    * (lineage truncation — the [[graft.llmops.Dedup.resolveClusters]]
-    * discipline). Seeds: the `nlist` lowest-id rows
+    * nlist-row centroid table localCheckpoints between iterations, which
+    * truncates the iterated lineage. Seeds: the `nlist` lowest-id rows
     * (TakeOrderedAndProject — never a global sort).
     *
     * Returns (cent_id, c: Array[Long]) — feed [[centroidsToFloat]] to

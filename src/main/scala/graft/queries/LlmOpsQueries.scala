@@ -1634,10 +1634,10 @@ object LlmOpsQueries extends QueryModule {
     },
 
     // end-to-end dedup decision table: minhash pairs → connected-component
-    // clusters (iterative min-label propagation) → per-document survivor
+    // clusters (GraphX connected components) → per-document survivor
     // flag. The oracle re-derives the SAME pairs (the minhash oracle as a
     // derived table) and resolves components with a recursive reachability
-    // CTE — min reachable id ≡ the operator's min-label fixpoint.
+    // CTE — min reachable id ≡ the component's minimum id.
     q("q_x_dedup_clusters",
       s"WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ($minHashOracleSql) mh), " +
         "und AS (SELECT id_a AS u, id_b AS v FROM pairs UNION ALL SELECT id_b, id_a FROM pairs), " +
@@ -1672,10 +1672,9 @@ object LlmOpsQueries extends QueryModule {
       val clusters = Dedup.resolveClusters(pairs, "id_a", "id_b")
       Dedup.softDedupWeights(docs, "doc_id", clusters).orderBy("doc")
     },
-    // Same component labeling through the adversarial-shape algorithm
-    // (large-star/small-star, O(log n) rounds on any graph shape) — the
-    // oracle is identical because connected components are
-    // implementation-independent.
+    // The same decision table as q_x_dedup_clusters: the body calls the
+    // one connected-components routine, Dedup.resolveClusters, and the
+    // oracle is identical.
     q("q_x_dedup_clusters_stars",
       s"WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ($minHashOracleSql) mh), " +
         "und AS (SELECT id_a AS u, id_b AS v FROM pairs UNION ALL SELECT id_b, id_a FROM pairs), " +
@@ -1686,7 +1685,7 @@ object LlmOpsQueries extends QueryModule {
         "FROM documents d LEFT JOIN comp c ON c.v = d.doc_id ORDER BY doc") { (s, d) =>
       val docs = Tables.documents(s, d)
       val pairs = Dedup.minHashPairs(docs, "doc_id", "text")
-      val clusters = Dedup.connectedComponentsStars(pairs, "id_a", "id_b")
+      val clusters = Dedup.resolveClusters(pairs, "id_a", "id_b")
       Dedup.dedupSurvivors(docs, "doc_id", clusters).orderBy("doc")
     },
     // sliding token-window chunking (window 40, stride 30 — 10-token

@@ -183,8 +183,7 @@ object EventStream {
         // through prior micro-batches' DataFrames (which are no longer
         // valid once their batch ends). Superseded checkpoint blocks are
         // released by the ContextCleaner when the old frame is unreachable —
-        // no per-batch unpersist bookkeeping. Same discipline as
-        // Dedup.resolveClusters' iteration.
+        // no per-batch unpersist bookkeeping.
         state = Upsert.upsertNodes(state, deduped, keys).localCheckpoint(eager = true)
         apply(state)
       }

@@ -5,6 +5,7 @@ import graft.llmops.{Dedup, FuzzyMatch}
 import graft.operators.SnapshotDiff
 import org.apache.spark.graphx.{Edge => GxEdge, Graph => GxGraph}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.IntegerType
 
 /** Edge-case pins for the round-3 operators — the DuckDB oracles
   * (q_m8_snapshot_diff, q_x_fuzzy_match, q_x_dedup_clusters,
@@ -65,46 +66,49 @@ class DiffMatchClusterSpec extends SparkTestBase {
     assert(out.toSeq == Seq((1L, 10L, 1L), (2L, 10L, 1L)))
   }
 
+  // a 5-vertex path (1–2–3–4–5) and a separate pair (6–7)
+  private val chainPairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (7L, 6L))
+
   test("resolveClusters propagates min labels across a chain") {
     import spark.implicits._
-    val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (7L, 6L))
-      .toDF("a", "b")
-    val out = Dedup.resolveClusters(pairs, "a", "b")
+    val out = Dedup.resolveClusters(chainPairs.toDF("a", "b"), "a", "b")
       .orderBy("v")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(out.toSeq == Seq(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
       6L -> 6L, 7L -> 6L))
   }
 
-  test("resolveClusters fails loudly instead of returning unconverged labels") {
+  test("resolveClusters: a long chain resolves, a self-pair is its own cluster, Int ids stay Int") {
     import spark.implicits._
-    // 60-vertex path: diameter 59 ≫ the 20-round propagation budget. The
-    // old behavior returned plausible-looking but WRONG labels; now it
-    // throws and points at the star escalation.
-    val chain = (1L until 60L).map(i => (i, i + 1L)).toDF("a", "b")
-    val ex = intercept[IllegalStateException](
-      Dedup.resolveClusters(chain, "a", "b").collect())
-    assert(ex.getMessage.contains("connectedComponentsStars"))
-  }
-
-  test("connectedComponentsStars converges in O(log n) rounds on a long chain") {
-    import spark.implicits._
-    val chain = (1L until 60L).map(i => (i, i + 1L)).toDF("a", "b")
-    // 12 rounds ≈ 2·log2(60) — a budget label propagation (O(diameter))
-    // could never meet; maxIters doubles as the complexity assertion.
-    val out = Dedup.connectedComponentsStars(chain, "a", "b", maxIters = 12)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    assert(out.length == 60 && out.forall(_._2 == 1L))
-  }
-
-  test("connectedComponentsStars labels identically to resolveClusters") {
-    import spark.implicits._
-    val pairs = Seq((2L, 1L), (2L, 3L), (4L, 3L), (4L, 5L), (7L, 6L), (9L, 9L))
-      .toDF("a", "b")
     def labels(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(labels(Dedup.connectedComponentsStars(pairs, "a", "b")) ==
-      labels(Dedup.resolveClusters(pairs, "a", "b")))
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // 25-vertex path: diameter 24, a superstep per hop until label 1 arrives
+    val chain = (1L until 25L).map(i => (i, i + 1L)).toDF("a", "b")
+    assert(labels(Dedup.resolveClusters(chain, "a", "b")) == (1L to 25L).map(_ -> 1L).toMap)
+    val withSelfPair = (chainPairs :+ (9L -> 9L)).toDF("a", "b")
+    assert(labels(Dedup.resolveClusters(withSelfPair, "a", "b")) ==
+      Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L, 6L -> 6L, 7L -> 6L, 9L -> 9L))
+    val ints = Dedup.resolveClusters(Seq((3, 2), (9, 9)).toDF("a", "b"), "a", "b")
+    assert(ints.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(ints.collect().map(r => (r.getInt(0), r.getInt(1))).toSet ==
+      Set(2 -> 2, 3 -> 2, 9 -> 9))
+  }
+
+  test("resolveClusters issues a bounded number of Spark jobs") {
+    import spark.implicits._
+    // A GraphX superstep is one job; a round planned as a DataFrame query
+    // costs several (checkpoints, AQE stages).
+    val (labels, chainJobs) = countJobs(
+      Dedup.resolveClusters(chainPairs.toDF("a", "b"), "a", "b").collect())
+    assert(labels.length == 7)
+    assert(chainJobs <= 8, s"resolveClusters(chain) ran $chainJobs jobs")
+    val cliques = for {
+      base <- Seq(0L, 10L, 20L); i <- 1L to 4L; j <- (i + 1) to 4L
+    } yield (base + i, base + j)
+    val (members, cliqueJobs) = countJobs(
+      Dedup.resolveClusters(cliques.toDF("a", "b"), "a", "b").collect())
+    assert(members.map(_.getLong(1)).toSet == Set(1L, 11L, 21L))
+    assert(cliqueJobs <= 6, s"resolveClusters(3 × K4) ran $cliqueJobs jobs")
   }
 
   test("dedupSurvivors flags exactly the cluster minima and singletons") {

@@ -25,17 +25,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      // the engine's SQL surface + optimizer rules, enabled the way a
-      // cluster deployment would (same as SparkTestBase).
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // NonFatal only: an OOM/JVM error must crash the run, not masquerade
     // as a -1 entry. A cold failure records its message on stderr and
@@ -52,22 +42,19 @@ object Bench {
     // persisted RDDs between timings removes that cross-query
     // interference; each query still computes from the parquet inputs
     // (nothing is reused — this releases state, it never carries any).
-    // SPARK_GRAFT_BENCH_CLEAN=0 restores the accumulate-everything
-    // behaviour for comparison.
-    val clean = sys.env.getOrElse("SPARK_GRAFT_BENCH_CLEAN", "1") != "0"
+    def release(): Unit = spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
     def time(name: String,
         fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try { fn(spark, sfDir).count() } catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] $name FAILED: ${e.getClass.getName}: ${e.getMessage}")
-          if (clean) spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
+          release()
           return -1.0
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      if (clean) spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
+      release()
       dt
     }
     // sorted run order: per-query timings stay comparable across rounds

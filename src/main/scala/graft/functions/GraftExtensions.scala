@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{BinaryType, LongType, StringType, StructType}
 
 /** SQL surface for the engine's custom expressions, wired the way a
   * cluster enables it: `spark.sql.extensions=graft.functions.GraftExtensions`
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * (set by [[graft.GraftSession]], the builder every entry point uses).
   * Registered functions:
   *
   *  - `graft_fdot(a, b)` — the codegen'd Array[Float] dot product

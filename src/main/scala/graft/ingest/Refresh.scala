@@ -1,6 +1,7 @@
 package graft.ingest
 
 import graft.operators.Upsert
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -93,15 +94,51 @@ object Refresh {
   def materialize(store: GraphStore): GraphStore =
     GraphStore(store.nodes.localCheckpoint(true), store.edges.localCheckpoint(true))
 
-  /** Persist partitioned for label/relType pruning at scale. */
+  /** Persist partitioned for label/relType pruning at scale, as
+    * `path/nodes` and `path/edges`. Both are written under the sibling
+    * `path.__staged` first and then swapped in by directory renames
+    * (`path` → `path.__old`, staged → `path`, drop the old), so `store` may
+    * be read from `path` itself — the in-place refresh — and a failure at
+    * any step leaves either the previous or the new store for `load`.
+    */
   def write(store: GraphStore, path: String): Unit = {
-    store.nodes.write.mode("overwrite").partitionBy("label").parquet(s"$path/nodes")
-    store.edges.write.mode("overwrite").partitionBy("relType").parquet(s"$path/edges")
+    val d = StoreDirs(store.nodes.sparkSession, path)
+    d.heal()
+    d.fs.delete(d.staged, true)
+    store.nodes.write.partitionBy("label").parquet(s"${d.staged}/nodes")
+    store.edges.write.partitionBy("relType").parquet(s"${d.staged}/edges")
+    d.fs.delete(d.old, true)
+    if (d.fs.exists(d.dir)) d.rename(d.dir, d.old)
+    d.rename(d.staged, d.dir)
+    d.fs.delete(d.old, true)
   }
 
-  def load(spark: SparkSession, path: String): GraphStore = GraphStore(
-    spark.read.parquet(s"$path/nodes").select(nodeSchema.fieldNames.map(col).toSeq: _*),
-    spark.read.parquet(s"$path/edges").select(edgeSchema.fieldNames.map(col).toSeq: _*))
+  def load(spark: SparkSession, path: String): GraphStore = {
+    StoreDirs(spark, path).heal()
+    GraphStore(
+      spark.read.parquet(s"$path/nodes").select(nodeSchema.fieldNames.map(col).toSeq: _*),
+      spark.read.parquet(s"$path/edges").select(edgeSchema.fieldNames.map(col).toSeq: _*))
+  }
+
+  /** A store directory and the two siblings `write` swaps it through. */
+  private final case class StoreDirs(spark: SparkSession, path: String) {
+    val dir = new Path(path)
+    val fs: FileSystem = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = new Path(s"$dir.__staged")
+    val old = new Path(s"$dir.__old")
+
+    def rename(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to)) throw new java.io.IOException(s"could not rename $from to $to")
+
+    /** Finish a swap a crash interrupted: with `path` gone, the staged
+      * store was complete (both writes committed) before the swap began. */
+    def heal(): Unit =
+      if (!fs.exists(dir) && Seq("nodes", "edges").forall(t =>
+          fs.exists(new Path(staged, s"$t/_SUCCESS")))) {
+        rename(staged, dir)
+        fs.delete(old, true)
+      }
+  }
 
   /** Persist the store BUCKETED on the join keys (nodes by id, edges by
     * src), for the write-once / join-many access pattern: every

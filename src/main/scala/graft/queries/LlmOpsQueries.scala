@@ -1672,22 +1672,6 @@ object LlmOpsQueries extends QueryModule {
       val clusters = Dedup.resolveClusters(pairs, "id_a", "id_b")
       Dedup.softDedupWeights(docs, "doc_id", clusters).orderBy("doc")
     },
-    // The same decision table as q_x_dedup_clusters: the body calls the
-    // one connected-components routine, Dedup.resolveClusters, and the
-    // oracle is identical.
-    q("q_x_dedup_clusters_stars",
-      s"WITH RECURSIVE pairs AS (SELECT id_a, id_b FROM ($minHashOracleSql) mh), " +
-        "und AS (SELECT id_a AS u, id_b AS v FROM pairs UNION ALL SELECT id_b, id_a FROM pairs), " +
-        "reach AS (SELECT u AS v, u AS r FROM und UNION SELECT und.v, reach.r FROM reach JOIN und ON und.u = reach.v), " +
-        "comp AS (SELECT v, min(r) AS cluster FROM reach GROUP BY v) " +
-        "SELECT d.doc_id AS doc, coalesce(c.cluster, d.doc_id) AS cluster, " +
-        "coalesce(c.cluster, d.doc_id) = d.doc_id AS is_survivor " +
-        "FROM documents d LEFT JOIN comp c ON c.v = d.doc_id ORDER BY doc") { (s, d) =>
-      val docs = Tables.documents(s, d)
-      val pairs = Dedup.minHashPairs(docs, "doc_id", "text")
-      val clusters = Dedup.resolveClusters(pairs, "id_a", "id_b")
-      Dedup.dedupSurvivors(docs, "doc_id", clusters).orderBy("doc")
-    },
     // sliding token-window chunking (window 40, stride 30 — 10-token
     // overlap): the long-context / RAG-indexing shape, arithmetic chunk
     // boundaries, every token covered

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.llmops.{Quantize, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** ANN recall/latency trade-off sweep (VERDICT r4 item 7): recall@k vs
@@ -13,7 +14,7 @@ import org.apache.spark.sql.functions._
   * disjoint vec_id ranges and unchanged payloads (exact-dup corpus — the
   * dedup-heavy shape; both GT and ANN rank it with the same ties).
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt 'runMain graft.tools.AnnBench
+  * Run: sbt 'runMain graft.tools.AnnBench
   *   /root/testdata/sf0.1 /tmp/graft_annbench 10'
   * Emits one markdown table (stderr) + one JSON line (stdout) for
   * BASELINE.md.
@@ -25,13 +26,7 @@ object AnnBench {
     val outBase = args.lift(1).getOrElse("/tmp/graft_annbench")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val k = 25
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def buildCorpus(f: Int): DataFrame = {

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.GraftSession
 import graft.llmops.{Corpus, Similarity}
 
 /** Measured evidence for [[Corpus.coherentOrder]] (the TokenizerBench
@@ -16,9 +17,7 @@ object CoherenceBench {
   def main(args: Array[String]): Unit = {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     dirs.foreach { dir =>
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")

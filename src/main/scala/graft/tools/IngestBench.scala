@@ -1,8 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.fixtures.{ScaledWorkbook, SyntheticWorkbook}
 import graft.ingest.Refresh
-import org.apache.spark.sql.SparkSession
 
 /** Graph-ingest throughput benchmark (BASELINE.md): full mark→load→sweep
   * refresh of a range-generated RVTools workbook; reports input rows/sec
@@ -12,13 +12,7 @@ object IngestBench {
   def main(args: Array[String]): Unit = {
     val nHosts = if (args.length > 0) args(0).toInt else 500
     val nVms = if (args.length > 1) args(1).toInt else 20000
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val wb = ScaledWorkbook.build(spark, nHosts, nVms)
     val inputRows = wb.values.map(_.count()).sum

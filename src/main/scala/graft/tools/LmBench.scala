@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.llmops.LmArtifact
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Held-out evidence for the trigram smoothing choice (the r12 judge's
@@ -14,20 +15,14 @@ import org.apache.spark.sql.functions._
   * model of unseen text = a better quality-gate LM. One markdown table
   * (stderr) + one JSON line (stdout) for BASELINE.md.
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt 'runMain graft.tools.LmBench
+  * Run: sbt 'runMain graft.tools.LmBench
   *   /root/testdata/sf0.1'
   */
 object LmBench {
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = spark.read.parquet(s"$src/documents.parquet")
       .select(col("doc_id"), col("text"))

@@ -1,7 +1,7 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.llmops.Multimodal
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Evidence harness for the lossy-VP8 (and AVIF/HEIC) decode stance:
@@ -91,13 +91,7 @@ object MediaMixBench {
 
   def main(args: Array[String]): Unit = {
     val pairs = if (args.nonEmpty) args(0).toInt else 2000
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-media-mix-bench")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     import spark.implicits._
     val rows = (0 until pairs).flatMap { i =>
       val im = image(i)

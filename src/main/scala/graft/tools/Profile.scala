@@ -1,17 +1,21 @@
 package graft.tools
 
+import graft.GraftSession
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
-/** Per-query stage/job profiler — the §1 "measure first" harness.
+/** Per-query profiler — the §1 "measure first" harness.
   *
-  * Runs named SparkEntry queries under the same session shape as Bench
-  * (extensions, local[$SPARK_GRAFT_CPUS], shuffle.partitions = cpus, AQE)
-  * and prints, per query: wall seconds, job count, stage count, and the
-  * top stages by duration with their shuffle read/write volumes — the
-  * numbers that decide WHICH operator inside a multi-job pipeline is the
-  * one to optimize. Second arg "warm" runs each query twice and profiles
-  * the second run (isolates plan shape from codegen/JIT).
+  * Runs named SparkEntry queries on the [[graft.GraftSession]] shape and
+  * prints, per query, the seconds of the `count()` Bench times, split into
+  * build (constructing the frame, with any eager checkpoint it runs), plan
+  * (optimizing and physically planning the count, as `Dataset.count` does)
+  * and exec (running that plan); then the job and stage counts and the top
+  * stages by duration with their shuffle read/write volumes — the numbers
+  * that decide WHICH operator inside a multi-job pipeline is the one to
+  * optimize. An argument "warm" runs each query twice and profiles the
+  * second run (isolates plan shape from codegen/JIT).
+  *
+  * Run: sbt 'runMain graft.tools.Profile q_m5_edge_props warm'
   */
 object Profile {
   private case class StageRow(id: Int, name: String, ms: Long,
@@ -20,17 +24,9 @@ object Profile {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val warm = args.contains("warm")
     val names = args.filterNot(_ == "warm").toSeq
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageRow]()
@@ -55,26 +51,30 @@ object Profile {
     }
     spark.sparkContext.addSparkListener(listener)
 
+    // same inter-query hygiene as Bench: drop finished queries'
+    // persisted RDDs so a multi-query profile batch doesn't charge
+    // later queries for earlier queries' dead checkpoint blocks.
+    def release(): Unit = spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
     names.foreach { n =>
       val fn = graft.SparkEntry.queries(n)
-      // same inter-query hygiene as Bench: drop finished queries'
-      // persisted RDDs so a multi-query profile batch doesn't charge
-      // later queries for earlier queries' dead checkpoint blocks.
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      if (warm) {
-        fn(spark, sfDir).count()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
+      release()
+      if (warm) { fn(spark, sfDir).count(); release() }
       stages.clear(); jobs.set(0)
       val t0 = System.nanoTime()
-      fn(spark, sfDir).count()
-      val wall = (System.nanoTime() - t0) / 1e9
+      val counted = fn(spark, sfDir).groupBy().count()
+      val t1 = System.nanoTime()
+      counted.queryExecution.executedPlan
+      val t2 = System.nanoTime()
+      counted.collect()
+      val t3 = System.nanoTime()
+      def secs(a: Long, b: Long) = (b - a) / 1e9
       Thread.sleep(400) // let the listener bus drain
       import scala.jdk.CollectionConverters._
       val rows = stages.asScala.toSeq.sortBy(-_.ms)
-      println(f"%n========== $n%s  wall=$wall%.2fs jobs=${jobs.get}%d stages=${rows.size}%d stageMsSum=${rows.map(_.ms).sum}%d")
+      println(f"%n========== $n%s  wall=${secs(t0, t3)}%.2fs build=${secs(t0, t1)}%.2fs " +
+        f"plan=${secs(t1, t2)}%.2fs exec=${secs(t2, t3)}%.2fs " +
+        f"jobs=${jobs.get}%d stages=${rows.size}%d stageMsSum=${rows.map(_.ms).sum}%d")
       rows.take(14).foreach { r =>
         println(f"  stage ${r.id}%4d ${r.ms}%6dms task=${r.taskMs}%6dms cpu=${r.cpuMs}%6dms gc=${r.gcMs}%5dms shR=${r.shRead}%9d shW=${r.shWrite}%9d rec=${r.records}%9d  ${r.name.take(80)}%s")
       }

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.llmops.{PortableHash, RewardFit}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Reward-fit evaluation harness (VERDICT r12 item 4 — the
@@ -30,7 +31,7 @@ import org.apache.spark.sql.functions._
   * BASELINE.md; the default `iterations = 3` stands or falls by this
   * table.
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt 'runMain graft.tools.RewardBench
+  * Run: sbt 'runMain graft.tools.RewardBench
   *   /root/testdata/sf0.1 10'
   */
 object RewardBench {
@@ -40,13 +41,7 @@ object RewardBench {
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     /** One judgment per (doc_id, rep): pair from hashes, outcome from a

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.llmops.Retrieval
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Retrieval-quality harness (the AnnBench precedent, VERDICT r7 item 5):
@@ -29,7 +30,7 @@ import org.apache.spark.sql.functions._
   * under measurement). Max recall@k is 0.8 for any non-expanding system
   * (grade 4 is unreachable), 1.0 with expansion — by construction.
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt 'runMain graft.tools.SearchBench
+  * Run: sbt 'runMain graft.tools.SearchBench
   *   /root/testdata/sf0.1 /tmp/graft_searchbench 10'
   * Emits one markdown table (stderr) + one JSON line (stdout) for
   * BASELINE.md.
@@ -42,13 +43,7 @@ object SearchBench {
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val k = 10
     val topics = 20
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

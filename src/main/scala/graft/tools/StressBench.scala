@@ -1,7 +1,7 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.{GraftSession, SparkEntry}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale-factor stress harness (VERDICT r3 item 5): replicate the sf0.1
@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * near-dups, which is the dedup-heavy corpus shape the dedup operators
   * exist for (and the worst realistic case for their candidate joins).
   *
-  * Run: SPARK_GRAFT_CPUS=16 sbt 'runMain graft.tools.StressBench
+  * Run: sbt 'runMain graft.tools.StressBench
   *   /root/testdata/sf0.1 /tmp/graft_stress 10'
   */
 object StressBench {
@@ -34,7 +34,7 @@ object StressBench {
 
   private val StressQueries: Seq[String] = Seq(
     "q_x_dedup_ngram_jaccard", "q_x_dedup_minhash", "q_x_dedup_simhash",
-    "q_x_dedup_clusters", "q_x_dedup_clusters_stars",
+    "q_x_dedup_clusters",
     "q_x_ann_lsh", "q_x_ann_ivf",
     "q_g_blast_radius", "q_g_triangles",
     "q_t_asof_join", "q_x_tfidf_top_terms",
@@ -458,16 +458,9 @@ object StressBench {
       case Some(pats) => StressQueries.filter(n => pats.exists(n.contains))
       case None => StressQueries
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      // the engine's SQL surface + optimizer rules, enabled the way a
-      // cluster deployment would (same as SparkTestBase).
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
+    val spark = GraftSession.builder()
+      // scaleTable reads events.parquet (TIMESTAMP(NANOS)) raw, before any
+      // query's Tables.events has set this on the session.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

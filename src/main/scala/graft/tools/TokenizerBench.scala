@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.llmops.{Bpe, TextAnalysis, Unigram}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Tokenizer-quality harness (the SearchBench discipline: defaults and
@@ -20,13 +19,7 @@ object TokenizerBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val budgets = if (args.length > 1) args.drop(1).map(_.toInt).toSeq
       else Seq(32, 64, 128)
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val docs = Tables.documents(spark, sfDir).localCheckpoint(true)
 

@@ -198,4 +198,35 @@ class RefreshSpec extends SparkTestBase {
     assert(canon(s2.nodes).exceptAll(canon(s1.nodes)).count() == 0)
     assert(canon(s1.nodes).exceptAll(canon(s2.nodes)).count() == 0)
   }
+
+  private def sameStore(a: Refresh.GraphStore, b: Refresh.GraphStore): Boolean =
+    Seq(a.nodes -> b.nodes, a.edges -> b.edges).forall { case (x, y0) =>
+      val y = y0.select(x.columns.map(col).toSeq: _*)
+      canon(x).exceptAll(canon(y)).isEmpty && canon(y).exceptAll(canon(x)).isEmpty
+    }
+
+  test("the README loop refreshes a store in place; twice equals once") {
+    val p = java.nio.file.Files.createTempDirectory("graft_inplace").resolve("store").toString
+    Refresh.write(SyntheticWorkbook.seededStore(spark), p)
+    (1 to 2).foreach { _ =>
+      Refresh.write(Refresh.refresh(Refresh.load(spark, p), SyntheticWorkbook.golden(spark)), p)
+    }
+    assert(sameStore(Refresh.load(spark, p), store1))
+    assert(!new java.io.File(s"$p.__staged").exists() && !new java.io.File(s"$p.__old").exists())
+  }
+
+  test("a crash between the swap's renames leaves the staged store loadable") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_swap")
+    val p = tmp.resolve("store")
+    val next = tmp.resolve("next")
+    // write's state after `path` -> `path.__old` and before staged -> `path`
+    Refresh.write(SyntheticWorkbook.seededStore(spark), p.toString)
+    Files.move(p, Paths.get(s"$p.__old"))
+    Refresh.write(store1, next.toString)
+    Files.move(next, Paths.get(s"$p.__staged"))
+    assert(sameStore(Refresh.load(spark, p.toString), store1))
+    assert(Files.isDirectory(p.resolve("nodes")))
+    assert(!Files.exists(Paths.get(s"$p.__staged")) && !Files.exists(Paths.get(s"$p.__old")))
+  }
 }

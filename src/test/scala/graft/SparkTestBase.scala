@@ -36,14 +36,10 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  /** The harnesses' session shape; a fixed shuffle-partition count keeps
+    * plan shapes and job counts the same on every host. */
+  lazy val session: SparkSession = GraftSession.builder()
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.sql.session.timeZone", "UTC")
-    // the engine's SQL surface, enabled the way a cluster would
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.adaptive.enabled", "true")
     .getOrCreate()
 }

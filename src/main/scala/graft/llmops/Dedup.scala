@@ -52,16 +52,6 @@ object Dedup {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Exact n-gram Jaccard near-dup pairs (ids ordered a < b) via prefix
-    * filtering (the All-Pairs/PPJoin bound): order each doc's shingles
-    * rarest-first by global document frequency and index only the first
-    * |S| − ⌈t·|S|⌉ + 1 of them — any pair with Jaccard ≥ t is guaranteed to
-    * collide inside both prefixes, so the candidate join touches a small
-    * fraction of the inverted index while the result stays EXACT. This is
-    * what keeps near-dup detection sub-quadratic at 100 TB: the frequent
-    * shingles (the quadratic blowup and the skewed keys) never enter the
-    * index.
-    */
   /** Distinct hashed word n-gram shingles per doc as rows (doc, s) — ONE
     * narrow compiled pass ([[org.apache.spark.sql.graftfn.ShingleMinHash]],
     * r16). The previous shape (posexplode + per-doc lead() windows +
@@ -84,6 +74,16 @@ object Dedup {
     org.apache.spark.sql.graftfn.ShingleMinHash.of(
       split(trim(text), "\\s+"), n, numHashTables, md5_52)
 
+  /** Exact n-gram Jaccard near-dup pairs (ids ordered a < b) via prefix
+    * filtering (the All-Pairs/PPJoin bound): order each doc's shingles
+    * rarest-first by global document frequency and index only the first
+    * |S| − ⌈t·|S|⌉ + 1 of them — any pair with Jaccard ≥ t is guaranteed to
+    * collide inside both prefixes, so the candidate join touches a small
+    * fraction of the inverted index while the result stays EXACT. This is
+    * what keeps near-dup detection sub-quadratic at 100 TB: the frequent
+    * shingles (the quadratic blowup and the skewed keys) never enter the
+    * index.
+    */
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.8): DataFrame = {
@@ -226,19 +226,6 @@ object Dedup {
     out
   }
 
-  /** MinHash-LSH near-dup pairs — pure codegen'd DataFrame ops, no ML
-    * vector UDTs in the hot path. Shingles are hashed with the portable
-    * 52-bit hash, each of `numHashTables` fixed modular permutations takes
-    * a per-doc min (one groupBy with N min-aggs = one shuffle), candidates
-    * are pairs colliding on ANY signature slot (OR-amplification, the same
-    * scheme as Spark ML's MinHashLSH), and every candidate is verified by
-    * EXACT Jaccard over the hashed shingle sets. Deterministic end to end
-    * (hardcoded permutation constants), and — because every step is plain
-    * integer arithmetic on a hash both engines share — fully mirrored by a
-    * DuckDB oracle (LlmOpsQueries.minHashOracleSql).
-    *
-    * Returns (id_a < id_b, jaccard_dist = 1 − J) with J exact.
-    */
   /** Drop banded rows whose (band, key) bucket holds more than `cap` docs
     * before the candidate self-join. A bucket of f docs emits f²/2 pairs —
     * one pathological key (an empty-ish doc signature, a boilerplate
@@ -303,6 +290,19 @@ object Dedup {
     */
   val DefaultMaxBandFreq: Option[Int] = Some(100000)
 
+  /** MinHash-LSH near-dup pairs — pure codegen'd DataFrame ops, no ML
+    * vector UDTs in the hot path. Shingles are hashed with the portable
+    * 52-bit hash, each of `numHashTables` fixed modular permutations takes
+    * a per-doc min (one groupBy with N min-aggs = one shuffle), candidates
+    * are pairs colliding on ANY signature slot (OR-amplification, the same
+    * scheme as Spark ML's MinHashLSH), and every candidate is verified by
+    * EXACT Jaccard over the hashed shingle sets. Deterministic end to end
+    * (hardcoded permutation constants), and — because every step is plain
+    * integer arithmetic on a hash both engines share — fully mirrored by a
+    * DuckDB oracle (LlmOpsQueries.minHashOracleSql).
+    *
+    * Returns (id_a < id_b, jaccard_dist = 1 − J) with J exact.
+    */
   def minHashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxJaccardDist: Double = 0.3, numHashTables: Int = 5, n: Int = 3,
@@ -355,13 +355,11 @@ object Dedup {
 
   /** Banding + band-skew guard + exact set-Jaccard verify over
     * already-built parts: per-doc distinct-hash arrays (doc, hs) and
-    * banded signature rows (doc, band, sig). The verify joins each
-    * candidate pair to its two hash arrays and computes the intersection
-    * size with one codegen'd array_intersect per pair (r16 phase 2) —
-    * replacing the candidate×shingles row fan-out through two equi-joins
-    * and a count aggregate, the measured hot stage of every minhash
-    * caller. `shared > 0` mirrors the old inner-join semantics (a pair
-    * sharing no element never produced a count row).
+    * banded signature rows (doc, band, sig). The verify is
+    * [[verifyCrossPairs]] with `hs` on both sides: one codegen'd
+    * array_intersect per candidate pair (r16 phase 2), replacing the
+    * candidate×shingles row fan-out through two equi-joins and a count
+    * aggregate, the measured hot stage of every minhash caller.
     */
   private def pairsFromParts(hs: DataFrame,
       allBanded: DataFrame, maxJaccardDist: Double,
@@ -372,20 +370,11 @@ object Dedup {
       .join(banded.alias("y"),
         col("x.band") === col("y.band") && col("x.sig") === col("y.sig") &&
           col("x.doc") < col("y.doc"))
-      .select(col("x.doc").as("id_a"), col("y.doc").as("id_b"))
+      .select(col("x.doc").as("batch_id"), col("y.doc").as("corpus_id"))
       .distinct()
-    cands
-      .join(hs.select(col("doc").as("id_a"), col("hs").as("__ha")), Seq("id_a"))
-      .join(hs.select(col("doc").as("id_b"), col("hs").as("__hb")), Seq("id_b"))
-      .withColumn("shared",
-        size(array_intersect(col("__ha"), col("__hb"))).cast("long"))
-      .filter(col("shared") > 0)
-      .withColumn("jaccard_dist",
-        lit(1.0) - col("shared") /
-          (size(col("__ha")).cast("long") + size(col("__hb")).cast("long")
-            - col("shared")))
-      .filter(col("jaccard_dist") <= maxJaccardDist)
-      .select(col("id_a"), col("id_b"), round(col("jaccard_dist"), 6).as("jaccard_dist"))
+    verifyCrossPairs(cands, hs, hs, maxJaccardDist)
+      .select(col("batch_id").as("id_a"), col("corpus_id").as("id_b"),
+        col("jaccard_dist"))
       .localCheckpoint(true)
   }
 
@@ -632,7 +621,9 @@ object Dedup {
     * sides' per-doc hash arrays (doc, hs); returns
     * (batch_id, corpus_id, jaccard_dist). One codegen'd array_intersect
     * per candidate pair (r16 phase 2) — set sizes ride the arrays, so
-    * nothing aggregates over either side's full index.
+    * nothing aggregates over either side's full index. `shared > 0`
+    * mirrors the old inner-join semantics (a pair sharing no element
+    * never produced a count row).
     */
   private[graft] def verifyCrossPairs(cands: DataFrame, hsB: DataFrame,
       hsC: DataFrame, maxJaccardDist: Double): DataFrame =
@@ -714,22 +705,6 @@ object Dedup {
     b1.join(crossFail, Seq("doc"), "left_anti")
   }
 
-  /** Decontamination through a Bloom-filter prefilter — the bounded-memory
-    * variant for benchmark suites too big to broadcast raw.
-    *
-    * `decontaminate` broadcasts the distinct bench shingles (or shuffles
-    * them with `broadcastBench = false`); both move O(|bench|) data. Here
-    * the bench side is folded into a Bloom bitset of `mBits` bits stored as
-    * ≤ `mBits/64` (word, bits) rows — **bounded by construction** (128 KiB
-    * of longs at 2^20 bits) no matter how many eval sets pile up. Train
-    * shingles probe `kProbes` positions (PortableHash permutation family,
-    * pmod-safe for signed xxhash64) against the broadcast word table; a
-    * shingle survives only if every probed bit is set. Bloom filters have
-    * no false negatives, so survivors ⊇ true hits, and the exact semi-join
-    * verify on the (ε·|train| + hits)-sized survivor set kills the false
-    * positives — the final frame is row-for-row IDENTICAL to
-    * `decontaminate` (same oracle), only the data movement changes.
-    */
   private def bloomPos(h: Column, j: Int, mBits: Int): Column =
     pmod(lit(PortableHash.MinHashA(j)) * pmod(h, lit(PortableHash.P))
       + lit(PortableHash.MinHashB(j)), lit(PortableHash.P)) % mBits.toLong
@@ -782,6 +757,22 @@ object Dedup {
         (coalesce(col("n_hit"), lit(0L)) > 0).as("contaminated"))
   }
 
+  /** Decontamination through a Bloom-filter prefilter — the bounded-memory
+    * variant for benchmark suites too big to broadcast raw.
+    *
+    * `decontaminate` broadcasts the distinct bench shingles (or shuffles
+    * them with `broadcastBench = false`); both move O(|bench|) data. Here
+    * the bench side is folded into a Bloom bitset of `mBits` bits stored as
+    * ≤ `mBits/64` (word, bits) rows — **bounded by construction** (128 KiB
+    * of longs at 2^20 bits) no matter how many eval sets pile up. Train
+    * shingles probe `kProbes` positions (PortableHash permutation family,
+    * pmod-safe for signed xxhash64) against the broadcast word table; a
+    * shingle survives only if every probed bit is set. Bloom filters have
+    * no false negatives, so survivors ⊇ true hits, and the exact semi-join
+    * verify on the (ε·|train| + hits)-sized survivor set kills the false
+    * positives — the final frame is row-for-row IDENTICAL to
+    * `decontaminate` (same oracle), only the data movement changes.
+    */
   def decontaminateBloom(
       train: DataFrame, bench: DataFrame, idCol: String, textCol: String,
       n: Int = 5, mBits: Int = 1 << 20, kProbes: Int = 4): DataFrame = {
@@ -799,37 +790,6 @@ object Dedup {
       textCol: String, n: Int): DataFrame =
     hashedShingleRows(df, idCol, textCol, n, md5_52 = false)
 
-  /** Exact-substring dedup (duplicated-span removal, the Lee et al.
-    * "Deduplicating Training Data Makes Language Models Better" modality):
-    * find maximal VERBATIM token spans of ≥ `minTokens` shared between two
-    * distinct documents — the memorization driver that whole-document
-    * MinHash/SimHash miss (a 300-token span shared by two otherwise
-    * different pages).
-    *
-    * Shingle-seed + diagonal-extend, never all-pairs:
-    *  1. positional width-`width` token shingles, fingerprinted with the
-    *     oracle-portable 52-bit hash (positions KEPT — unlike the Jaccard
-    *     path's distinct shingle sets, span recovery needs occurrences);
-    *  2. seed matches = fingerprint equi-join across distinct docs
-    *     (doc_a < doc_b) — the only join, and it is equi on the hash;
-    *  3. a shared span of L tokens yields L−width+1 seeds consecutive
-    *     along the diagonal pa−pb, so grouping by (a, b, diagonal) and
-    *     splitting runs where pa jumps (gaps-and-islands: island =
-    *     pa − row_number) merges seeds into MAXIMAL spans:
-    *     span_tokens = max(pa) − min(pa) + width.
-    *
-    * Ubiquitous fingerprints (site boilerplate — license headers,
-    * navigation strings) are dropped before the seed join when they occur
-    * more than `maxFpFreq` times: a fingerprint occurring f times seeds
-    * O(f²) pairs, the quadratic hot key at 100 TB. The cap is part of the
-    * operator's SEMANTICS (mirrored verbatim by the DuckDB oracle), not a
-    * silent truncation; spans whose every shingle is that common are
-    * boilerplate, not memorization risk.
-    *
-    * Returns (doc_a, doc_b, a_start, b_start, span_tokens), starts
-    * 0-based in token positions. Spans shorter than `width` are invisible
-    * by construction (standard for shingle seeding).
-    */
   /** Positional width-n shingle fingerprints as (doc, pos, fp) rows —
     * positions KEPT (unlike hashedShingleRows' distinct sets; span
     * recovery needs every occurrence).
@@ -871,6 +831,37 @@ object Dedup {
         col("span_tokens").cast("long").as("span_tokens"))
   }
 
+  /** Exact-substring dedup (duplicated-span removal, the Lee et al.
+    * "Deduplicating Training Data Makes Language Models Better" modality):
+    * find maximal VERBATIM token spans of ≥ `minTokens` shared between two
+    * distinct documents — the memorization driver that whole-document
+    * MinHash/SimHash miss (a 300-token span shared by two otherwise
+    * different pages).
+    *
+    * Shingle-seed + diagonal-extend, never all-pairs:
+    *  1. positional width-`width` token shingles, fingerprinted with the
+    *     oracle-portable 52-bit hash (positions KEPT — unlike the Jaccard
+    *     path's distinct shingle sets, span recovery needs occurrences);
+    *  2. seed matches = fingerprint equi-join across distinct docs
+    *     (doc_a < doc_b) — the only join, and it is equi on the hash;
+    *  3. a shared span of L tokens yields L−width+1 seeds consecutive
+    *     along the diagonal pa−pb, so grouping by (a, b, diagonal) and
+    *     splitting runs where pa jumps (gaps-and-islands: island =
+    *     pa − row_number) merges seeds into MAXIMAL spans:
+    *     span_tokens = max(pa) − min(pa) + width.
+    *
+    * Ubiquitous fingerprints (site boilerplate — license headers,
+    * navigation strings) are dropped before the seed join when they occur
+    * more than `maxFpFreq` times: a fingerprint occurring f times seeds
+    * O(f²) pairs, the quadratic hot key at 100 TB. The cap is part of the
+    * operator's SEMANTICS (mirrored verbatim by the DuckDB oracle), not a
+    * silent truncation; spans whose every shingle is that common are
+    * boilerplate, not memorization risk.
+    *
+    * Returns (doc_a, doc_b, a_start, b_start, span_tokens), starts
+    * 0-based in token positions. Spans shorter than `width` are invisible
+    * by construction (standard for shingle seeding).
+    */
   def sharedSpans(df: DataFrame, idCol: String, textCol: String,
       width: Int = 8, minTokens: Int = 12, maxFpFreq: Int = 128): DataFrame = {
     require(width >= 2, "width must be at least 2")

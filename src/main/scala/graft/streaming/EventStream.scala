@@ -4,6 +4,7 @@ import graft.operators.Upsert
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, Trigger}
+import org.apache.spark.sql.types.StructType.fromDDL
 
 /** Keyed state carried by [[EventStream.runningUserTotals]] across
   * micro-batches. Top-level so Spark can derive a product `Encoder` for
@@ -372,8 +373,8 @@ object EventStream {
     * batched (spec-asserted against the one-batch card).
     *
     * RESTART-SAFE: the per-source partials persist to a
-    * `{prefix}_card` table (create-on-first-batch, resumed when
-    * present — the [[dedupStream]] contract), so a crash between
+    * `{prefix}_card` table (created by the first batch, resumed when
+    * present), so a crash between
     * batches loses nothing: the streaming checkpoint skips the
     * already-processed batches AND their counts are already in the
     * table. The table is bounded at one row per source (scalars +
@@ -509,51 +510,14 @@ object EventStream {
 
   /** Require the stamped (mBits, k) to equal the caller's; seed the stamp
     * on first contact when asked. A mismatch THROWS — wrong parameters
-    * must never reach a probe or merge.
+    * must never reach a probe or merge. Runs [[StateTable.heal]] first,
+    * so every state consumer completes an interrupted rotation before use.
     */
-  /** Repair a rotation that crashed INSIDE the table swap (see
-    * [[frontierNewGeneration]]): the swap is four non-atomic metadata
-    * ops, so a crash can leave (a) NO live bloom at all (between its
-    * DROP and RENAME) or (b) the new bloom serving under the OLD
-    * generation stamp (between the bloom pair and the meta pair). Both
-    * states are detectable — the staged meta writes strictly BEFORE the
-    * swap begins, so a missing live table alongside a staged twin can
-    * only mean the swap was in flight — and both repair by COMPLETING
-    * the swap (adopting the staged pair), never by re-running the
-    * build. A crash during the build itself (live pair intact, staged
-    * leftovers present) is NOT adopted — the next rotation reclaims and
-    * rebuilds, as before. No-op when no crash state is present; runs
-    * from [[verifyBloomMeta]] so every state consumer self-heals before
-    * touching the pair.
-    */
-  private def adoptStagedSwap(sess: org.apache.spark.sql.SparkSession,
-      tablePrefix: String): Unit = {
-    val bloomT = s"${tablePrefix}_seen_bloom"
-    val metaT = s"${tablePrefix}_seen_bloom_meta"
-    val (bloomS, metaS) = (s"${bloomT}__rebuild", s"${metaT}__rebuild")
-    def has(t: String) = sess.catalog.tableExists(t)
-    if (!has(bloomT) && has(bloomS)) {
-      // crash between DROP bloomT and its RENAME — the widest hazard:
-      // nothing is serving. The staged pair is complete by ordering.
-      sess.sql(s"ALTER TABLE $bloomS RENAME TO $bloomT")
-      if (has(metaS)) {
-        sess.sql(s"DROP TABLE IF EXISTS $metaT")
-        sess.sql(s"ALTER TABLE $metaS RENAME TO $metaT")
-      }
-    } else if (has(bloomT) && !has(bloomS) && has(metaS)) {
-      // bloom pair swapped, meta pair not (covers the crash after DROP
-      // metaT too): the live bloom is the NEW one under the OLD stamp —
-      // finish the meta swap so the pair is consistent again
-      sess.sql(s"DROP TABLE IF EXISTS $metaT")
-      sess.sql(s"ALTER TABLE $metaS RENAME TO $metaT")
-    }
-  }
-
   private def verifyBloomMeta(sess: org.apache.spark.sql.SparkSession,
       tablePrefix: String, mBits: Long, k: Int, seedIfAbsent: Boolean): Unit = {
     import sess.implicits._
-    adoptStagedSwap(sess, tablePrefix)
     val metaT = s"${tablePrefix}_seen_bloom_meta"
+    StateTable.heal(sess, Seq(s"${tablePrefix}_seen_bloom", metaT))
     if (sess.catalog.tableExists(metaT)) {
       sess.catalog.refreshTable(metaT)
       val m = sess.table(metaT).head()
@@ -604,18 +568,13 @@ object EventStream {
     * re-discovery would duplicate them in the queue), the meta stamp's
     * `generation` increments, and everything else (queue contents,
     * bloom parameters) carries over. One queue-sized Bloom build +
-    * two bounded writes — STAGED as `__rebuild` tables and swapped
-    * with metadata ops (the rebuildQuantizer discipline), so a crash
-    * during the builds leaves the live bloom and its generation stamp
-    * untouched and mutually consistent. The swap itself is four
-    * NON-ATOMIC metadata ops (DROP+RENAME per table — the catalog has
-    * no atomic replace), so a residual window remains where a crash
-    * leaves no live bloom or a new bloom under the old stamp; both
-    * states are repaired by adopting the completed staged pair on the
-    * next contact with the state (verifyBloomMeta → adoptStagedSwap),
-    * so the guarantee is crash-CONSISTENT, not crash-proof: either the
-    * old pair serves, or the new pair does after one self-heal — never
-    * a half-rotated mix that persists. Run at re-crawl cadence (days),
+    * two bounded writes, staged and swapped in with [[StateTable.swap]]:
+    * a crash while building leaves the live bloom and its generation
+    * stamp untouched and mutually consistent, and a crash inside the
+    * swap is completed on the next contact with the state
+    * (verifyBloomMeta → [[StateTable.heal]]). So either the old pair
+    * serves, or the new pair does after one self-heal — never a
+    * half-rotated mix that persists. Run at re-crawl cadence (days),
     * never per batch. Returns the new generation number.
     *
     * The adjudicated-once stance for DENIED urls is preserved per
@@ -630,37 +589,21 @@ object EventStream {
     import sess.implicits._
     import graft.functions.Bloom
     verifyBloomMeta(sess, tablePrefix, mBits, k, seedIfAbsent = false)
-    val metaT = s"${tablePrefix}_seen_bloom_meta"
-    val bloomT = s"${tablePrefix}_seen_bloom"
     val frontierT = s"${tablePrefix}_frontier"
-    // Crash staging (the rebuildQuantizer discipline): BOTH rotated
-    // states land fully written in `__rebuild` tables while the live
-    // pair still serves — a crash anywhere in the expensive, failable
-    // work leaves the live bloom AND its generation stamp untouched
-    // and mutually consistent (the r13 ordering wrote the reseeded
-    // bloom under the OLD generation number for the whole build).
-    // Stale leftovers from a crashed run are reclaimed here; the swap
-    // itself is four metadata ops.
-    val (bloomS, metaS) = (s"${bloomT}__rebuild", s"${metaT}__rebuild")
-    sess.sql(s"DROP TABLE IF EXISTS $bloomS")
-    sess.sql(s"DROP TABLE IF EXISTS $metaS")
-    val queued =
-      if (sess.catalog.tableExists(frontierT)) {
-        sess.catalog.refreshTable(frontierT)
-        sess.table(frontierT).select("url")
-      } else sess.emptyDataset[String].toDF("url")
-    val reseeded = Bloom.build(queued, "url", mBits, k)
-      .localCheckpoint(eager = true)
-    reseeded.coalesce(1).write.format("parquet").saveAsTable(bloomS)
     val gen = bloomGeneration(sess, tablePrefix) + 1L
-    Seq((mBits, k, gen)).toDF("m_bits", "k", "generation")
-      .coalesce(1).write.format("parquet").saveAsTable(metaS)
-    sess.sql(s"DROP TABLE $bloomT")
-    sess.sql(s"ALTER TABLE $bloomS RENAME TO $bloomT")
-    sess.sql(s"DROP TABLE $metaT")
-    sess.sql(s"ALTER TABLE $metaS RENAME TO $metaT")
-    sess.catalog.refreshTable(bloomT)
-    sess.catalog.refreshTable(metaT)
+    StateTable.swap(sess,
+        Seq(s"${tablePrefix}_seen_bloom", s"${tablePrefix}_seen_bloom_meta")) {
+      case Seq(bloomS, metaS) =>
+        val queued =
+          if (sess.catalog.tableExists(frontierT)) {
+            sess.catalog.refreshTable(frontierT)
+            sess.table(frontierT).select("url")
+          } else sess.emptyDataset[String].toDF("url")
+        Bloom.build(queued, "url", mBits, k).localCheckpoint(eager = true)
+          .coalesce(1).write.format("parquet").saveAsTable(bloomS)
+        Seq((mBits, k, gen)).toDF("m_bits", "k", "generation")
+          .coalesce(1).write.format("parquet").saveAsTable(metaS)
+    }
     gen
   }
 
@@ -897,8 +840,8 @@ object EventStream {
     *
     * Per-batch work: the gate + md5 + minhash on the DELTA, one bands
     * probe, one bloom probe, all writes append-only except the bounded
-    * source-counts and bloom tables. Restart resumes every table
-    * (create-if-absent). The per-batch cascade itself is
+    * source-counts and bloom tables. Restart resumes every table through
+    * [[StateTable.open]]. The per-batch cascade itself is
     * [[graft.llmops.Curation.curationStep]] — shared with the
     * `q_x_curation_stream` batch-replay oracle, so the stream's stage
     * semantics are DuckDB-checked end to end. The bands table is
@@ -915,43 +858,19 @@ object EventStream {
       contamN: Int = 5, mBits: Int = 1 << 20, kProbes: Int = 4,
       stateBuckets: Int = 8, maxStateFiles: Int = 64,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
     import graft.llmops.Dedup
     val spark = newDocs.sparkSession
-    val idType = newDocs.schema(idCol).dataType
+    val id = newDocs.schema(idCol).dataType.sql
     val (docsT, shT, bandT) =
       (s"${tablePrefix}_docs", s"${tablePrefix}_shingles", s"${tablePrefix}_bands")
     val (ledgerT, countsT) = (s"${tablePrefix}_ledger", s"${tablePrefix}_source_counts")
     val (benchShT, bloomT) = (s"${tablePrefix}_bench_shingles", s"${tablePrefix}_bloom")
-    def createIfAbsent(table: String, schema: StructType,
-        bucketCols: Seq[String] = Nil): Unit =
-      if (!spark.catalog.tableExists(table)) {
-        val w = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .write.format("parquet")
-        (if (bucketCols.isEmpty) w
-         else w.bucketBy(stateBuckets, bucketCols.head, bucketCols.tail: _*)
-           .sortBy(bucketCols.head, bucketCols.tail: _*))
-          .saveAsTable(table)
-      }
-    createIfAbsent(docsT, StructType(Seq(
-      StructField("doc", idType), StructField("text", StringType),
-      StructField("source", StringType))))
-    createIfAbsent(shT, StructType(Seq(
-      StructField("doc", idType),
-      StructField("hs", ArrayType(LongType, containsNull = false)))))
-    createIfAbsent(bandT, StructType(Seq(
-      StructField("doc", idType), StructField("band", IntegerType),
-      StructField("sig", LongType))), Seq("band", "sig"))
-    createIfAbsent(ledgerT, StructType(Seq(
-      StructField("doc", idType), StructField("source", StringType),
-      StructField("stage", StringType), StructField("quality_reason", StringType),
-      StructField("kept", BooleanType))))
-    createIfAbsent(countsT, StructType(Seq(
-      StructField("source", StringType), StructField("n", LongType))))
-    createIfAbsent(benchShT, StructType(Seq(StructField("s", LongType))))
-    createIfAbsent(bloomT, StructType(Seq(
-      StructField("w", LongType), StructField("bits", LongType))))
+    StateTable.open(spark, docsT, fromDDL(s"doc $id, text string, source string"))
+    openDedupIndex(spark, tablePrefix, id, stateBuckets)
+    StateTable.open(spark, ledgerT, fromDDL(
+      s"doc $id, source string, stage string, quality_reason string, kept boolean"))
+    StateTable.open(spark, countsT, fromDDL("source string, n bigint"))
+    openDecontaminationState(spark, tablePrefix)
     newDocs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
@@ -999,9 +918,8 @@ object EventStream {
     * Serve queries any time with [[searchIndexState]] (identical to
     * [[graft.llmops.Retrieval.searchTopK]] over every document streamed
     * so far — spec-asserted) or materialize the per-term summary with
-    * `Retrieval.indexFromPostings(spark.table(...))`. Same
-    * create-if-absent restart contract as [[dedupStream]]; document ids
-    * must be new each batch (the same arrival contract).
+    * `Retrieval.indexFromPostings(spark.table(...))`. Restarts resume
+    * through [[StateTable.open]]; document ids must be new each batch.
     *
     * The postings table is BUCKETED by term (`stateBuckets`): the scan
     * carries HashPartitioning(term), so the per-term summary
@@ -1013,18 +931,10 @@ object EventStream {
   def indexStream(docs: DataFrame, idCol: String, textCol: String,
       tablePrefix: String, stateBuckets: Int = 8, maxStateFiles: Int = 64,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
-    val spark = docs.sparkSession
     val table = s"${tablePrefix}_postings"
-    if (!spark.catalog.tableExists(table)) {
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(StructField("term", StringType),
-            StructField("doc", docs.schema(idCol).dataType),
-            StructField("tf", LongType))))
-        .write.format("parquet")
-        .bucketBy(stateBuckets, "term").sortBy("term")
-        .saveAsTable(table)
-    }
+    StateTable.open(docs.sparkSession, table, fromDDL(
+      s"term string, doc ${docs.schema(idCol).dataType.sql}, tf bigint"),
+      Seq("term"), stateBuckets)
     docs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
@@ -1080,31 +990,20 @@ object EventStream {
     * The cells table is BUCKETED by cell: the probe's equi-join reads
     * HashPartitioning(cell) straight off the scan, so queries never
     * shuffle the accumulated index (only the broadcast-sized probe list
-    * moves; plan-pinned). Same create-if-absent restart contract as
-    * [[dedupStream]]; vector ids must be new each batch.
+    * moves; plan-pinned). Restarts resume through [[StateTable.open]]
+    * after completing an interrupted [[rebuildQuantizer]] swap; vector
+    * ids must be new each batch.
     */
   def annIndexStream(vecs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, tablePrefix: String, stateBuckets: Int = 8,
       maxStateFiles: Int = 64,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
     val spark = vecs.sparkSession
-    val (centT, cellT) = (s"${tablePrefix}_centroids", s"${tablePrefix}_cells")
-    if (!spark.catalog.tableExists(centT)) {
-      centroids.select(col("cent_id"), col("centvec"))
-        .write.format("parquet").saveAsTable(centT)
-    }
-    if (!spark.catalog.tableExists(cellT)) {
-      spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-          StructType(Seq(
-            StructField("cell", centroids.schema("cent_id").dataType),
-            StructField("cid", vecs.schema(idCol).dataType),
-            StructField("cvec", vecs.schema(vecCol).dataType),
-            StructField("cn", DoubleType))))
-        .write.format("parquet")
-        .bucketBy(stateBuckets, "cell").sortBy("cell")
-        .saveAsTable(cellT)
-    }
+    val (centT, cellT) = healQuantizer(spark, tablePrefix)
+    val seed = centroids.select(col("cent_id"), col("centvec"))
+    StateTable.open(spark, centT, seed.schema, seed = Some(seed))
+    StateTable.open(spark, cellT, graft.llmops.Similarity.assignCells(
+      vecs, seed, idCol, vecCol).schema, Seq("cell"), stateBuckets)
     vecs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
@@ -1121,27 +1020,6 @@ object EventStream {
       }
   }
 
-  /** REBUILD the [[annIndexStream]] quantizer in place — the remediation
-    * path [[graft.llmops.Similarity.cellStats]]'s drift heuristic has
-    * been pointing at with no operator to execute it: re-train on every
-    * vector streamed so far, re-assign the whole cells table, and swap
-    * both state tables so the stream and every [[annIndexState]] reader
-    * pick the new quantizer up transparently ([[annIndexStream]] reads
-    * `{prefix}_centroids` fresh each micro-batch, so post-rebuild
-    * appends assign against the NEW centroids with no stream restart).
-    *
-    * Swap discipline: the new centroids/cells are STAGED as fully
-    * written `__rebuild` tables first — the expensive, failable work
-    * happens while the live tables still serve; the swap itself is two
-    * metadata ops per table (DROP + RENAME), no data rewrite. A crash
-    * before the swap leaves the live state untouched (stale `__rebuild`
-    * leftovers are reclaimed on the next run); the swap window itself is
-    * metadata-small. `stateBuckets` must match the stream's (the rebuilt
-    * cells table keeps the bucketed-by-cell layout the probe's
-    * no-Exchange plan depends on).
-    *
-    * Returns the new centroid table (cent_id, centvec).
-    */
   /** The AUTOMATED rebuild trigger — [[graft.llmops.Similarity.cellStats]]'
     * documented heuristic, executed instead of narrated: reads the live
     * cell/centroid state, computes max occupancy skew and the occupancy-
@@ -1160,12 +1038,10 @@ object EventStream {
       maxSkew: Double = 4.0, cdistFactor: Double = 2.0): Boolean = {
     import spark.implicits._
     val metaT = s"${tablePrefix}_quantizer_meta"
+    val (centT, cellT) = healQuantizer(spark, tablePrefix)
     def gauges(): (Double, Double) = {
-      spark.catalog.refreshTable(s"${tablePrefix}_cells")
-      spark.catalog.refreshTable(s"${tablePrefix}_centroids")
-      val st = graft.llmops.Similarity.cellStats(
-          spark.table(s"${tablePrefix}_cells"),
-          spark.table(s"${tablePrefix}_centroids"))
+      Seq(cellT, centT).foreach(spark.catalog.refreshTable)
+      val st = graft.llmops.Similarity.cellStats(spark.table(cellT), spark.table(centT))
         .na.fill(0.0, Seq("mean_cdist")).collect()
       val tot = math.max(1L, st.map(_.getAs[Long]("n")).sum).toDouble
       (st.map(_.getAs[Double]("occ_ratio")).foldLeft(0.0)(math.max),
@@ -1193,27 +1069,45 @@ object EventStream {
     }
   }
 
+  /** REBUILD the [[annIndexStream]] quantizer in place — the remediation
+    * path [[graft.llmops.Similarity.cellStats]]'s drift heuristic has
+    * been pointing at with no operator to execute it: re-train on every
+    * vector streamed so far, re-assign the whole cells table, and swap
+    * both state tables so the stream and every [[annIndexState]] reader
+    * pick the new quantizer up transparently ([[annIndexStream]] reads
+    * `{prefix}_centroids` fresh each micro-batch, so post-rebuild
+    * appends assign against the NEW centroids with no stream restart).
+    *
+    * Swap discipline ([[StateTable.swap]]): the new tables are STAGED as
+    * fully written twins while the live ones still serve, then swapped
+    * in by a DROP + RENAME per table. A crash before the swap leaves the
+    * live state untouched; a crash inside it is completed by
+    * [[StateTable.heal]], which the stream, [[annIndexState]],
+    * [[maybeRebuild]] and this method run first — so the index serves
+    * the old quantizer or the new one, never a missing or emptied cells
+    * table. The rebuilt tables keep the live column types; `stateBuckets`
+    * must match the stream's (the probe's no-Exchange plan needs the
+    * bucketed-by-cell layout, and the stream's resume check refuses any
+    * other).
+    *
+    * Returns the new centroid table (cent_id, centvec).
+    */
   def rebuildQuantizer(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String, nlist: Int, iters: Int,
       stateBuckets: Int = 8): DataFrame = {
-    val (centT, cellT) = (s"${tablePrefix}_centroids", s"${tablePrefix}_cells")
-    val (centS, cellS) = (s"${centT}__rebuild", s"${cellT}__rebuild")
+    val (centT, cellT) = healQuantizer(spark, tablePrefix)
     // checkpointed inside rebuildQuantizer BEFORE any table mutation
     val (newCent, newCells) =
       graft.llmops.Similarity.rebuildQuantizer(spark.table(cellT), nlist, iters)
-    spark.sql(s"DROP TABLE IF EXISTS $centS")
-    spark.sql(s"DROP TABLE IF EXISTS $cellS")
-    newCent.write.format("parquet").saveAsTable(centS)
-    newCells.repartition(stateBuckets, col("cell"))
-      .write.format("parquet")
-      .bucketBy(stateBuckets, "cell").sortBy("cell")
-      .saveAsTable(cellS)
-    spark.sql(s"DROP TABLE $centT")
-    spark.sql(s"ALTER TABLE $centS RENAME TO $centT")
-    spark.sql(s"DROP TABLE $cellT")
-    spark.sql(s"ALTER TABLE $cellS RENAME TO $cellT")
-    spark.catalog.refreshTable(centT)
-    spark.catalog.refreshTable(cellT)
+    def like(df: DataFrame, t: String): DataFrame =
+      df.select(spark.table(t).schema.map(f => col(f.name).cast(f.dataType)): _*)
+    StateTable.swap(spark, Seq(centT, cellT)) { case Seq(centS, cellS) =>
+      like(newCent, centT).write.format("parquet").saveAsTable(centS)
+      like(newCells, cellT).repartition(stateBuckets, col("cell"))
+        .write.format("parquet")
+        .bucketBy(stateBuckets, "cell").sortBy("cell")
+        .saveAsTable(cellS)
+    }
     spark.table(centT)
   }
 
@@ -1224,14 +1118,23 @@ object EventStream {
       nprobe: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
+    val (centT, cellT) = healQuantizer(spark, tablePrefix)
     // reader-side staleness guard (the dataCardDrift discipline): the
     // stream appends — and [[rebuildQuantizer]] SWAPS — these tables on
     // other sessions; a reader that cached a listing must re-list.
-    spark.catalog.refreshTable(s"${tablePrefix}_cells")
-    spark.catalog.refreshTable(s"${tablePrefix}_centroids")
-    graft.llmops.Similarity.ivfProbe(
-      spark.table(s"${tablePrefix}_cells"), spark.table(s"${tablePrefix}_centroids"),
+    Seq(cellT, centT).foreach(spark.catalog.refreshTable)
+    graft.llmops.Similarity.ivfProbe(spark.table(cellT), spark.table(centT),
       queries, k, nprobe, idCol, vecCol)
+  }
+
+  /** The [[annIndexStream]] tables (centroids, cells), after completing a
+    * [[rebuildQuantizer]] swap a crash interrupted ([[StateTable.heal]]).
+    */
+  private def healQuantizer(spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String): (String, String) = {
+    val (centT, cellT) = (s"${tablePrefix}_centroids", s"${tablePrefix}_cells")
+    StateTable.heal(spark, Seq(centT, cellT))
+    (centT, cellT)
   }
 
   /** Streaming decontamination state: eval suites ARRIVE over time (a new
@@ -1245,24 +1148,15 @@ object EventStream {
     * suites accumulate. Training frames are then checked any time with
     * [[decontaminateAgainstState]], which is row-for-row identical to a
     * from-scratch [[graft.llmops.Dedup.decontaminateBloom]] over the
-    * union of every streamed batch (spec-asserted). Same create-if-absent
-    * restart contract as [[dedupStream]].
+    * union of every streamed batch (spec-asserted). Restarts resume
+    * through [[StateTable.open]].
     */
   def decontaminationStream(benchDocs: DataFrame, idCol: String,
       textCol: String, tablePrefix: String, n: Int = 5,
       mBits: Int = 1 << 20, kProbes: Int = 4, maxStateFiles: Int = 64,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
-    val spark = benchDocs.sparkSession
     val (shT, blT) = (s"${tablePrefix}_bench_shingles", s"${tablePrefix}_bloom")
-    def createIfAbsent(table: String, schema: StructType): Unit =
-      if (!spark.catalog.tableExists(table)) {
-        spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .write.format("parquet").saveAsTable(table)
-      }
-    createIfAbsent(shT, StructType(Seq(StructField("s", LongType))))
-    createIfAbsent(blT, StructType(Seq(
-      StructField("w", LongType), StructField("bits", LongType))))
+    openDecontaminationState(benchDocs.sparkSession, tablePrefix)
     benchDocs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
@@ -1314,9 +1208,8 @@ object EventStream {
     * State = three append-only tables: `{prefix}_docs` (doc, text),
     * `{prefix}_shingles` (doc, hs — the per-doc distinct-hash array,
     * [[graft.llmops.Dedup.shingleIndexRows]]), `{prefix}_bands`
-    * (doc, band, sig) —
-    * created empty when absent, resumed when present (same restart
-    * contract as [[incrementalUpsertBucketed]]). Per-batch I/O is
+    * (doc, band, sig) — opened with [[StateTable.open]]: created empty,
+    * or resumed after a layout check. Per-batch I/O is
     * O(|batch|) work + one equi-join probe of the batch's bands against
     * the index and APPEND-only writes of the survivors' rows; the corpus
     * text is never rescanned and never rewritten.
@@ -1336,30 +1229,12 @@ object EventStream {
       numHashTables: Int = 5, n: Int = 3, stateBuckets: Int = 8,
       maxStateFiles: Int = 64,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.types._
     val spark = newDocs.sparkSession
-    val idType = newDocs.schema(idCol).dataType
+    val id = newDocs.schema(idCol).dataType.sql
     val (docsT, shT, bandT) =
       (s"${tablePrefix}_docs", s"${tablePrefix}_shingles", s"${tablePrefix}_bands")
-    def createIfAbsent(table: String, schema: StructType,
-        bucketCols: Seq[String] = Nil): Unit =
-      if (!spark.catalog.tableExists(table)) {
-        val w = spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .write.format("parquet")
-        (if (bucketCols.isEmpty) w
-         else w.bucketBy(stateBuckets, bucketCols.head, bucketCols.tail: _*)
-           .sortBy(bucketCols.head, bucketCols.tail: _*))
-          .saveAsTable(table)
-      }
-    createIfAbsent(docsT, StructType(Seq(
-      StructField("doc", idType), StructField("text", StringType))))
-    createIfAbsent(shT, StructType(Seq(
-      StructField("doc", idType),
-      StructField("hs", ArrayType(LongType, containsNull = false)))))
-    createIfAbsent(bandT, StructType(Seq(
-      StructField("doc", idType), StructField("band", IntegerType),
-      StructField("sig", LongType))), Seq("band", "sig"))
+    StateTable.open(spark, docsT, fromDDL(s"doc $id, text string"))
+    openDedupIndex(spark, tablePrefix, id, stateBuckets)
     newDocs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
@@ -1385,26 +1260,26 @@ object EventStream {
       }
   }
 
-  /** Compact a streaming state table in place — the small-files antidote
-    * every append-per-micro-batch table eventually needs: a year of
-    * 5-minute batches is ~100k appends, and at 100 TB a probe that opens
-    * 100k parquet footers per bucket spends its time in metadata, not
-    * data. Rewrites the table's current contents as ONE file set (for a
-    * bucketed table, exactly `buckets` files via a repartition on the
-    * bucket columns — Spark's repartition hash IS the bucket hash, so
-    * every task writes exactly its one bucket file; unbucketed tables
-    * coalesce to `targetFiles`).
-    *
-    * Contents and layout are preserved exactly: same rows, same bucket
-    * spec (appends continue to carry it — [[dedupStream]]'s contract),
-    * and the no-Exchange probe plan is unchanged (spec-pinned). The
-    * data is eagerly localCheckpointed before the overwrite — the
-    * [[curationStream]] counts-table discipline — so the table being
-    * read is never the table being written. Run it BETWEEN batches (the
-    * foreachBatch cadence guarantees no batch is mid-flight); a crash
-    * during the overwrite is the one non-atomic window, the same window
-    * every `mode("overwrite")` state rewrite in this file accepts.
+  /** Open the near-dup index [[dedupStream]] and [[curationStream]] share:
+    * `{prefix}_shingles` (doc, hs) and `{prefix}_bands` bucketed by the
+    * probe keys (band, sig). `id` is the doc id's SQL type.
     */
+  private def openDedupIndex(spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String, id: String, buckets: Int): Unit = {
+    StateTable.open(spark, s"${tablePrefix}_shingles", fromDDL(s"doc $id, hs array<bigint>"))
+    StateTable.open(spark, s"${tablePrefix}_bands",
+      fromDDL(s"doc $id, band int, sig bigint"), Seq("band", "sig"), buckets)
+  }
+
+  /** Open the [[decontaminationStream]] state, which [[curationStream]]
+    * probes: the bench shingle index and its Bloom word table.
+    */
+  private def openDecontaminationState(spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String): Unit = {
+    StateTable.open(spark, s"${tablePrefix}_bench_shingles", fromDDL("s bigint"))
+    StateTable.open(spark, s"${tablePrefix}_bloom", fromDDL("w bigint, bits bigint"))
+  }
+
   /** [[compactStateTable]] behind a fragmentation policy: compact only
     * when the table's data-file count exceeds `maxFiles` (the per-batch
     * append cadence decides how fast that accrues). Returns whether a
@@ -1448,6 +1323,26 @@ object EventStream {
     fragmented
   }
 
+  /** Compact a streaming state table in place — the small-files antidote
+    * every append-per-micro-batch table eventually needs: a year of
+    * 5-minute batches is ~100k appends, and at 100 TB a probe that opens
+    * 100k parquet footers per bucket spends its time in metadata, not
+    * data. Rewrites the table's current contents as ONE file set (for a
+    * bucketed table, exactly `buckets` files via a repartition on the
+    * bucket columns — Spark's repartition hash IS the bucket hash, so
+    * every task writes exactly its one bucket file; unbucketed tables
+    * coalesce to `targetFiles`).
+    *
+    * Contents and layout are preserved exactly: same rows, same bucket
+    * spec (appends continue to carry it — [[dedupStream]]'s contract),
+    * and the no-Exchange probe plan is unchanged (spec-pinned). The
+    * data is eagerly localCheckpointed before the overwrite — the
+    * [[curationStream]] counts-table discipline — so the table being
+    * read is never the table being written. Run it BETWEEN batches (the
+    * foreachBatch cadence guarantees no batch is mid-flight); a crash
+    * during the overwrite is the one non-atomic window, the same window
+    * every `mode("overwrite")` state rewrite in this file accepts.
+    */
   def compactStateTable(spark: org.apache.spark.sql.SparkSession, table: String,
       bucketCols: Seq[String] = Nil, buckets: Int = 8,
       targetFiles: Int = 1): Unit = {

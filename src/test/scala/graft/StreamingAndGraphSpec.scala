@@ -838,6 +838,70 @@ class StreamingAndGraphSpec extends SparkTestBase {
     }
   }
 
+  test("rebuildQuantizer: a swap cut short by a crash heals on the next contact") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.streaming.StateTable.twin
+    def v(a: Float, b: Float, c: Float, d: Float) = Array(a, b, c, d)
+    val all = Seq(
+      1L -> v(1, 0, 0, 0), 2L -> v(0, 1, 0, 0), 3L -> v(0, 0, 1, 0),
+      4L -> v(0.9f, 0.1f, 0, 0), 5L -> v(0.1f, 0.9f, 0, 0), 6L -> v(0, 0.1f, 0.9f, 0),
+      7L -> v(0.8f, 0.2f, 0, 0), 8L -> v(0.2f, 0.8f, 0.1f, 0), 9L -> v(0, 0, 0.8f, 0.2f),
+      10L -> v(0.7f, 0, 0.3f, 0), 11L -> v(0.3f, 0.7f, 0, 0), 12L -> v(0, 0.3f, 0.7f, 0))
+    val corpus = all.toDF("vec_id", "embedding")
+    val cent0 = corpus.filter(col("vec_id") <= 2)
+      .select(col("vec_id").as("cent_id"), col("embedding").as("centvec"))
+    val queries = corpus.filter(col("vec_id") isin (4L, 9L))
+    val prefix = "ann_heal_test"
+    val (centT, cellT) = (s"${prefix}_centroids", s"${prefix}_cells")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("qid", "rn").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+    def centroids(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getSeq[Float](1))).toSet
+    try {
+      val mem = MemoryStream[(Long, Array[Float])]
+      val streamDf = mem.toDF().select(col("_1").as("vec_id"), col("_2").as("embedding"))
+      val ckpt = java.nio.file.Files.createTempDirectory("ann_heal_ckpt").toString
+      def runOnce(): Unit = {
+        val q = EventStream.annIndexStream(streamDf, "vec_id", "embedding", cent0, prefix)
+          .option("checkpointLocation", ckpt).start()
+        q.processAllAvailable(); q.stop()
+      }
+      mem.addData(all.take(6): _*); runOnce()
+      mem.addData(all.drop(6): _*); runOnce()
+      EventStream.rebuildQuantizer(spark, prefix, nlist = 3, iters = 2)
+      // Stage the next rebuild's twins as a crash inside the swap leaves
+      // them: (1) centroids swapped, cells DROPPED before its RENAME;
+      // (2) centroids DROPPED before its RENAME, both twins complete.
+      for ((dropped, nlist) <- Seq(cellT -> 4, centT -> 2)) {
+        val (cent, cells) = graft.llmops.Similarity.rebuildQuantizer(
+          spark.table(cellT), nlist, iters = 2)
+        val staged = centroids(cent)
+        if (dropped == cellT) {
+          spark.sql(s"DROP TABLE $centT")
+          cent.write.format("parquet").saveAsTable(centT)
+        } else cent.write.format("parquet").saveAsTable(twin(centT))
+        cells.repartition(8, col("cell")).write.format("parquet")
+          .bucketBy(8, "cell").sortBy("cell").saveAsTable(twin(cellT))
+        spark.sql(s"DROP TABLE $dropped")
+        // the next stream start and reader complete the swap: the new
+        // quantizer serves every streamed vector, no twin is left
+        runOnce()
+        assert(centroids(spark.table(centT)) == staged, s"$dropped: old quantizer")
+        val served = rows(EventStream.annIndexState(queries, prefix, k = 3, nprobe = 2))
+        val oneShot = rows(graft.llmops.Similarity.ivfTopK(corpus, queries,
+          k = 3, nprobe = 2, centroids = Some(spark.table(centT))))
+        assert(served == oneShot && served.nonEmpty,
+          s"$dropped: healed state diverges:\n$served\n$oneShot")
+        assert(!spark.catalog.tableExists(twin(centT)) &&
+          !spark.catalog.tableExists(twin(cellT)))
+      }
+    } finally {
+      Seq(centT, cellT, twin(centT), twin(cellT)).foreach(t =>
+        spark.sql(s"DROP TABLE IF EXISTS $t"))
+    }
+  }
+
   test("maybeRebuild: seeds calibration, stays quiet while stable, fires exactly on drift") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -963,6 +1027,94 @@ class StreamingAndGraphSpec extends SparkTestBase {
         "bench_shingles", "bloom").foreach(t =>
         spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t"))
     }
+  }
+
+  test("StateTable.open: a stale state layout is refused before the stream starts") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val prefix = "stale_state_test"
+    val tables = Seq("docs", "shingles", "bands", "ledger", "source_counts",
+      "bench_shingles", "bloom").map(t => s"${prefix}_$t")
+    def stateRows(): Long =
+      tables.filter(spark.catalog.tableExists).map(spark.table(_).count()).sum
+    val mem = MemoryStream[(Long, String, String)]
+    mem.addData((1L, "one two three four five six seven eight", "s1"))
+    val docs = mem.toDF().toDF("doc_id", "text", "source")
+    def curation() = EventStream.curationStream(docs, "doc_id", "text", "source",
+      blockedSources = Nil, quota = 10, tablePrefix = prefix, mBits = 1 << 16)
+    def dropAll(): Unit = tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+    try {
+      for (start <- Seq[() => Any](
+          () => EventStream.dedupStream(docs.select("doc_id", "text"), "doc_id",
+            "text", prefix),
+          () => curation())) {
+        // the pre-r16 index layout: one (doc, s) row per shingle hash
+        dropAll()
+        Seq((7L, 42L)).toDF("doc", "s").write.format("parquet")
+          .saveAsTable(s"${prefix}_shingles")
+        val e = intercept[IllegalStateException](start())
+        assert(e.getMessage.contains(s"${prefix}_shingles has layout " +
+          "(doc bigint, s bigint)") &&
+          e.getMessage.contains("expects (doc bigint, hs array<bigint>)"), e.getMessage)
+        assert(stateRows() == 1L, "a refused start must not write state")
+      }
+      // a ledger the stream would only append to is refused up front too,
+      // not after the batch has appended to docs, shingles and bands
+      dropAll()
+      Seq.empty[(Long, String, String, String)]
+        .toDF("doc", "source", "stage", "quality_reason")
+        .write.format("parquet").saveAsTable(s"${prefix}_ledger")
+      val e = intercept[IllegalStateException](curation())
+      assert(e.getMessage.contains(s"${prefix}_ledger") &&
+        e.getMessage.contains("kept boolean"), e.getMessage)
+      assert(stateRows() == 0L, "a refused start must not write state")
+    } finally dropAll()
+  }
+
+  test("StateTable: crashed builds are never adopted, interrupted swaps complete") {
+    import spark.implicits._
+    import graft.streaming.StateTable
+    import graft.streaming.StateTable.twin
+    val (a, b) = ("state_toy_a", "state_toy_b")
+    val tables = Seq(a, twin(a), b, twin(b))
+    def put(t: String, v: Long): Unit =
+      Seq(v).toDF("v").write.mode("overwrite").format("parquet").saveAsTable(t)
+    def drop(t: String): Unit = spark.sql(s"DROP TABLE $t")
+    def heal(): Unit = StateTable.heal(spark, Seq(a, b))
+    // (a, a's twin, b, b's twin), None where absent
+    def state(): Seq[Option[Long]] = tables.map(t =>
+      if (!spark.catalog.tableExists(t)) None
+      else { spark.catalog.refreshTable(t); Some(spark.table(t).head().getLong(0)) })
+    try {
+      put(a, 1); put(b, 1)
+      // a crashed build: the twins present are a prefix of (a, b)
+      put(twin(a), 2); heal()
+      assert(state() == Seq(Some(1), Some(2), Some(1), None))
+      put(twin(b), 2); heal()
+      assert(state() == Seq(Some(1), Some(2), Some(1), Some(2)))
+      // a reclaim cut short after dropping b's twin (it drops last table
+      // first) leaves a's alone: still a prefix, still not adopted
+      drop(twin(b)); heal()
+      assert(state() == Seq(Some(1), Some(2), Some(1), None))
+      // the next swap reclaims the leftovers and lands its own build
+      StateTable.swap(spark, Seq(a, b)) { case Seq(sa, sb) => put(sa, 3); put(sb, 3) }
+      assert(state() == Seq(Some(3), None, Some(3), None))
+      // crashes inside the swap complete it: a dropped before its rename…
+      put(twin(a), 4); put(twin(b), 4); drop(a); heal()
+      assert(state() == Seq(Some(4), None, Some(4), None))
+      // …a swapped, b's swap not begun…
+      put(a, 5); put(twin(b), 5); heal()
+      assert(state() == Seq(Some(5), None, Some(5), None))
+      // …and b dropped before its rename
+      put(a, 6); put(twin(b), 6); drop(b); heal()
+      assert(state() == Seq(Some(6), None, Some(6), None))
+      // a swap over a missing live table is refused before staging
+      drop(b)
+      intercept[IllegalArgumentException] {
+        StateTable.swap(spark, Seq(a, b)) { case Seq(sa, sb) => put(sa, 7); put(sb, 7) }
+      }
+      assert(state() == Seq(Some(6), None, None, None))
+    } finally tables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
   }
 
   test("decontaminationStream: streamed state ≡ from-scratch bloom decontamination") {

@@ -511,7 +511,7 @@ object EventStream {
   /** Require the stamped (mBits, k) to equal the caller's; seed the stamp
     * on first contact when asked. A mismatch THROWS — wrong parameters
     * must never reach a probe or merge. Runs [[StateTable.heal]] first,
-    * so every state consumer completes an interrupted rotation before use.
+    * so every writer of the pair completes an interrupted rotation before use.
     */
   private def verifyBloomMeta(sess: org.apache.spark.sql.SparkSession,
       tablePrefix: String, mBits: Long, k: Int, seedIfAbsent: Boolean): Unit = {
@@ -991,8 +991,8 @@ object EventStream {
     * HashPartitioning(cell) straight off the scan, so queries never
     * shuffle the accumulated index (only the broadcast-sized probe list
     * moves; plan-pinned). Restarts resume through [[StateTable.open]]
-    * after completing an interrupted [[rebuildQuantizer]] swap; vector
-    * ids must be new each batch.
+    * after completing an interrupted [[rebuildQuantizer]] swap (so never
+    * during a rebuild); vector ids must be new each batch.
     */
   def annIndexStream(vecs: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, tablePrefix: String, stateBuckets: Int = 8,
@@ -1082,13 +1082,12 @@ object EventStream {
     * fully written twins while the live ones still serve, then swapped
     * in by a DROP + RENAME per table. A crash before the swap leaves the
     * live state untouched; a crash inside it is completed by
-    * [[StateTable.heal]], which the stream, [[annIndexState]],
-    * [[maybeRebuild]] and this method run first — so the index serves
-    * the old quantizer or the new one, never a missing or emptied cells
-    * table. The rebuilt tables keep the live column types; `stateBuckets`
-    * must match the stream's (the probe's no-Exchange plan needs the
-    * bucketed-by-cell layout, and the stream's resume check refuses any
-    * other).
+    * [[StateTable.heal]], which the stream start, [[maybeRebuild]] and
+    * this method (one at a time) run first — so the index comes back
+    * with the old quantizer or the new, never a missing or emptied cells
+    * table; [[annIndexState]] throws meanwhile. `stateBuckets` must match
+    * the stream's (the no-Exchange probe needs the bucketed-by-cell
+    * layout, and the stream's resume check refuses any other).
     *
     * Returns the new centroid table (cent_id, centvec).
     */
@@ -1099,11 +1098,9 @@ object EventStream {
     // checkpointed inside rebuildQuantizer BEFORE any table mutation
     val (newCent, newCells) =
       graft.llmops.Similarity.rebuildQuantizer(spark.table(cellT), nlist, iters)
-    def like(df: DataFrame, t: String): DataFrame =
-      df.select(spark.table(t).schema.map(f => col(f.name).cast(f.dataType)): _*)
     StateTable.swap(spark, Seq(centT, cellT)) { case Seq(centS, cellS) =>
-      like(newCent, centT).write.format("parquet").saveAsTable(centS)
-      like(newCells, cellT).repartition(stateBuckets, col("cell"))
+      newCent.write.format("parquet").saveAsTable(centS)
+      newCells.repartition(stateBuckets, col("cell"))
         .write.format("parquet")
         .bucketBy(stateBuckets, "cell").sortBy("cell")
         .saveAsTable(cellS)
@@ -1113,12 +1110,14 @@ object EventStream {
 
   /** Query the [[annIndexStream]] state: identical results to a one-shot
     * `ivfTopK` (same frozen centroids) over every vector streamed so far.
+    * Read-only: throws while a [[rebuildQuantizer]] swap (or a crash in
+    * one, until the next stream start heals it) has a table dropped.
     */
   def annIndexState(queries: DataFrame, tablePrefix: String, k: Int,
       nprobe: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
-    val (centT, cellT) = healQuantizer(spark, tablePrefix)
+    val (centT, cellT) = (s"${tablePrefix}_centroids", s"${tablePrefix}_cells")
     // reader-side staleness guard (the dataCardDrift discipline): the
     // stream appends — and [[rebuildQuantizer]] SWAPS — these tables on
     // other sessions; a reader that cached a listing must re-list.

@@ -80,17 +80,19 @@ object StateTable {
     tables.foreach(promote(spark, _))
   }
 
-  /** Complete a [[swap]] a crash interrupted; otherwise do nothing. The
-    * swap was in flight when a live table is missing or the first twin
-    * present is not the first table's: then every present twin replaces
-    * its table, in order. Twins forming a prefix beside a full live set
-    * are a crashed reclaim or build — never adopted, since a partial
-    * build is not a state; the next [[swap]] reclaims them.
+  /** Complete a [[swap]] a crash interrupted; otherwise do nothing. Only
+    * a swap leaves the present twins a suffix of `tables`, so it was in
+    * flight iff they are a proper suffix, or all twins with the first
+    * live table gone: then each replaces its table, in order. Any other
+    * twin set is a crashed build or reclaim, never adopted; the next
+    * [[swap]] reclaims it. `heal` writes: call it only where the tables
+    * are written, never beside another session's swap of them (both
+    * would promote one twin, and a late DROP can delete the new table).
     */
   def heal(spark: SparkSession, tables: Seq[String]): Unit = {
     val staged = tables.filter(t => spark.catalog.tableExists(twin(t)))
-    if (staged.nonEmpty &&
-        (staged.head != tables.head || !tables.forall(spark.catalog.tableExists)))
+    if (staged.nonEmpty && tables.endsWith(staged) &&
+        (staged.size < tables.size || !spark.catalog.tableExists(tables.head)))
       staged.foreach(promote(spark, _))
   }
 

@@ -884,8 +884,13 @@ class StreamingAndGraphSpec extends SparkTestBase {
         cells.repartition(8, col("cell")).write.format("parquet")
           .bucketBy(8, "cell").sortBy("cell").saveAsTable(twin(cellT))
         spark.sql(s"DROP TABLE $dropped")
-        // the next stream start and reader complete the swap: the new
-        // quantizer serves every streamed vector, no twin is left
+        // a reader only reads: it refuses the torn pair and heals nothing
+        intercept[org.apache.spark.sql.AnalysisException] {
+          EventStream.annIndexState(queries, prefix, k = 3, nprobe = 2)
+        }
+        assert(spark.catalog.tableExists(twin(cellT)) && !spark.catalog.tableExists(dropped))
+        // the next stream start completes the swap: the new quantizer
+        // serves every streamed vector, no twin is left
         runOnce()
         assert(centroids(spark.table(centT)) == staged, s"$dropped: old quantizer")
         val served = rows(EventStream.annIndexState(queries, prefix, k = 3, nprobe = 2))
@@ -1096,6 +1101,10 @@ class StreamingAndGraphSpec extends SparkTestBase {
       // first) leaves a's alone: still a prefix, still not adopted
       drop(twin(b)); heal()
       assert(state() == Seq(Some(1), Some(2), Some(1), None))
+      // a prefix is not adopted even with a live table missing
+      drop(b); heal()
+      assert(state() == Seq(Some(1), Some(2), None, None))
+      put(b, 1)
       // the next swap reclaims the leftovers and lands its own build
       StateTable.swap(spark, Seq(a, b)) { case Seq(sa, sb) => put(sa, 3); put(sb, 3) }
       assert(state() == Seq(Some(3), None, Some(3), None))

@@ -1,7 +1,7 @@
 package graft
 
-import graft.fixtures.SyntheticWorkbook
-import graft.ingest.Refresh
+import graft.fixtures.{ScaledWorkbook, SyntheticWorkbook}
+import graft.ingest.{Ingest, Refresh, Workbook}
 import graft.model.Graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -129,6 +129,44 @@ class RefreshSpec extends SparkTestBase {
   private def canon(df: DataFrame): DataFrame =
     df.withColumn("props", array_sort(map_entries(col("props"))))
 
+  /** SHA-256 over a frame's sorted rows; map cells render in key order. */
+  private def digest(df: DataFrame): String = {
+    val lines = df.collect().map(_.toSeq.map {
+      case m: scala.collection.Map[_, _] =>
+        m.toSeq.map { case (k, v) => (String.valueOf(k), String.valueOf(v)) }
+          .sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("{", ",", "}")
+      case v => String.valueOf(v)
+    }.mkString("\u0001")).sorted
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(lines.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
+
+  private def batchDigest(wb: Workbook.Sheets): (String, String) = {
+    val seeded = SyntheticWorkbook.seededStore(spark)
+    val b = Ingest.run(wb, seeded.nodes, seeded.edges)
+    (digest(b.nodes.select(Graph.NodeCols.map(col): _*)),
+      digest(b.edges.select(Graph.EdgeCols.map(col): _*)))
+  }
+
+  test("Ingest.run's batch is pinned row for row (golden, aged, scaled 4x40)") {
+    // Digests of the whole batch — every node (id, label, tenant, key,
+    // props) and edge (src, dst, relType, tenant, props) — so a rewrite of
+    // the statements must reproduce the batch exactly, not only the
+    // populations and relations the tests above pick out.
+    val got = Map(
+      "golden" -> batchDigest(SyntheticWorkbook.golden(spark)),
+      "aged" -> batchDigest(SyntheticWorkbook.aged(spark)),
+      "scaled" -> batchDigest(ScaledWorkbook.build(spark, 4, 40)))
+    val want = Map(
+      "golden" -> ("65b208f51ea225c29675670dfe16e551b1635d2356d8f2d048b918070130fbf1",
+        "b483a53e594f750318c04bce5ac6e9e85bdce03cbdd67eed92bf13d2c5211db4"),
+      "aged" -> ("bcb27f22661686b96e1fb12ed851a7649a57163c697f2a0518c5caa2e0e6d162",
+        "b1440350397ab7e38ceec5be3f4e0dd4675d1c6405d2087a0a50588e99efb870"),
+      "scaled" -> ("bb56d8b8eba2b8a4bcab5f7311dd8dae5a878dee3e06437b9dc145ddc58cddcd",
+        "a2850292affd3ef3ffe8639421a40a5a6825d892f50366c7e4780d80cf0f6de7"))
+    assert(got == want)
+  }
+
   test("refresh is idempotent (MERGE law, §5.2a)") {
     val store2 = Refresh.refresh(store1, SyntheticWorkbook.golden(spark))
     assert(store2.nodes.count() == nodes1.count())
@@ -228,5 +266,24 @@ class RefreshSpec extends SparkTestBase {
     assert(sameStore(Refresh.load(spark, p.toString), store1))
     assert(Files.isDirectory(p.resolve("nodes")))
     assert(!Files.exists(Paths.get(s"$p.__staged")) && !Files.exists(Paths.get(s"$p.__old")))
+  }
+
+  test("a crash between write's nodes and edges leaves the previous store in place") {
+    import java.nio.file.{Files, Paths}
+    val tmp = Files.createTempDirectory("graft_halfstaged")
+    val p = tmp.resolve("store")
+    val staged = Paths.get(s"$p.__staged")
+    Refresh.write(SyntheticWorkbook.seededStore(spark), p.toString)
+    // write's state after the staged `nodes` committed and before `edges`
+    store1.nodes.write.partitionBy("label").parquet(staged.resolve("nodes").toString)
+    assert(Files.exists(staged.resolve("nodes/_SUCCESS")) && !Files.exists(staged.resolve("edges")))
+    // load neither adopts the half-staged store nor deletes the previous one
+    assert(sameStore(Refresh.load(spark, p.toString), SyntheticWorkbook.seededStore(spark)))
+    assert(Files.exists(staged.resolve("nodes/_SUCCESS")))
+    assert(Files.isDirectory(p.resolve("nodes")) && Files.isDirectory(p.resolve("edges")))
+    // the next write completes and reclaims both siblings
+    Refresh.write(store1, p.toString)
+    assert(sameStore(Refresh.load(spark, p.toString), store1))
+    assert(!Files.exists(staged) && !Files.exists(Paths.get(s"$p.__old")))
   }
 }

@@ -79,17 +79,14 @@ object Bench {
       s""""warm_total":$warm,"queries_warm":${fmt(_._2)},"sf":"$sfDir",""" +
       s""""load_start":$loadStart,"load_end":$loadEnd}"""
     println(full)
-    // r16 measurement-contract fix: the driver captures only a bounded tail
-    // of this process's output, and the full line above (~15 KB for 320
-    // queries) gets truncated from the left and never parses — PERF has had
-    // per_query empty since round 12. Two additions-only remedies:
+    // A reader that keeps only a bounded tail of this output truncates the
+    // full line above (~15 KB for 320 queries) from the left, so:
     //  1. the full per-query JSON is ALSO written to a file
     //     (SPARK_GRAFT_BENCH_OUT, default ./bench_out.json) so any capture
     //     size can recover per-query numbers;
-    //  2. a SHORT final line (same schema minus the two per-query maps,
-    //     ~200 chars) is printed LAST so a bounded tail always contains at
-    //     least one complete parseable JSON line.
-    // The original full line is kept and unchanged; nothing is removed.
+    //  2. a SHORT line (same schema minus the two per-query maps, ~200
+    //     chars) is printed after spark.stop(), so it is the last line on
+    //     stdout and a bounded tail always holds one complete JSON line.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try {
       val w = new java.io.PrintWriter(outPath, "UTF-8")
@@ -97,9 +94,9 @@ object Bench {
     } catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
     }
+    spark.stop()
     println(s"""{"metric":"total","value":$cold,"unit":"sec","n":${results.size},""" +
       s""""warm_total":$warm,"sf":"$sfDir","bench_out":"$outPath",""" +
       s""""load_start":$loadStart,"load_end":$loadEnd}""")
-    spark.stop()
   }
 }

@@ -184,9 +184,9 @@ object SyntheticWorkbook {
       Map("name" -> lit("acme.local")))
     val co = Graph.nodesFrom(one, "Company", lit(null), Seq(lit("Acme Corp")),
       Map("name" -> lit("Acme Corp")))
-    val nodes = Seq(jumbo, cd, co).reduce(_ unionByName _).drop("_ord")
+    val nodes = Seq(jumbo, cd, co).reduce(_ unionByName _)
     val edge = Graph.edgesFrom(one, "Clientdomain", Seq(lit("acme.local")), "DOMAIN_OF",
-      "Company", Seq(lit("Acme Corp")), lit(null)).drop("_ord")
+      "Company", Seq(lit("Acme Corp")), lit(null))
     Refresh.GraphStore(nodes, edge)
   }
 }

@@ -9,10 +9,20 @@ import org.apache.spark.sql.functions._
 
 /** The reference's 16 load statements (refresh-vmware.cypher:33-277, pass 1 —
   * SURVEY.md §0 declares pass 1 canonical) as pure sheet-frames → batch
-  * transformations. Each statement contributes node/edge frames; `run`
-  * assembles them with last-writer-wins property merging keyed by
-  * (statement order, sheet row order) — the deterministic batch recast of
-  * Cypher's eager row-at-a-time writes.
+  * transformations, written as an emission catalog: each statement keeps its
+  * gate joins and lists the nodes (`NodeSpec`) and relationships
+  * (`EdgeSpec`, `Dim`) one gated row MERGEs; `emit` projects a frame's
+  * specs once per kind. `run` assembles the ~21 frames (one per statement,
+  * plus the secondary frames of multi-stage statements) with
+  * last-writer-wins property merging keyed by (statement order, sheet row
+  * order) — the deterministic batch recast of Cypher's eager row-at-a-time
+  * writes.
+  *
+  * The batch barrier stays: nodes and edges are each localCheckpointed once,
+  * eagerly and together, before `assemble`. Without it every consumer of the
+  * batch (Refresh reads its nodes three times) re-plans and re-runs the
+  * statements' join trees, and chained refreshes grow their lineage (see
+  * Refresh.materialize); it costs the one pass a refresh's write pays anyway.
   *
   * Faithfulness decisions (recorded per SURVEY §0/§7.3):
   *  - `vm.fqdn` ← the sheet's `DNS Name` column (the reference reads it off
@@ -66,6 +76,45 @@ object Ingest {
 
   final case class Batch(nodes: DataFrame, edges: DataFrame)
 
+  /** One node a row MERGEs where `when` holds: `label` keyed by `keys`. */
+  private final case class NodeSpec(label: String, tenant: Column, keys: Seq[Column],
+      props: Map[String, Column], when: Column = lit(true))
+
+  /** One relationship a row MERGEs where `when` holds, between resolved ids. */
+  private final case class EdgeSpec(src: Column, rel: String, dst: Column,
+      props: Map[String, Column] = Map.empty, when: Column = lit(true), tenant: Column = uid)
+
+  /** A dimension node keyed and named by `key`, and the `rel` link to it
+    * from `src` — both only where `key` is set.
+    */
+  private final case class Dim(src: Column, rel: String, label: String, key: Column,
+      prop: String = "name", props: Map[String, Column] = Map.empty) {
+    def node: NodeSpec = NodeSpec(label, lit(null), Seq(key), Map(prop -> key), when = key.isNotNull)
+    def edge: EdgeSpec = EdgeSpec(src, rel, id(label, key), props, when = key.isNotNull)
+  }
+
+  /** Node and edge frames in the canonical column order, `_ord` last. */
+  private final case class Out(nodes: Seq[DataFrame], edges: Seq[DataFrame]) {
+    def ++(o: Out): Out = Out(nodes ++ o.nodes, edges ++ o.edges)
+  }
+
+  /** Emit a gated row frame's specs: one projection per kind that inlines an
+    * array holding one struct per spec, null where the spec's guard fails.
+    * `inline` turns a null element into an all-null row, which the filter on
+    * the non-null `id`/`src` drops.
+    */
+  private def emit(rows: DataFrame, o: Column, nodes: Seq[NodeSpec],
+      edges: Seq[EdgeSpec], dims: Seq[Dim] = Nil): Out = {
+    def project(structs: Seq[Column], id: String): Seq[DataFrame] =
+      if (structs.isEmpty) Nil
+      else Seq(rows.select(inline(array(structs: _*)), o.as("_ord")).filter(col(id).isNotNull))
+    Out(
+      project((nodes ++ dims.map(_.node)).map(n => when(n.when,
+        struct(Graph.nodeColumns(n.label, n.tenant, n.keys, n.props): _*))), "id"),
+      project((edges ++ dims.map(_.edge)).map(e => when(e.when,
+        struct(Graph.edgeColumns(e.src, e.rel, e.dst, e.tenant, e.props): _*))), "src"))
+  }
+
   /** Run all statements over a workbook, against `storeNodes`/`storeEdges`
     * for the external CMDB prerequisites, and assemble the batch.
     */
@@ -98,9 +147,17 @@ object Ingest {
         col("VI SDK UUID").as("_huid"), col("Object ID").as("_hobjid"), col("_rowno")),
       keys = Seq("_hname", "_hcluster", "_huid"), orderCols = Seq("_rowno")).drop("_rowno")
 
+    // sheet rows whose (Host, Cluster, uid) is a batch host (:143,:156,:167).
+    def onHost(sheet: String) = wb(sheet).join(hostSet,
+      col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
+
     // VMs known to the batch: (uuid, uid) (:244,:255,:267,:274 gates).
     val vmSet = vInfo.select(col("VM UUID").as("_vmuuid"), col("VI SDK UUID").as("_vmuid"))
       .filter(col("_vmuuid").isNotNull).distinct()
+    // sheet rows of a batch VM under a batch vCenter (:255,:267,:274).
+    def ofVm(sheet: String) = wb(sheet)
+      .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
+      .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
 
     // External CMDB prerequisites from the store (refresh-vmware.cypher:101,151).
     val jumboNode = storeNodes
@@ -135,77 +192,35 @@ object Ingest {
       .filter(col("_pool").isNotNull && col("_pool") =!= "")
       .select(col("VI SDK Server").as("_ppvc"), col("Resource pool").as("_pppath")).distinct()
 
-    val prof = sys.env.contains("GRAFT_INGEST_PROF")
-    def tm[A](label: String)(f: => A): A =
-      if (!prof) f else {
-        val t0 = System.nanoTime(); val r = f
-        println(f"[ingest-prof] $label ${(System.nanoTime() - t0) / 1e9}%.3fs"); r
-      }
-    // The 14 statement builders are independent of each other (they share
-    // only the already-built gate frames above), so their construction —
-    // pure driver-side Catalyst analysis, ~3s sequential on the warm q_m5
-    // chain, dominated by stmtVms — runs concurrently. Dataset
-    // construction and analysis on a shared SparkSession is thread-safe
-    // (the supported multi-tenant / parallel-job-submission pattern);
-    // Await preserves the statement order for `ord` determinism.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val parts = Await.result(Future.sequence(Seq(
-      Future(tm("clusters")(stmtClusters(vCluster))),
-      Future(tm("vcversion")(stmtVcVersion(vInfo, vcs))),
-      Future(tm("respools")(stmtResourcePools(rpRows))),
-      Future(tm("hosts")(stmtHosts(hostRows, domainCompany))),
-      Future(tm("ntpdns")(stmtNtpDns(vHost, hostRows))),
-      Future(tm("switches")(stmtSwitches(wb("vSwitch"), hostSet, jumboNode))),
-      Future(tm("portgroups")(stmtPortgroups(wb("vPort"), hostSet))),
-      Future(tm("nics")(stmtNics(wb("vNIC"), hostSet))),
-      Future(tm("vms")(stmtVms(vInfo, dcSet, clusterSet, rpPoolPaths))),
-      Future(tm("datastores")(stmtDatastores(wb("vDatastore"), vcs, hostSet))),
-      Future(tm("disks")(stmtDisks(wb("vDisk"), vcs, vmSet, wb("vDatastore")))),
-      Future(tm("adapters")(stmtAdapters(wb("vNetwork"), vcNames, vmSet, wb("vPort")))),
-      Future(tm("partitions")(stmtPartitions(wb("vPartition"), vcNames, vmSet))),
-      Future(tm("snapshots")(stmtSnapshots(wb("vSnapshot"), vcNames, vmSet)))),
-    ), Duration.Inf)
-
-    // Materialize the statement union ONCE (eager localCheckpoint) before
-    // assemble. Three effects, all measured on the q_m5 full-refresh chain:
-    // (1) the union of ~50 per-statement frames is a several-hundred-node
-    // logical plan, and every one of assemble's chained ops — plus every
-    // downstream consumer of the batch (Refresh reads batch.nodes at three
-    // points; q_m5 at three more) — re-analyzed or re-executed that whole
-    // DAG, so driver planning dominated the refresh (~5 s warm at sf0.1,
-    // > 2x the actual execution); with the barrier the tree collapses to a
-    // leaf. (2) The statements execute exactly once instead of once per
-    // consumer. (3) Lineage is cut, the same discipline Refresh.materialize
-    // already mandates for chained refreshes. The cost — eager execution of
-    // the batch at run() time — is the parquet-write barrier production
-    // refreshes pay anyway (see Refresh.write).
-    // Positional union, not unionByName: every builder emits the fixed
-    // (id, label, tenant, key, props, _ord) / (src, dst, relType, tenant,
-    // props, _ord) order via Graph.nodesFrom*/edgesFrom*, and positional
-    // union skips the per-call by-name resolution pass (26 calls here).
-    // Positional union is only safe when every builder really did emit the
-    // canonical order — node/edge columns are mostly same-typed strings, so
-    // a misordered frame would misalign SILENTLY. One cheap name check per
-    // frame turns that data corruption into a loud error.
-    def checked(frames: Seq[DataFrame], what: String): DataFrame = {
-      val canon = frames.head.columns.toSeq
-      frames.foreach { f =>
-        require(f.columns.toSeq == canon,
-          s"$what builder emitted columns ${f.columns.mkString("(", ",", ")")}; " +
-            s"positional union requires the canonical ${canon.mkString("(", ",", ")")}")
-      }
-      frames.reduce(_ union _)
-    }
-    // The node and edge checkpoints are independent jobs — submit both at
-    // once (concurrent job submission is core Spark; local[n] interleaves
-    // their stages across the same worker threads).
-    val Seq(nodesCk, edgesCk) = Await.result(Future.sequence(Seq(
-      Future(tm("ckpt-nodes")(tm("union-nodes")(checked(parts.map(_._1), "node")).localCheckpoint(true))),
-      Future(tm("ckpt-edges")(tm("union-edges")(checked(parts.map(_._2), "edge")).localCheckpoint(true)))),
-    ), Duration.Inf)
-    assemble(nodesCk, edgesCk)
+    val out = Seq(
+      stmtClusters(vCluster),
+      stmtVcVersion(vInfo, vcs),
+      stmtResourcePools(rpRows),
+      stmtHosts(hostRows, domainCompany),
+      stmtNtpDns(vHost, hostRows),
+      stmtSwitches(onHost("vSwitch"), jumboNode),
+      stmtPortgroups(onHost("vPort")),
+      stmtNics(onHost("vNIC")),
+      stmtVms(vInfo, dcSet, clusterSet, rpPoolPaths),
+      stmtDatastores(wb("vDatastore"), vcs, hostSet),
+      stmtDisks(wb("vDisk"), vcs, vmSet, wb("vDatastore")),
+      stmtAdapters(ofVm("vNetwork"), wb("vPort")),
+      // :265-270
+      stmtVmChild(ofVm("vPartition"), 13, "Vpartition", "Disk", "PARTITION_FOR",
+        Map("disk" -> col("Disk"), "capacity" -> col("Capacity MB"),
+          "consumed" -> col("Consumed MB"), "free" -> col("Free %"))),
+      // :272-277
+      stmtVmChild(ofVm("vSnapshot"), 14, "Vsnapshot", "Name", "SNAPSHOT_OF",
+        Map("name" -> col("Name"), "description" -> col("Description"),
+          "timestamp" -> col("Date / time"), "size" -> col("Size MB (total)")))).reduce(_ ++ _)
+    // Positional union is safe: every frame is one `emit` projection. The
+    // batch barrier (see scaladoc) checkpoints nodes and edges as two jobs
+    // submitted together, so local[n] interleaves their stages.
+    val edges = java.util.concurrent.ForkJoinPool.commonPool().submit(
+      new java.util.concurrent.Callable[DataFrame] {
+        def call(): DataFrame = out.edges.reduce(_ union _).localCheckpoint(true)
+      })
+    assemble(out.nodes.reduce(_ union _).localCheckpoint(true), edges.join())
   }
 
   /** Merge node/edge contributions: props are last-writer-wins per
@@ -232,37 +247,32 @@ object Ingest {
   }
 
   private def uid: Column = col("VI SDK UUID")
-  private def noProps: Map[String, Column] = Map.empty
+  private def id(label: String, keys: Column*): Column = Graph.nodeId(label, keys: _*)
 
   // ---- statement 1: vCluster → vCenter + clusters (:33-41) ----
-  private def stmtClusters(vCluster: DataFrame): (DataFrame, DataFrame) = {
-    val rows = vCluster.filter(uid.isNotNull)
-    val o = ord(1)
-    val vc = Graph.nodesFrom(rows, "Vcenterserver", lit(null), Seq(uid),
-      Map("uid" -> uid, "name" -> col("VI SDK Server")), o)
-    // :36 placeholder pool — identity (vc, path), see scaladoc.
-    val vrp = Graph.nodesFrom(rows.filter(col("VI SDK Server").isNotNull),
-      "Vresourcepool", lit(null), Seq(col("VI SDK Server"), lit("None Configured")),
-      Map("path" -> lit("None Configured"), "name" -> lit("None Configured"),
-        "vc" -> col("VI SDK Server")), o)
-    // :37 placeholder portgroup (label Vmportgroup as written).
-    val vmpg = Graph.nodesFrom(rows, "Vmportgroup", uid, Seq(lit("None Provided"), uid),
-      Map("name" -> lit("None Provided"), "managedby" -> uid), o)
-    val vcc = Graph.nodesFrom(rows.filter(col("Name").isNotNull),
-      "Vcentercluster", uid, Seq(col("Name"), uid),
-      Map("name" -> col("Name"), "managedby" -> uid,
-        "hosts" -> col("OverallStatus"), "cpu" -> col("TotalCpu"),
-        "CpuCored" -> col("NumCpuCores"), "memory" -> col("TotalMemory"),
-        "ha" -> col("HA enabled"), "drs" -> col("DRS enabled")), o)
-    val e = Graph.edgesFrom(rows.filter(col("Name").isNotNull),
-      "Vcentercluster", Seq(col("Name"), uid), "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-    (Seq(vc, vrp, vmpg, vcc).reduce(_ unionByName _), e)
+  private def stmtClusters(vCluster: DataFrame): Out = {
+    val named = col("Name").isNotNull
+    emit(vCluster.filter(uid.isNotNull), ord(1), Seq(
+      NodeSpec("Vcenterserver", lit(null), Seq(uid),
+        Map("uid" -> uid, "name" -> col("VI SDK Server"))),
+      // :36 placeholder pool — identity (vc, path), see scaladoc.
+      NodeSpec("Vresourcepool", lit(null), Seq(col("VI SDK Server"), lit("None Configured")),
+        Map("path" -> lit("None Configured"), "name" -> lit("None Configured"),
+          "vc" -> col("VI SDK Server")), when = col("VI SDK Server").isNotNull),
+      // :37 placeholder portgroup (label Vmportgroup as written).
+      NodeSpec("Vmportgroup", uid, Seq(lit("None Provided"), uid),
+        Map("name" -> lit("None Provided"), "managedby" -> uid)),
+      NodeSpec("Vcentercluster", uid, Seq(col("Name"), uid),
+        Map("name" -> col("Name"), "managedby" -> uid,
+          "hosts" -> col("OverallStatus"), "cpu" -> col("TotalCpu"),
+          "CpuCored" -> col("NumCpuCores"), "memory" -> col("TotalMemory"),
+          "ha" -> col("HA enabled"), "drs" -> col("DRS enabled")), when = named)), Seq(
+      EdgeSpec(id("Vcentercluster", col("Name"), uid), "CONTROLLED_BY_VC",
+        id("Vcenterserver", uid), when = named)))
   }
 
   // ---- statement 2: vInfo → vCenter version/build (:43-51) ----
-  private def stmtVcVersion(vInfo: DataFrame, vcs: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(2)
+  private def stmtVcVersion(vInfo: DataFrame, vcs: DataFrame): Out = {
     // :47 matches the vCenter by NAME, but Vcenterserver identity is uid —
     // resolve name → uid through the vCluster-derived map (inner join = gate).
     val rows = vInfo
@@ -273,45 +283,42 @@ object Ingest {
       .withColumn("_vname", elem(splitLit(col("_vcversion"), " build-"), 0))
       .withColumn("_vbuild", elem(splitLit(col("_vcversion"), " build-"), 1))
       .filter(col("_vname").isNotNull && col("_vbuild").isNotNull)
-    val vcv = Graph.nodesFrom(rows, "Vcenterversion", lit(null), Seq(col("_vname")),
-      Map("name" -> col("_vname")), o)
-    val vcb = Graph.nodesFrom(rows, "Vcenterbuild", lit(null), Seq(col("_vbuild")),
-      Map("build" -> col("_vbuild")), o)
-    val e1 = Graph.edgesFrom(rows, "Vcenterbuild", Seq(col("_vbuild")), "BUILD_OF",
-      "Vcenterversion", Seq(col("_vname")), lit(null), noProps, o)
-    val e2 = Graph.edgesFromIds(rows, Graph.nodeId("Vcenterserver", col("_uid")),
-      "IS_VCENTER_BUILD", Graph.nodeId("Vcenterbuild", col("_vbuild")), lit(null), noProps, o)
-    (vcv.unionByName(vcb), e1.unionByName(e2))
+    val build = id("Vcenterbuild", col("_vbuild"))
+    emit(rows, ord(2), Seq(
+      NodeSpec("Vcenterversion", lit(null), Seq(col("_vname")), Map("name" -> col("_vname"))),
+      NodeSpec("Vcenterbuild", lit(null), Seq(col("_vbuild")), Map("build" -> col("_vbuild")))), Seq(
+      EdgeSpec(build, "BUILD_OF", id("Vcenterversion", col("_vname")), tenant = lit(null)),
+      EdgeSpec(id("Vcenterserver", col("_uid")), "IS_VCENTER_BUILD", build, tenant = lit(null))))
   }
 
   // ---- statement 3: vRP → datacenters + resource-pool tree (:53-71) ----
-  private def stmtResourcePools(rows: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtResourcePools(rpRows: DataFrame): Out = {
     val o = ord(3)
-    val vdc = Graph.nodesFrom(rows, "Vspheredatacenter", uid, Seq(col("_dc"), uid),
-      Map("name" -> col("_dc"), "managedby" -> uid), o)
-    val eLoc = Graph.edgesFrom(rows, "Vcentercluster", Seq(col("_cluster"), uid), "LOCATED_IN_DC",
-      "Vspheredatacenter", Seq(col("_dc"), uid), uid, noProps, o)
-    val eCtl = Graph.edgesFrom(rows, "Vspheredatacenter", Seq(col("_dc"), uid), "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-
-    val poolRows = rows
+    val rows = rpRows
       .withColumn("_pool", lastElem(splitLit(col("_respool"), "/")))
       .withColumn("_parentpath", expr("replace(_respool, concat('/', _pool), '')"))
       .withColumn("_parent", lastElem(splitLit(col("_parentpath"), "/")))
-      .filter(col("_pool") =!= "") // :65
+    val isPool = col("_pool") =!= "" // :65
     // Canonical pool identity (vc, path); path = the full `Resource pool`.
-    val vrp = Graph.nodesFrom(poolRows, "Vresourcepool", lit(null),
-      Seq(col("VI SDK Server"), col("Resource pool")),
-      Map("name" -> col("_pool"), "cluster" -> col("_cluster"), "dc" -> col("_dc"),
-        "vc" -> col("VI SDK Server"), "path" -> col("Resource pool"),
-        "vms" -> col("# VMs"), "cpus" -> col("# vCPUs"), "memcfg" -> col("Mem Configured")), o)
-    val eMember = Graph.edgesFrom(poolRows, "Vresourcepool",
-      Seq(col("VI SDK Server"), col("Resource pool")), "MEMBER_OF_CLUSTER",
-      "Vcentercluster", Seq(col("_cluster"), uid), uid, noProps, o)
+    val pool = id("Vresourcepool", col("VI SDK Server"), col("Resource pool"))
+    val dc = id("Vspheredatacenter", col("_dc"), uid)
+    val main = emit(rows, o, Seq(
+      NodeSpec("Vspheredatacenter", uid, Seq(col("_dc"), uid),
+        Map("name" -> col("_dc"), "managedby" -> uid)),
+      NodeSpec("Vresourcepool", lit(null), Seq(col("VI SDK Server"), col("Resource pool")),
+        Map("name" -> col("_pool"), "cluster" -> col("_cluster"), "dc" -> col("_dc"),
+          "vc" -> col("VI SDK Server"), "path" -> col("Resource pool"),
+          "vms" -> col("# VMs"), "cpus" -> col("# vCPUs"), "memcfg" -> col("Mem Configured")),
+        when = isPool)), Seq(
+      EdgeSpec(id("Vcentercluster", col("_cluster"), uid), "LOCATED_IN_DC", dc),
+      EdgeSpec(dc, "CONTROLLED_BY_VC", id("Vcenterserver", uid)),
+      EdgeSpec(pool, "MEMBER_OF_CLUSTER", id("Vcentercluster", col("_cluster"), uid),
+        when = isPool)))
     // :69-71 parent pool (inner MATCH) — matched by (name, cluster, dc, vc);
     // resolve to the parent's canonical (vc, full path) identity. Duplicate
     // (name,cluster,dc,vc) parents collapse last-writer, mirroring Neo4j's
     // row-order-dependent path property under the :66 merge key.
+    val poolRows = rows.filter(isPool)
     val parentCands = Upsert.dedupeLastWriter(
       poolRows.select(col("VI SDK Server").as("_pvc"), col("_cluster").as("_pcl"),
         col("_dc").as("_pdc"), col("_pool").as("_pname"),
@@ -320,91 +327,57 @@ object Ingest {
     val childRows = poolRows.join(parentCands,
       col("VI SDK Server") === col("_pvc") && col("_cluster") === col("_pcl") &&
         col("_dc") === col("_pdc") && col("_parent") === col("_pname"))
-    val eChild = Graph.edgesFromIds(childRows,
-      Graph.nodeId("Vresourcepool", col("VI SDK Server"), col("Resource pool")),
-      "CHILD_RESOURCE_POOL",
-      Graph.nodeId("Vresourcepool", col("_pvc"), col("_ppfull")), uid, noProps, o)
-    (vdc.unionByName(vrp), Seq(eLoc, eCtl, eMember, eChild).reduce(_ unionByName _))
+    main ++ emit(childRows, o, Nil, Seq(
+      EdgeSpec(pool, "CHILD_RESOURCE_POOL", id("Vresourcepool", col("_pvc"), col("_ppfull")))))
   }
 
   // ---- statement 4: vHost → hosts + dimension nodes (:73-103) ----
-  private def stmtHosts(hostRows: DataFrame, domainCompany: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtHosts(hostRows: DataFrame, domainCompany: DataFrame): Out = {
     val o = ord(4)
     val rows = hostRows.filter(col("Object ID").isNotNull)
-    val hostKeys = Seq(col("Object ID"), uid)
-    val vmh = Graph.nodesFrom(rows, "Vspherehost", uid, hostKeys,
-      Map("objid" -> col("Object ID"), "managedby" -> uid,
-        "name" -> col("Host"), "hosts" -> col("NumHosts"), "cpu" -> col("# CPU"),
-        "cores" -> col("# Cores"), "memory" -> col("# Memory"),
-        "memusage" -> col("Memory usage %"), "vms" -> col("# VMs"),
-        "license" -> col("Assigned License(s)"), "chipset" -> col("Max EVC"),
-        "boot" -> col("Boot time"), "servicetag" -> col("Service tag")), o)
-
-    def dim(label: String, keyCol: Column, propName: String = "name") = Graph.nodesFrom(
-      rows.filter(keyCol.isNotNull), label, lit(null), Seq(keyCol), Map(propName -> keyCol), o)
-    def hostEdge(rel: String, dstLabel: String, dstKey: Column) = Graph.edgesFrom(
-      rows.filter(dstKey.isNotNull), "Vspherehost", hostKeys, rel, dstLabel, Seq(dstKey),
-      uid, noProps, o)
-
+    val host = id("Vspherehost", col("Object ID"), uid)
     val esx = splitLit(col("ESX Version"), " build-")
     val vendor = coalesce(col("Vendor"), lit("None Provided"))
     val model = coalesce(col("Model"), lit("None Provided"))
     val biosV = coalesce(col("BIOS Version"), lit("None Provided"))
+    val bios = id("Biosversion", biosV, col("BIOS Date"))
 
-    val nodes = Seq(
-      vmh,
-      dim("Vconfigstatus", col("Config status")),
-      dim("Vspherecpupwrmgpol", col("`Current CPU power man. policy`")),
-      dim("Vspherehostpwrmgpol", col("Host Power Policy")),
-      dim("Cpumodel", col("CPU Model")),
-      dim("Vsphereesxversion", elem(esx, 0)),
-      Graph.nodesFrom(rows.filter(elem(esx, 1).isNotNull), "Vsphereesxbuild", lit(null),
-        Seq(elem(esx, 1)), Map("build" -> elem(esx, 1)), o),
-      dim("Crmmanufacturer", vendor),
-      dim("Crmmodel", model),
-      Graph.nodesFrom(rows, "Biosversion", lit(null), Seq(biosV, col("BIOS Date")),
-        Map("version" -> biosV, "date" -> col("BIOS Date")), o))
-
-    val eCluster = Graph.edgesFrom(rows, "Vspherehost", hostKeys, "MEMBER_OF_CLUSTER",
-      "Vcentercluster", Seq(col("Cluster"), uid), uid, noProps, o)
-    val eVc = Graph.edgesFrom(rows, "Vspherehost", hostKeys, "CONTROLLED_BY_VC",
-      "Vcenterserver", Seq(uid), uid, noProps, o)
-    val eBuildOf = Graph.edgesFrom(rows.filter(elem(esx, 1).isNotNull && elem(esx, 0).isNotNull),
-      "Vsphereesxbuild", Seq(elem(esx, 1)), "BUILD_OF", "Vsphereesxversion", Seq(elem(esx, 0)),
-      uid, noProps, o)
-    val eBios = Graph.edgesFrom(rows, "Biosversion", Seq(biosV, col("BIOS Date")),
-      "MANUFACTURED_BY", "Crmmanufacturer", Seq(vendor), uid, noProps, o)
+    val main = emit(rows, o, Seq(
+      NodeSpec("Vspherehost", uid, Seq(col("Object ID"), uid),
+        Map("objid" -> col("Object ID"), "managedby" -> uid,
+          "name" -> col("Host"), "hosts" -> col("NumHosts"), "cpu" -> col("# CPU"),
+          "cores" -> col("# Cores"), "memory" -> col("# Memory"),
+          "memusage" -> col("Memory usage %"), "vms" -> col("# VMs"),
+          "license" -> col("Assigned License(s)"), "chipset" -> col("Max EVC"),
+          "boot" -> col("Boot time"), "servicetag" -> col("Service tag"))),
+      NodeSpec("Biosversion", lit(null), Seq(biosV, col("BIOS Date")),
+        Map("version" -> biosV, "date" -> col("BIOS Date")))), Seq(
+      EdgeSpec(host, "MEMBER_OF_CLUSTER", id("Vcentercluster", col("Cluster"), uid)),
+      EdgeSpec(host, "CONTROLLED_BY_VC", id("Vcenterserver", uid)),
+      EdgeSpec(id("Vsphereesxbuild", elem(esx, 1)), "BUILD_OF", id("Vsphereesxversion", elem(esx, 0)),
+        when = elem(esx, 1).isNotNull && elem(esx, 0).isNotNull),
+      EdgeSpec(bios, "MANUFACTURED_BY", id("Crmmanufacturer", vendor)),
+      EdgeSpec(host, "BIOS_VERSION", bios)), dims = Seq(
+      Dim(host, "CONFIG_STATUS", "Vconfigstatus", col("Config status")),
+      Dim(host, "IN_CPU_POW_MGMT", "Vspherecpupwrmgpol", col("`Current CPU power man. policy`")),
+      Dim(host, "IN_HOST_POW_PLCY", "Vspherehostpwrmgpol", col("Host Power Policy")),
+      Dim(host, "HAS_CPU", "Cpumodel", col("CPU Model")),
+      Dim(host, "IS_ESX_BUILD", "Vsphereesxbuild", elem(esx, 1), prop = "build"),
+      Dim(host, "IS_ESX_VERSION", "Vsphereesxversion", elem(esx, 0)),
+      Dim(host, "MANUFACTURED_BY", "Crmmanufacturer", vendor),
+      Dim(host, "ASSET_MODEL", "Crmmodel", model)))
     // :100-103 stage 2 — only rows whose Domain matches a CMDB Clientdomain
     // that is linked to a Company (D3 row-elimination: earlier writes stand).
     val domainRows = rows
       .withColumn("_domain", coalesce(col("Domain"), lit("None Provided")))
       .join(domainCompany, col("_domain") === col("_cdname"))
-    val eDomain = Graph.edgesFromIds(domainRows,
-      Graph.nodeId("Vspherehost", hostKeys: _*), "OF_DOMAIN", col("_cdid"), uid, noProps, o)
-    val eCompany = Graph.edgesFromIds(domainRows,
-      Graph.nodeId("Vspherehost", hostKeys: _*), "ESX_HOST_FOR", col("_coid"), uid, noProps, o)
-
-    val edges = Seq(
-      eCluster, eVc,
-      hostEdge("CONFIG_STATUS", "Vconfigstatus", col("Config status")),
-      hostEdge("IN_CPU_POW_MGMT", "Vspherecpupwrmgpol", col("`Current CPU power man. policy`")),
-      hostEdge("IN_HOST_POW_PLCY", "Vspherehostpwrmgpol", col("Host Power Policy")),
-      hostEdge("HAS_CPU", "Cpumodel", col("CPU Model")),
-      hostEdge("IS_ESX_BUILD", "Vsphereesxbuild", elem(esx, 1)),
-      hostEdge("IS_ESX_VERSION", "Vsphereesxversion", elem(esx, 0)),
-      eBuildOf,
-      hostEdge("MANUFACTURED_BY", "Crmmanufacturer", vendor),
-      hostEdge("ASSET_MODEL", "Crmmodel", model),
-      eBios,
-      Graph.edgesFrom(rows, "Vspherehost", hostKeys, "BIOS_VERSION",
-        "Biosversion", Seq(biosV, col("BIOS Date")), uid, noProps, o),
-      eDomain, eCompany)
-    (nodes.reduce(_ unionByName _), edges.reduce(_ unionByName _))
+    main ++ emit(domainRows, o, Nil, Seq(
+      EdgeSpec(host, "OF_DOMAIN", col("_cdid")),
+      EdgeSpec(host, "ESX_HOST_FOR", col("_coid"))))
   }
 
   // ---- statements 5-8: NTP/DNS servers by IP|FQDN (:105-139) ----
-  private def stmtNtpDns(vHost: DataFrame, hostRows: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(5)
+  private def stmtNtpDns(vHost: DataFrame, hostRows: DataFrame): Out = {
     // :107 gate: host by (objid, name) — no managedby in the pattern; the
     // batch host set is keyed (objid, uid), name must also match.
     val hs = hostRows.select(col("Object ID").as("_gobjid"), col("Host").as("_ghost"),
@@ -412,401 +385,267 @@ object Ingest {
     val gated = vHost.join(hs,
       col("Object ID") === col("_gobjid") && col("Host") === col("_ghost") && uid === col("_guid"),
       "left_semi")
-    val hostKeys = Seq(col("Object ID"), uid)
+    val host = id("Vspherehost", col("Object ID"), uid)
 
-    def family(listCol: String, rel: String, label: String): (DataFrame, DataFrame) = {
+    def family(listCol: String, rel: String, label: String): Out = {
       val exploded = gated
         .select(col("Object ID"), uid, col("_rowno"),
           explode(splitLit(col(listCol), ",")).as("_raw"))
         .withColumn("_val", trim(col("_raw")))
         .filter(col("_val").isNotNull)
-      val ip = exploded.filter(col("_val").rlike(Ipv4Full))
-      val fqdn = exploded.filter(!col("_val").rlike(Ipv4Full))
+      val isIp = col("_val").rlike(Ipv4Full)
       // Ntpserver{ipaddress:x} and Ntpserver{fqdn:x} are distinct identity
       // domains on the same label (different key property) — the key tuple
       // carries the property name to keep them apart.
-      val nIp = Graph.nodesFrom(ip, label, lit(null), Seq(lit("ipaddress"), col("_val")),
-        Map("ipaddress" -> col("_val")), o)
-      val nF = Graph.nodesFrom(fqdn, label, lit(null), Seq(lit("fqdn"), col("_val")),
-        Map("fqdn" -> col("_val")), o)
-      val eIp = Graph.edgesFrom(ip, "Vspherehost", hostKeys, rel, label,
-        Seq(lit("ipaddress"), col("_val")), uid, noProps, o)
-      val eF = Graph.edgesFrom(fqdn, "Vspherehost", hostKeys, rel, label,
-        Seq(lit("fqdn"), col("_val")), uid, noProps, o)
-      (nIp.unionByName(nF), eIp.unionByName(eF))
+      val byKind = Seq("ipaddress" -> isIp, "fqdn" -> !isIp)
+      emit(exploded, ord(5),
+        byKind.map { case (k, is) =>
+          NodeSpec(label, lit(null), Seq(lit(k), col("_val")), Map(k -> col("_val")), when = is)
+        },
+        byKind.map { case (k, is) =>
+          EdgeSpec(host, rel, id(label, lit(k), col("_val")), when = is)
+        })
     }
-    val (ntpN, ntpE) = family("NTP Server(s)", "USES_NTP", "Ntpserver")
-    val (dnsN, dnsE) = family("DNS Servers", "USES_DNS", "Dnsserver")
-    (ntpN.unionByName(dnsN), ntpE.unionByName(dnsE))
+    family("NTP Server(s)", "USES_NTP", "Ntpserver") ++
+      family("DNS Servers", "USES_DNS", "Dnsserver")
   }
 
   // ---- statement 9: vSwitch (:141-152) ----
-  private def stmtSwitches(
-      vSwitch: DataFrame, hostSet: DataFrame, jumboNode: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtSwitches(onHost: DataFrame, jumboNode: DataFrame): Out = {
     val o = ord(6)
-    val rows = vSwitch.join(hostSet,
-      col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
-      .filter(col("Switch").isNotNull)
-    val swKeys = Seq(col("Switch"), col("Host"))
-    val vsw = Graph.nodesFrom(rows, "Vswitch", lit(null), swKeys,
-      Map("name" -> col("Switch"), "host" -> col("Host"),
-        "ports" -> col("# Ports"), "freeports" -> col("Free Ports"),
-        "promiscuous" -> col("Promiscuous Mode"), "macchanges" -> col("Mac Changes"),
-        "forged" -> col("Forged Transmits"), "shaping" -> col("Traffic Shaping"),
-        "notifysw" -> col("Notify Switch"), "mtu" -> col("MTU").cast("int"),
-        "offload" -> col("Offload")), o)
-    val vsp = Graph.nodesFrom(rows.filter(col("Policy").isNotNull), "Vlbpolicy", lit(null),
-      Seq(col("Policy")), Map("name" -> col("Policy")), o)
-    val eHost = Graph.edgesFromIds(rows, Graph.nodeId("Vswitch", swKeys: _*), "VSWITCH_FOR_HOST",
-      Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o)
-    val eLb = Graph.edgesFrom(rows.filter(col("Policy").isNotNull), "Vswitch", swKeys,
-      "LOAD_BALANCING_POLICY", "Vlbpolicy", Seq(col("Policy")), uid, noProps, o)
+    val rows = onHost.filter(col("Switch").isNotNull)
+    val switch = id("Vswitch", col("Switch"), col("Host"))
+    val main = emit(rows, o, Seq(
+      NodeSpec("Vswitch", lit(null), Seq(col("Switch"), col("Host")),
+        Map("name" -> col("Switch"), "host" -> col("Host"),
+          "ports" -> col("# Ports"), "freeports" -> col("Free Ports"),
+          "promiscuous" -> col("Promiscuous Mode"), "macchanges" -> col("Mac Changes"),
+          "forged" -> col("Forged Transmits"), "shaping" -> col("Traffic Shaping"),
+          "notifysw" -> col("Notify Switch"), "mtu" -> col("MTU").cast("int"),
+          "offload" -> col("Offload")))), Seq(
+      EdgeSpec(switch, "VSWITCH_FOR_HOST", id("Vspherehost", col("_hobjid"), uid))),
+      dims = Seq(Dim(switch, "LOAD_BALANCING_POLICY", "Vlbpolicy", col("Policy"))))
     // :150-152 — only if the external Jumboframes{enabled} node exists.
     val jumboRows = rows.filter(col("MTU").cast("int") >= 9000).crossJoin(broadcast(jumboNode))
-    val eJumbo = Graph.edgesFromIds(jumboRows, Graph.nodeId("Vswitch", swKeys: _*),
-      "HAS_JUMBO_FRAMES", col("_jumboid"), uid, noProps, o)
-    (vsw.unionByName(vsp), Seq(eHost, eLb, eJumbo).reduce(_ unionByName _))
+    main ++ emit(jumboRows, o, Nil, Seq(EdgeSpec(switch, "HAS_JUMBO_FRAMES", col("_jumboid"))))
   }
 
   // ---- statement 10: vPort → portgroups (:154-163) ----
-  private def stmtPortgroups(vPort: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(7)
+  private def stmtPortgroups(onHost: DataFrame): Out = {
     // Gate: host+cluster ∧ switch (name, host) — the switch comes from the
     // batch's vSwitch statement, keyed (Switch, Host); a vPort row whose
     // switch was not ingested fails the :156 MATCH.
-    val rows = vPort.join(hostSet,
-      col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
-      .filter(col("Port Group").isNotNull)
+    val rows = onHost.filter(col("Port Group").isNotNull)
     val pgKeys = Seq(col("Port Group"), col("Host"), uid)
-    val policy = coalesce(col("Policy"), lit("None Provided"))
-    val vpg = Graph.nodesFrom(rows, "Vportgroup", uid, Seq(col("Port Group"), uid),
-      Map("name" -> col("Port Group"), "managedby" -> uid), o)
-    val pg = Graph.nodesFrom(rows, "Vhostportgroup", uid, pgKeys,
-      Map("name" -> col("Port Group"), "host" -> col("Host"), "managedby" -> uid,
-        "vlan" -> col("VLAN"), "promiscuous" -> col("Promiscuous Mode"),
-        "macchanges" -> col("Mac Changes"), "forged" -> col("Forged Transmits"),
-        "shaping" -> col("Traffic Shaping")), o)
-    val vsp = Graph.nodesFrom(rows, "Vlbpolicy", lit(null), Seq(policy),
-      Map("name" -> policy), o)
-    val eHostPg = Graph.edgesFrom(rows, "Vhostportgroup", pgKeys, "HOST_PG_FOR",
-      "Vportgroup", Seq(col("Port Group"), uid), uid, noProps, o)
-    val eStd = Graph.edgesFromIds(rows, Graph.nodeId("Vhostportgroup", pgKeys: _*),
-      "STANDARD_PG_ON", Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o)
-    val eLb = Graph.edgesFrom(rows, "Vswitch", Seq(col("Switch"), col("Host")),
-      "LOAD_BALANCING_POLICY", "Vlbpolicy", Seq(policy), uid, noProps, o)
-    (Seq(vpg, pg, vsp).reduce(_ unionByName _), Seq(eHostPg, eStd, eLb).reduce(_ unionByName _))
+    val hostPg = id("Vhostportgroup", pgKeys: _*)
+    emit(rows, ord(7), Seq(
+      NodeSpec("Vportgroup", uid, Seq(col("Port Group"), uid),
+        Map("name" -> col("Port Group"), "managedby" -> uid)),
+      NodeSpec("Vhostportgroup", uid, pgKeys,
+        Map("name" -> col("Port Group"), "host" -> col("Host"), "managedby" -> uid,
+          "vlan" -> col("VLAN"), "promiscuous" -> col("Promiscuous Mode"),
+          "macchanges" -> col("Mac Changes"), "forged" -> col("Forged Transmits"),
+          "shaping" -> col("Traffic Shaping")))), Seq(
+      EdgeSpec(hostPg, "HOST_PG_FOR", id("Vportgroup", col("Port Group"), uid)),
+      EdgeSpec(hostPg, "STANDARD_PG_ON", id("Vspherehost", col("_hobjid"), uid))), dims = Seq(
+      Dim(id("Vswitch", col("Switch"), col("Host")), "LOAD_BALANCING_POLICY", "Vlbpolicy",
+        coalesce(col("Policy"), lit("None Provided")))))
   }
 
   // ---- statement 11: vNIC (:165-176) ----
-  private def stmtNics(vNIC: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(8)
-    val rows = vNIC.join(hostSet,
-      col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
-      .filter(col("Network Device").isNotNull)
-      .withColumn("_linkspeed", coalesce(col("Speed"), lit("No link")))
-      .withColumn("_nicdriver", coalesce(col("Driver"), lit("None Provided")))
-    val nicKeys = Seq(col("Network Device"), col("Host"))
-    val vmnic = Graph.nodesFrom(rows, "Vmnic", lit(null), nicKeys,
-      Map("name" -> col("Network Device"), "host" -> col("Host"),
-        "mac" -> col("MAC"), "wake" -> col("WakeOn"), "pci" -> col("PCI")), o)
-    val vnd = Graph.nodesFrom(rows, "Vmnicdriver", lit(null), Seq(col("_nicdriver")),
-      Map("name" -> col("_nicdriver")), o)
-    val vns = Graph.nodesFrom(rows, "Vmnicspeed", lit(null), Seq(col("_linkspeed")),
-      Map("name" -> col("_linkspeed")), o)
-    val e = Seq(
-      Graph.edgesFrom(rows, "Vmnic", nicKeys, "USES_DRIVER", "Vmnicdriver",
-        Seq(col("_nicdriver")), uid, noProps, o),
-      Graph.edgesFrom(rows, "Vmnic", nicKeys, "LINK_SPEED", "Vmnicspeed",
-        Seq(col("_linkspeed")), uid, noProps, o),
-      Graph.edgesFromIds(rows, Graph.nodeId("Vmnic", nicKeys: _*), "PNIC_OF_HOST",
-        Graph.nodeId("Vspherehost", col("_hobjid"), uid), uid, noProps, o),
-      Graph.edgesFrom(rows, "Vswitch", Seq(col("Switch"), col("Host")), "NETWORK_ADAPTERS",
-        "Vmnic", nicKeys, uid, noProps, o))
-    (Seq(vmnic, vnd, vns).reduce(_ unionByName _), e.reduce(_ unionByName _))
+  private def stmtNics(onHost: DataFrame): Out = {
+    val rows = onHost.filter(col("Network Device").isNotNull)
+    val nic = id("Vmnic", col("Network Device"), col("Host"))
+    emit(rows, ord(8), Seq(
+      NodeSpec("Vmnic", lit(null), Seq(col("Network Device"), col("Host")),
+        Map("name" -> col("Network Device"), "host" -> col("Host"),
+          "mac" -> col("MAC"), "wake" -> col("WakeOn"), "pci" -> col("PCI")))), Seq(
+      EdgeSpec(nic, "PNIC_OF_HOST", id("Vspherehost", col("_hobjid"), uid)),
+      EdgeSpec(id("Vswitch", col("Switch"), col("Host")), "NETWORK_ADAPTERS", nic)), dims = Seq(
+      Dim(nic, "USES_DRIVER", "Vmnicdriver", coalesce(col("Driver"), lit("None Provided"))),
+      Dim(nic, "LINK_SPEED", "Vmnicspeed", coalesce(col("Speed"), lit("No link")))))
   }
 
   // ---- statement 12: vInfo → VMs (:178-224) — the most complex one ----
   private def stmtVms(
-      vInfo: DataFrame, dcSet: DataFrame, clusterSet: DataFrame,
-      rpPoolPaths: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(9)
-    val rows0 = vInfo.filter(col("VM UUID").isNotNull)
-      .withColumn("_folderdc", elem(splitLit(col("Folder"), "/"), 1))
-      .withColumn("_pooldepth", size(splitLit(col("Resource pool"), "/")))
-      .withColumn("_folderdepth", size(splitLit(col("Folder"), "/")))
-      .withColumn("_poolcluster", elem(splitLit(col("Resource pool"), "/"), 2))
+      vInfo: DataFrame, dcSet: DataFrame, clusterSet: DataFrame, rpPoolPaths: DataFrame): Out = {
     // :180-181 OPTIONAL MATCH dc/cluster on derived keys (left joins).
-    // Eagerly checkpointed: the 30+ node/edge frames below all derive from
-    // `rows`, and without the barrier each one re-ANALYZES this join tree
-    // at construction and re-EXECUTES it inside the statement-union job
-    // (exchange reuse is best-effort, not guaranteed). With the leaf, the
-    // scan+joins run exactly once — measured 1.4s → ~0.3s construction on
-    // the warm q_m5 chain. Cost model is the same as run()'s union
-    // barrier: one eager job over one statement's rows.
-    val rows = rows0
+    val rows = vInfo.filter(col("VM UUID").isNotNull)
+      .withColumn("_folderdc", elem(splitLit(col("Folder"), "/"), 1))
+      .withColumn("_poolcluster", elem(splitLit(col("Resource pool"), "/"), 2))
       .join(dcSet, col("_folderdc") === col("_dcname") && uid === col("_dcuid"), "left")
-      .withColumn("_hasdc", col("_dcname").isNotNull)
       .join(clusterSet, col("_poolcluster") === col("_ccname") && uid === col("_ccuid"), "left")
-      .withColumn("_hascc", col("_ccname").isNotNull)
-      .localCheckpoint(true)
 
-    val vmKeys = Seq(col("VM UUID"), uid)
-    val vmId = Graph.nodeId("Virtualmachine", vmKeys: _*)
-    val vm = Graph.nodesFrom(rows, "Virtualmachine", uid, vmKeys,
-      Map("uuid" -> col("VM UUID"), "managedby" -> uid,
-        "name" -> col("VM"), "fqdn" -> col("DNS Name"), "poweron" -> col("PowerOn"),
-        "changedon" -> col("Change Version"), "note" -> col("Annotation"),
-        "vmid" -> col("VM ID"), "needsconsolidation" -> col("Consolidation Needed"),
-        "cpus" -> col("CPUs"), "memory" -> col("Memory").cast("int"),
-        "nics" -> col("NICs").cast("int"), "disks" -> col("Disks").cast("int"),
-        "cbt" -> col("CBT")), o)
-
-    def dim(label: String, keyCol: Column, propName: String = "name") = Graph.nodesFrom(
-      rows.filter(keyCol.isNotNull), label, lit(null), Seq(keyCol), Map(propName -> keyCol), o)
-    def vmEdge(rel: String, dstLabel: String, dstKeys: Seq[Column],
-        filter: Column = lit(true), props: Map[String, Column] = noProps) =
-      Graph.edgesFrom(rows.filter(filter && dstKeys.map(_.isNotNull).reduce(_ && _)),
-        "Virtualmachine", vmKeys, rel, dstLabel, dstKeys, uid, props, o)
-
-    val vcpuName = concat(col("CPUs"), lit(" vCPUs"))
-    val hwver = col("HW version").cast("int")
-
-    // :199-203 FOREACH conditional writes (D2 → filtered branches).
-    val poolGuard = col("Resource pool").isNotNull && col("_pooldepth") > 4
-    val folderGuard = col("Folder").isNotNull && col("_folderdepth") > 2
-    val poolPath = coalesce(col("Resource pool"), lit("None Configured"))
-    val poolNodes = Graph.nodesFrom(rows.filter(poolGuard), "Vresourcepool", lit(null),
-      Seq(col("VI SDK Server"), poolPath),
-      Map("path" -> poolPath, "vc" -> col("VI SDK Server"),
-        "name" -> lastElem(splitLit(col("Resource pool"), "/"))), o)
-    val folderNodes = Graph.nodesFrom(rows.filter(folderGuard), "Vfolder", lit(null),
-      Seq(col("Folder")),
-      Map("path" -> col("Folder"), "name" -> lastElem(splitLit(col("Folder"), "/"))), o)
-
-    val nodes = Seq(
-      vm,
-      Graph.nodesFrom(rows.filter(col("CPUs").isNotNull), "Vcpus", lit(null),
-        Seq(vcpuName, col("CPUs").cast("int")),
-        Map("name" -> vcpuName, "qty" -> col("CPUs").cast("int")), o),
-      Graph.nodesFrom(rows.filter(hwver.isNotNull), "Vhwver", lit(null), Seq(hwver),
-        Map("name" -> hwver), o),
-      dim("Vconnectionstate", col("Connection state")),
-      dim("Vconfigstatus", col("Config status")),
-      dim("Vmpwrstate", col("Powerstate")),
-      dim("Vmpgueststate", col("Guest state")),
-      dim("Vmheartbeat", col("Heartbeat")),
-      poolNodes,
-      folderNodes,
-      // :202-203 — the FOREACH guard is exists(col), so the coalesce default
-      // is unreachable; null columns create no node.
-      dim("Vmos", col("OS according to the VMware Tools")),
-      dim("Vmos", col("OS according to the configuration file")),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #1"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #1"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #2"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #2"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #3"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #3"), lit("Not Configured")), "managedby" -> uid), o),
-      Graph.nodesFrom(rows, "Vportgroup", uid,
-        Seq(coalesce(col("Network #4"), lit("Not Configured")), uid),
-        Map("name" -> coalesce(col("Network #4"), lit("Not Configured")), "managedby" -> uid), o))
+    // :199-203 FOREACH conditional writes (D2 → guarded specs).
+    val poolGuard = col("Resource pool").isNotNull && size(splitLit(col("Resource pool"), "/")) > 4
+    val folderGuard = col("Folder").isNotNull && size(splitLit(col("Folder"), "/")) > 2
 
     // :214-217 parent wiring — against the batch's full folder/pool sets
     // (order-independent recast of the per-row eager visibility, §3.3).
+    // Every joined side is distinct on its keys, so `wired` has exactly
+    // `rows`' rows and carries the statement's whole emission.
     val folderPaths = rows.filter(folderGuard).select(col("Folder").as("_fpath")).distinct()
     val poolPaths = rows.filter(poolGuard)
       .select(col("VI SDK Server").as("_ppvc"), col("Resource pool").as("_pppath"))
       .unionByName(rpPoolPaths)
       .distinct()
-
+    val fp2 = folderPaths.select(col("_fpath").as("_fppath2"))
+    val pp2 = poolPaths.select(col("_ppvc").as("_ppvc2"), col("_pppath").as("_pppath2"))
     val wired = rows
       .join(folderPaths, col("Folder") === col("_fpath"), "left")
-      .withColumn("_hasfolder", col("_fpath").isNotNull)
       .withColumn("_fname", lastElem(splitLit(col("_fpath"), "/")))
       .withColumn("_fparent", expr("replace(_fpath, concat('/', _fname), '')"))
       .join(poolPaths, col("VI SDK Server") === col("_ppvc") && col("Resource pool") === col("_pppath"), "left")
-      .withColumn("_haspool", col("_pppath").isNotNull)
       .withColumn("_ppname", lastElem(splitLit(col("_pppath"), "/")))
       .withColumn("_ppparent", expr("replace(_pppath, concat('/', _ppname), '')"))
-    val fp2 = folderPaths.select(col("_fpath").as("_fppath2"))
-    val pp2 = poolPaths.select(col("_ppvc").as("_ppvc2"), col("_pppath").as("_pppath2"))
-    val wired2 = wired
       .join(fp2, col("_fparent") === col("_fppath2"), "left")
-      .withColumn("_hasparentfolder", col("_fppath2").isNotNull)
       .join(pp2, col("_ppvc") === col("_ppvc2") && col("_ppparent") === col("_pppath2"), "left")
-      .withColumn("_hasparentpool", col("_pppath2").isNotNull)
+    val hasDc = col("_dcname").isNotNull
+    val hasCc = col("_ccname").isNotNull
+    val hasFolder = col("_fpath").isNotNull
+    val hasParentFolder = col("_fppath2").isNotNull
+    val hasPool = col("_pppath").isNotNull
+    val hasParentPool = col("_pppath2").isNotNull
 
-    val folderId = Graph.nodeId("Vfolder", col("_fpath"))
-    val parentFolderId = Graph.nodeId("Vfolder", col("_fparent"))
-    val dcId = Graph.nodeId("Vspheredatacenter", col("_dcname"), uid)
-    val poolId = Graph.nodeId("Vresourcepool", col("_ppvc"), col("_pppath"))
-    val parentPoolId = Graph.nodeId("Vresourcepool", col("_ppvc"), col("_ppparent"))
-    val ccId = Graph.nodeId("Vcentercluster", col("_ccname"), uid)
+    val vm = id("Virtualmachine", col("VM UUID"), uid)
+    val vcpuName = concat(col("CPUs"), lit(" vCPUs"))
+    val vcpuQty = col("CPUs").cast("int")
+    val poolPath = coalesce(col("Resource pool"), lit("None Configured"))
+    val networks = (1 to 4).map(i => coalesce(col(s"Network #$i"), lit("Not Configured")))
+    val folder = id("Vfolder", col("_fpath"))
+    val dc = id("Vspheredatacenter", col("_dcname"), uid)
+    val pool = id("Vresourcepool", col("_ppvc"), col("_pppath"))
+    val cluster = id("Vcentercluster", col("_ccname"), uid)
 
-    def wiredEdge(cond: Column, srcId: Column, rel: String, dstId: Column) =
-      Graph.edgesFromIds(wired2.filter(cond), srcId, rel, dstId, uid, noProps, o)
-
-    val edges = Seq(
-      vmEdge("HW_VERSION", "Vhwver", Seq(hwver),
-        props = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
-      vmEdge("HAS_VCPUS", "Vcpus", Seq(vcpuName, col("CPUs").cast("int"))),
-      vmEdge("CONNECTION_STATE", "Vconnectionstate", Seq(col("Connection state"))),
-      vmEdge("CONFIG_STATUS", "Vconfigstatus", Seq(col("Config status"))),
-      vmEdge("IN_POWER_STATE", "Vmpwrstate", Seq(col("Powerstate"))),
-      vmEdge("IN_GUEST_STATE", "Vmpgueststate", Seq(col("Guest state"))),
-      vmEdge("HEARTBEAT", "Vmheartbeat", Seq(col("Heartbeat"))),
+    emit(wired, ord(9), Seq(
+      NodeSpec("Virtualmachine", uid, Seq(col("VM UUID"), uid),
+        Map("uuid" -> col("VM UUID"), "managedby" -> uid,
+          "name" -> col("VM"), "fqdn" -> col("DNS Name"), "poweron" -> col("PowerOn"),
+          "changedon" -> col("Change Version"), "note" -> col("Annotation"),
+          "vmid" -> col("VM ID"), "needsconsolidation" -> col("Consolidation Needed"),
+          "cpus" -> col("CPUs"), "memory" -> col("Memory").cast("int"),
+          "nics" -> col("NICs").cast("int"), "disks" -> col("Disks").cast("int"),
+          "cbt" -> col("CBT"))),
+      NodeSpec("Vcpus", lit(null), Seq(vcpuName, vcpuQty),
+        Map("name" -> vcpuName, "qty" -> vcpuQty), when = col("CPUs").isNotNull),
+      NodeSpec("Vresourcepool", lit(null), Seq(col("VI SDK Server"), poolPath),
+        Map("path" -> poolPath, "vc" -> col("VI SDK Server"),
+          "name" -> lastElem(splitLit(col("Resource pool"), "/"))), when = poolGuard),
+      NodeSpec("Vfolder", lit(null), Seq(col("Folder")),
+        Map("path" -> col("Folder"), "name" -> lastElem(splitLit(col("Folder"), "/"))),
+        when = folderGuard)) ++
+      networks.map(n => NodeSpec("Vportgroup", uid, Seq(n, uid),
+        Map("name" -> n, "managedby" -> uid))), Seq(
+      EdgeSpec(vm, "HAS_VCPUS", id("Vcpus", vcpuName, vcpuQty),
+        when = vcpuName.isNotNull && vcpuQty.isNotNull),
       // :199-200 / :201 conditional pool/folder membership
-      Graph.edgesFromIds(rows.filter(poolGuard), vmId, "IN_RESOURCE_POOL",
-        Graph.nodeId("Vresourcepool", col("VI SDK Server"), poolPath), uid, noProps, o),
-      Graph.edgesFromIds(rows.filter(folderGuard), vmId, "IN_FOLDER",
-        Graph.nodeId("Vfolder", col("Folder")), uid, noProps, o),
-      // :202-203 OS via tools/config (undirected)
-      vmEdge("OS_VIA_TOOLS", "Vmos",
-        Seq(coalesce(col("OS according to the VMware Tools"), lit("None Provided"))),
-        filter = col("OS according to the VMware Tools").isNotNull),
-      vmEdge("OS_VIA_CONFIG", "Vmos",
-        Seq(coalesce(col("OS according to the configuration file"), lit("None Provided"))),
-        filter = col("OS according to the configuration file").isNotNull),
+      EdgeSpec(vm, "IN_RESOURCE_POOL", id("Vresourcepool", col("VI SDK Server"), poolPath),
+        when = poolGuard),
+      EdgeSpec(vm, "IN_FOLDER", id("Vfolder", col("Folder")), when = folderGuard)) ++
       // :204-211 four portgroup links
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #1"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #2"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #3"), lit("Not Configured")), uid)),
-      vmEdge("IN_PORTGROUP", "Vportgroup", Seq(coalesce(col("Network #4"), lit("Not Configured")), uid)),
+      networks.map(n => EdgeSpec(vm, "IN_PORTGROUP", id("Vportgroup", n, uid), when = uid.isNotNull)) ++ Seq(
       // :218-223 parent wiring guards
-      wiredEdge(col("_hasfolder") && col("_hasparentfolder"), folderId, "IN_FOLDER", parentFolderId),
-      wiredEdge(col("_hasfolder") && !col("_hasparentfolder") && col("_hasdc"),
-        folderId, "LOCATED_IN_DC", dcId),
-      wiredEdge(!col("_hasfolder") && col("_hasdc"), vmId, "LOCATED_IN_DC", dcId),
-      wiredEdge(col("_haspool") && col("_hasparentpool"), poolId, "CHILD_RESOURCE_OF", parentPoolId),
-      wiredEdge(col("_hascc") && col("_haspool") && !col("_hasparentpool"),
-        poolId, "LOCATED_IN_CLUSTER", ccId),
-      wiredEdge(col("_hascc") && !col("_haspool"), vmId, "LOCATED_IN_CLUSTER", ccId))
-    (nodes.reduce(_ unionByName _), edges.reduce(_ unionByName _))
+      EdgeSpec(folder, "IN_FOLDER", id("Vfolder", col("_fparent")),
+        when = hasFolder && hasParentFolder),
+      EdgeSpec(folder, "LOCATED_IN_DC", dc, when = hasFolder && !hasParentFolder && hasDc),
+      EdgeSpec(vm, "LOCATED_IN_DC", dc, when = !hasFolder && hasDc),
+      EdgeSpec(pool, "CHILD_RESOURCE_OF", id("Vresourcepool", col("_ppvc"), col("_ppparent")),
+        when = hasPool && hasParentPool),
+      EdgeSpec(pool, "LOCATED_IN_CLUSTER", cluster, when = hasCc && hasPool && !hasParentPool),
+      EdgeSpec(vm, "LOCATED_IN_CLUSTER", cluster, when = hasCc && !hasPool)), dims = Seq(
+      Dim(vm, "HW_VERSION", "Vhwver", col("HW version").cast("int"),
+        props = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
+      Dim(vm, "CONNECTION_STATE", "Vconnectionstate", col("Connection state")),
+      Dim(vm, "CONFIG_STATUS", "Vconfigstatus", col("Config status")),
+      Dim(vm, "IN_POWER_STATE", "Vmpwrstate", col("Powerstate")),
+      Dim(vm, "IN_GUEST_STATE", "Vmpgueststate", col("Guest state")),
+      Dim(vm, "HEARTBEAT", "Vmheartbeat", col("Heartbeat")),
+      // :202-203 OS via tools/config (undirected) — the FOREACH guard is
+      // exists(col), so the coalesce default is unreachable; null columns
+      // create no node and no link.
+      Dim(vm, "OS_VIA_TOOLS", "Vmos", col("OS according to the VMware Tools")),
+      Dim(vm, "OS_VIA_CONFIG", "Vmos", col("OS according to the configuration file"))))
   }
 
   // ---- statement 13: vDatastore (:227-240) ----
-  private def stmtDatastores(
-      vDatastore: DataFrame, vcs: DataFrame, hostSet: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtDatastores(vDatastore: DataFrame, vcs: DataFrame, hostSet: DataFrame): Out = {
     val o = ord(10)
     val rows = vDatastore.join(vcs, uid === col("_uid"), "left_semi")
       .filter(col("URL").isNotNull)
-    val ds = Graph.nodesFrom(rows, "Vdatastore", uid, Seq(col("URL")),
-      Map("url" -> col("URL"), "name" -> col("Name"), "accessible" -> col("Accessible"),
-        "capacity" -> col("Capacity MB"), "inuse" -> col("In Use MB"), "free" -> col("Free MB"),
-        "hosts" -> col("# Hosts"), "verion" -> col("Version"), "sio" -> col("SIOC enabled"),
-        "vms" -> col("# VMs"), "address" -> col("Address"), "managedby" -> uid), o)
-    val cs = Graph.nodesFrom(rows.filter(col("Config status").isNotNull), "Vconfigstatus",
-      lit(null), Seq(col("Config status")), Map("name" -> col("Config status")), o)
-    val vt = Graph.nodesFrom(rows.filter(col("Type").isNotNull), "Vdatastoretype", lit(null),
-      Seq(col("Type")), Map("name" -> col("Type")), o)
-    val eCs = Graph.edgesFrom(rows.filter(col("Config status").isNotNull), "Vdatastore",
-      Seq(col("URL")), "CONFIG_STATUS", "Vconfigstatus", Seq(col("Config status")), uid, noProps, o)
-    val eVt = Graph.edgesFrom(rows.filter(col("Type").isNotNull), "Vdatastore", Seq(col("URL")),
-      "DATASTORE_TYPE", "Vdatastoretype", Seq(col("Type")), uid, noProps, o)
+    val ds = id("Vdatastore", col("URL"))
+    val main = emit(rows, o, Seq(
+      NodeSpec("Vdatastore", uid, Seq(col("URL")),
+        Map("url" -> col("URL"), "name" -> col("Name"), "accessible" -> col("Accessible"),
+          "capacity" -> col("Capacity MB"), "inuse" -> col("In Use MB"), "free" -> col("Free MB"),
+          "hosts" -> col("# Hosts"), "verion" -> col("Version"), "sio" -> col("SIOC enabled"),
+          "vms" -> col("# VMs"), "address" -> col("Address"), "managedby" -> uid))), Nil, Seq(
+      Dim(ds, "CONFIG_STATUS", "Vconfigstatus", col("Config status")),
+      Dim(ds, "DATASTORE_TYPE", "Vdatastoretype", col("Type"))))
     // :237-240 host connections: explode + trim + match host by (name, uid).
     val hostLinks = rows
       .select(col("URL"), uid, col("_rowno"), explode(splitLit(col("Hosts"), ",")).as("_raw"))
       .withColumn("_hn", trim(col("_raw")))
       .join(hostSet, col("_hn") === col("_hname") && uid === col("_huid"))
-    val eHosts = Graph.edgesFromIds(hostLinks,
-      Graph.nodeId("Vspherehost", col("_hobjid"), uid), "CONNECTED_DATASTORE",
-      Graph.nodeId("Vdatastore", col("URL")), uid, noProps, o)
-    (Seq(ds, cs, vt).reduce(_ unionByName _), Seq(eCs, eVt, eHosts).reduce(_ unionByName _))
+    main ++ emit(hostLinks, o, Nil, Seq(
+      EdgeSpec(id("Vspherehost", col("_hobjid"), uid), "CONNECTED_DATASTORE", ds)))
   }
 
   // ---- statement 14: vDisk (:242-251) ----
   private def stmtDisks(
-      vDisk: DataFrame, vcs: DataFrame, vmSet: DataFrame,
-      vDatastore: DataFrame): (DataFrame, DataFrame) = {
+      vDisk: DataFrame, vcs: DataFrame, vmSet: DataFrame, vDatastore: DataFrame): Out = {
     val o = ord(11)
     val rows = vDisk.join(vcs, uid === col("_uid"), "left_semi")
       .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
       .filter(col("Path").isNotNull)
-    val vd = Graph.nodesFrom(rows, "Virtualdisk", lit(null), Seq(col("Path")),
-      Map("path" -> col("Path"), "disk" -> col("Disk"), "capacity" -> col("Capacity MB"),
-        "thin" -> col("Thin"), "controller" -> col("Controller"), "mode" -> col("Disk Mode"),
-        "eager" -> col("Eagerly Scrub"), "template" -> col("Template")), o)
-    val eVm = Graph.edgesFrom(rows, "Virtualdisk", Seq(col("Path")), "VDISK_FOR_VM",
-      "Virtualmachine", Seq(col("VM UUID"), uid), uid, noProps, o)
+    val disk = id("Virtualdisk", col("Path"))
+    val main = emit(rows, o, Seq(
+      NodeSpec("Virtualdisk", lit(null), Seq(col("Path")),
+        Map("path" -> col("Path"), "disk" -> col("Disk"), "capacity" -> col("Capacity MB"),
+          "thin" -> col("Thin"), "controller" -> col("Controller"), "mode" -> col("Disk Mode"),
+          "eager" -> col("Eagerly Scrub"), "template" -> col("Template")))), Seq(
+      EdgeSpec(disk, "VDISK_FOR_VM", id("Virtualmachine", col("VM UUID"), uid))))
     // :249-251: datastore name from "[ds] path"; gate = ds of same tenant
     // connected to the row's host (the ds Hosts list must include it).
-    val withDs = rows.withColumn("_dsname", expr("replace(split(Path, '\\\\]')[0], '[', '')"))
     val dsHost = vDatastore
       .select(col("URL").as("_dsurl"), col("Name").as("_dsn"), uid.as("_dsuid"),
         explode(splitLit(col("Hosts"), ",")).as("_dsraw"))
       .withColumn("_dshost", trim(col("_dsraw")))
       .distinct()
-    val diskDs = withDs.join(dsHost,
-      col("_dsname") === col("_dsn") && uid === col("_dsuid") && col("Host") === col("_dshost"))
-    val eDs = Graph.edgesFromIds(diskDs, Graph.nodeId("Virtualdisk", col("Path")),
-      "ON_DATASTORE", Graph.nodeId("Vdatastore", col("_dsurl")), uid, noProps, o)
-    (vd, eVm.unionByName(eDs))
+    val diskDs = rows.withColumn("_dsname", expr("replace(split(Path, '\\\\]')[0], '[', '')"))
+      .join(dsHost,
+        col("_dsname") === col("_dsn") && uid === col("_dsuid") && col("Host") === col("_dshost"))
+    main ++ emit(diskDs, o, Nil, Seq(
+      EdgeSpec(disk, "ON_DATASTORE", id("Vdatastore", col("_dsurl")))))
   }
 
   // ---- statement 15: vNetwork → adapters (:253-263) ----
-  private def stmtAdapters(
-      vNetwork: DataFrame, vcNames: DataFrame, vmSet: DataFrame,
-      vPort: DataFrame): (DataFrame, DataFrame) = {
+  private def stmtAdapters(ofVm: DataFrame, vPort: DataFrame): Out = {
     val o = ord(12)
-    val rows = vNetwork
-      .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
-      .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
-      .filter(col("Mac Address").isNotNull)
+    val rows = ofVm.filter(col("Mac Address").isNotNull)
     val adKeys = Seq(col("Mac Address"), col("VM UUID"))
-    val vmn = Graph.nodesFrom(rows, "Vmadapter", lit(null), adKeys,
-      Map("mac" -> col("Mac Address"), "vmuuid" -> col("VM UUID"),
-        "startconnected" -> col("Starts Connected"), "ip" -> col("IP Address")), o)
-    val vmat = Graph.nodesFrom(rows.filter(col("Adapter").isNotNull), "Vmadaptertype", lit(null),
-      Seq(col("Adapter")), Map("name" -> col("Adapter")), o)
-    val eFor = Graph.edgesFrom(rows, "Vmadapter", adKeys, "ADAPTER_FOR", "Virtualmachine",
-      Seq(col("VM UUID"), uid), uid, noProps, o)
-    val eType = Graph.edgesFrom(rows.filter(col("Adapter").isNotNull), "Vmadapter", adKeys,
-      "ADAPTER_TYPE", "Vmadaptertype", Seq(col("Adapter")), uid, noProps, o)
+    val adapter = id("Vmadapter", adKeys: _*)
+    val main = emit(rows, o, Seq(
+      NodeSpec("Vmadapter", lit(null), adKeys,
+        Map("mac" -> col("Mac Address"), "vmuuid" -> col("VM UUID"),
+          "startconnected" -> col("Starts Connected"), "ip" -> col("IP Address")))), Seq(
+      EdgeSpec(adapter, "ADAPTER_FOR", id("Virtualmachine", col("VM UUID"), uid))),
+      dims = Seq(Dim(adapter, "ADAPTER_TYPE", "Vmadaptertype", col("Adapter"))))
     // :261-263 stage 2: host portgroup (name, host, managedby) from vPort batch.
     val pgSet = vPort.select(col("Port Group").as("_pgname"), col("Host").as("_pghost"),
       uid.as("_pguid")).distinct()
     val pgRows = rows.join(pgSet,
       col("Network") === col("_pgname") && col("Host") === col("_pghost") && uid === col("_pguid"))
-    val ePg = Graph.edgesFromIds(pgRows, Graph.nodeId("Vmadapter", adKeys: _*), "IN_PORTGROUP",
-      Graph.nodeId("Vhostportgroup", col("_pgname"), col("_pghost"), uid), uid, noProps, o)
-    (vmn.unionByName(vmat), Seq(eFor, eType, ePg).reduce(_ unionByName _))
+    main ++ emit(pgRows, o, Nil, Seq(
+      EdgeSpec(adapter, "IN_PORTGROUP",
+        id("Vhostportgroup", col("_pgname"), col("_pghost"), uid))))
   }
 
-  // ---- statement 16a: vPartition (:265-270) ----
-  private def stmtPartitions(
-      vPartition: DataFrame, vcNames: DataFrame, vmSet: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(13)
-    val rows = vPartition
-      .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
-      .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
-      .filter(col("Disk").isNotNull)
-    val keys = Seq(col("Disk"), col("VM UUID"))
-    val vmp = Graph.nodesFrom(rows, "Vpartition", lit(null), keys,
-      Map("disk" -> col("Disk"), "vmuuid" -> col("VM UUID"), "capacity" -> col("Capacity MB"),
-        "consumed" -> col("Consumed MB"), "free" -> col("Free %")), o)
-    val e = Graph.edgesFrom(rows, "Vpartition", keys, "PARTITION_FOR", "Virtualmachine",
-      Seq(col("VM UUID"), uid), uid, noProps, o)
-    (vmp, e)
-  }
-
-  // ---- statement 16b: vSnapshot (:272-277) ----
-  private def stmtSnapshots(
-      vSnapshot: DataFrame, vcNames: DataFrame, vmSet: DataFrame): (DataFrame, DataFrame) = {
-    val o = ord(14)
-    val rows = vSnapshot
-      .join(vcNames, col("VI SDK Server") === col("_vcname"), "left_semi")
-      .join(vmSet, col("VM UUID") === col("_vmuuid") && uid === col("_vmuid"), "left_semi")
-      .filter(col("Name").isNotNull)
-    val keys = Seq(col("Name"), col("VM UUID"))
-    val vmss = Graph.nodesFrom(rows, "Vsnapshot", lit(null), keys,
-      Map("name" -> col("Name"), "vmuuid" -> col("VM UUID"),
-        "description" -> col("Description"), "timestamp" -> col("Date / time"),
-        "size" -> col("Size MB (total)")), o)
-    val e = Graph.edgesFrom(rows, "Vsnapshot", keys, "SNAPSHOT_OF", "Virtualmachine",
-      Seq(col("VM UUID"), uid), uid, noProps, o)
-    (vmss, e)
+  // ---- statements 16a/16b: vPartition, vSnapshot — a VM's child rows ----
+  private def stmtVmChild(ofVm: DataFrame, stmt: Int, label: String, key: String, rel: String,
+      props: Map[String, Column]): Out = {
+    val keys = Seq(col(key), col("VM UUID"))
+    emit(ofVm.filter(col(key).isNotNull), ord(stmt),
+      Seq(NodeSpec(label, lit(null), keys, props + ("vmuuid" -> col("VM UUID")))),
+      Seq(EdgeSpec(id(label, keys: _*), rel, id("Virtualmachine", col("VM UUID"), uid))))
   }
 }

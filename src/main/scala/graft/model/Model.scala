@@ -54,8 +54,7 @@ object Graph {
   def keyString(keyCols: Column*): Column =
     concat_ws(KeySep, keyCols.map(c => coalesce(c.cast("string"), lit(""))): _*)
 
-  /** Build a nodes frame from a source frame: one row per entity.
-    * `props` collects the given columns as a string map (null values kept
+  /** `props` collects the given columns as a string map (null values kept
     * out of the map — Cypher `SET n.p = null` removes the property).
     */
   private def propsMap(propCols: Map[String, Column]): Column = {
@@ -66,56 +65,41 @@ object Graph {
     else map_filter(map(propEntries: _*), (_, v) => v.isNotNull)
   }
 
+  /** The node columns (id, label, tenant, key, props) of one entity. */
+  def nodeColumns(
+      label: String,
+      tenant: Column,
+      keyCols: Seq[Column],
+      propCols: Map[String, Column]): Seq[Column] = Seq(
+    nodeId(label, keyCols: _*).as("id"),
+    lit(label).as("label"),
+    tenant.cast("string").as("tenant"),
+    keyString(keyCols: _*).as("key"),
+    propsMap(propCols).as("props"))
+
+  /** The edge columns (src, dst, relType, tenant, props) of one relationship
+    * between already-resolved endpoint ids.
+    */
+  def edgeColumns(
+      srcId: Column,
+      relType: String,
+      dstId: Column,
+      tenant: Column,
+      propCols: Map[String, Column]): Seq[Column] = Seq(
+    srcId.as("src"),
+    dstId.as("dst"),
+    lit(relType).as("relType"),
+    tenant.cast("string").as("tenant"),
+    propsMap(propCols).as("props"))
+
+  /** Build a nodes frame from a source frame: one row per entity. */
   def nodesFrom(
       df: DataFrame,
       label: String,
       tenant: Column,
       keyCols: Seq[Column],
-      propCols: Map[String, Column],
-      ord: Column = lit(0L)): DataFrame =
-    df.select(
-      nodeId(label, keyCols: _*).as("id"),
-      lit(label).as("label"),
-      tenant.cast("string").as("tenant"),
-      keyString(keyCols: _*).as("key"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
-
-  /** Node frame where the id is already resolved (e.g. pool/folder identity
-    * resolution in Ingest) — `idCol` supplied directly.
-    */
-  def nodesFromIds(
-      df: DataFrame,
-      idCol: Column,
-      label: String,
-      tenant: Column,
-      keyCol: Column,
-      propCols: Map[String, Column],
-      ord: Column = lit(0L)): DataFrame =
-    df.select(
-      idCol.as("id"),
-      lit(label).as("label"),
-      tenant.cast("string").as("tenant"),
-      keyCol.cast("string").as("key"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
-
-  /** Edge frame from already-resolved endpoint id columns. */
-  def edgesFromIds(
-      df: DataFrame,
-      srcId: Column,
-      relType: String,
-      dstId: Column,
-      tenant: Column,
-      propCols: Map[String, Column] = Map.empty,
-      ord: Column = lit(0L)): DataFrame =
-    df.select(
-      srcId.as("src"),
-      dstId.as("dst"),
-      lit(relType).as("relType"),
-      tenant.cast("string").as("tenant"),
-      propsMap(propCols).as("props"),
-      ord.cast("long").as("_ord"))
+      propCols: Map[String, Column]): DataFrame =
+    df.select(nodeColumns(label, tenant, keyCols, propCols): _*)
 
   /** Build an edges frame: src/dst ids computed from each side's label+keys. */
   def edgesFrom(
@@ -126,8 +110,7 @@ object Graph {
       dstLabel: String,
       dstKeys: Seq[Column],
       tenant: Column,
-      propCols: Map[String, Column] = Map.empty,
-      ord: Column = lit(0L)): DataFrame =
-    edgesFromIds(df, nodeId(srcLabel, srcKeys: _*), relType, nodeId(dstLabel, dstKeys: _*),
-      tenant, propCols, ord)
+      propCols: Map[String, Column] = Map.empty): DataFrame =
+    df.select(edgeColumns(nodeId(srcLabel, srcKeys: _*), relType, nodeId(dstLabel, dstKeys: _*),
+      tenant, propCols): _*)
 }

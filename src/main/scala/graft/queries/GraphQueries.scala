@@ -25,9 +25,8 @@ object GraphQueries extends QueryModule {
         Map("custkey" -> col("c_custkey")))
       .unionByName(Graph.nodesFrom(o, "Order", lit(null), Seq(col("o_orderkey")),
         Map("orderkey" -> col("o_orderkey"))))
-      .drop("_ord")
     val edges = Graph.edgesFrom(o, "Order", Seq(col("o_orderkey")), "PLACED_BY",
-      "Customer", Seq(col("o_custkey")), lit(null)).drop("_ord")
+      "Customer", Seq(col("o_custkey")), lit(null))
     GraphStore(nodes, edges)
   }
 
@@ -38,9 +37,8 @@ object GraphQueries extends QueryModule {
         Map("name" -> col("n_name")))
       .unionByName(Graph.nodesFrom(r, "Region", lit(null), Seq(col("r_regionkey")),
         Map("name" -> col("r_name"))))
-      .drop("_ord")
     val edges = Graph.edgesFrom(n, "Nation", Seq(col("n_nationkey")), "IN_REGION",
-      "Region", Seq(col("n_regionkey")), lit(null)).drop("_ord")
+      "Region", Seq(col("n_regionkey")), lit(null))
     GraphStore(nodes, edges)
   }
 
@@ -51,9 +49,8 @@ object GraphQueries extends QueryModule {
         Seq(col("l_partkey")), Map("k" -> col("l_partkey")))
       .unionByName(Graph.nodesFrom(li.select("l_suppkey").distinct(), "Supplier",
         lit(null), Seq(col("l_suppkey")), Map("k" -> col("l_suppkey"))))
-      .drop("_ord")
     val edges = Graph.edgesFrom(li, "Part", Seq(col("l_partkey")), "SUPPLIES",
-      "Supplier", Seq(col("l_suppkey")), lit(null)).drop("_ord")
+      "Supplier", Seq(col("l_suppkey")), lit(null))
     GraphStore(nodes, edges)
   }
 
@@ -76,9 +73,9 @@ object GraphQueries extends QueryModule {
       .select(col("a.s").as("sa"), col("b.s").as("sb")).distinct()
     val verts = Tables.lineitem(s, d).select(col("l_suppkey")).distinct()
     val nodes = Graph.nodesFrom(verts, "Supplier", lit(null),
-      Seq(col("l_suppkey")), Map("k" -> col("l_suppkey"))).drop("_ord")
+      Seq(col("l_suppkey")), Map("k" -> col("l_suppkey")))
     val edges = Graph.edgesFrom(pairs, "Supplier", Seq(col("sa")), "CO_SUPPLY",
-      "Supplier", Seq(col("sb")), lit(null)).drop("_ord")
+      "Supplier", Seq(col("sb")), lit(null))
     GraphStore(nodes, edges)
   }
 

@@ -776,7 +776,7 @@ object LlmOpsQueries extends QueryModule {
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc) AS rank FROM sc) " +
         "SELECT qid, CAST(rank AS BIGINT) AS rank, doc, score, n_matched FROM r WHERE rank <= 5 ORDER BY qid, rank") { (s, d) =>
       val docs = Tables.documents(s, d)
-      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // fixed query workload: corpus scales, benchmark queries do not (see StressBench)
+      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // the query workload stays fixed while the corpus scales
         .select(col("doc_id").as("qid"),
           concat_ws(" ", slice(TextAnalysis.wsTokens(lower(col("text"))), 1, 3)).as("qtext"))
       graft.llmops.Retrieval.searchTopK(docs, "doc_id", "text",
@@ -2107,7 +2107,7 @@ object LlmOpsQueries extends QueryModule {
         "SELECT qid, doc, CAST(count(*) AS BIGINT) AS n_occurrences, CAST(min(start) AS BIGINT) AS first_pos " +
         "FROM f GROUP BY 1, 2 ORDER BY qid, doc") { (s, d) =>
       val docs = Tables.documents(s, d)
-      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // fixed query workload: corpus scales, benchmark queries do not (see StressBench)
+      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // the query workload stays fixed while the corpus scales
         .select(col("doc_id").as("qid"),
           concat_ws(" ", slice(TextAnalysis.wsTokens(lower(col("text"))), 2, 3)).as("qtext"))
       graft.llmops.Retrieval.phraseSearch(docs, "doc_id", "text",
@@ -2131,7 +2131,7 @@ object LlmOpsQueries extends QueryModule {
         "r AS (SELECT *, row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc) AS rank FROM sc) " +
         "SELECT qid, CAST(rank AS BIGINT) AS rank, doc, round(score, 6) AS score, n_matched FROM r WHERE rank <= 5 ORDER BY qid, rank") { (s, d) =>
       val docs = Tables.documents(s, d)
-      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // fixed query workload: corpus scales, benchmark queries do not (see StressBench)
+      val queries = docs.filter(col("doc_id") % 50 === 0 && col("doc_id") < 10000) // the query workload stays fixed while the corpus scales
         .select(col("doc_id").as("qid"),
           concat_ws(" ", slice(TextAnalysis.wsTokens(lower(col("text"))), 1, 3)).as("qtext"))
       graft.llmops.Retrieval.bm25TopK(docs, "doc_id", "text",

@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.GraftSession
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 
 /** Per-query profiler — the §1 "measure first" harness.
@@ -9,10 +10,10 @@ import org.apache.spark.scheduler._
   * prints, per query, the seconds of the `count()` Bench times, split into
   * build (constructing the frame, with any eager checkpoint it runs), plan
   * (optimizing and physically planning the count, as `Dataset.count` does)
-  * and exec (running that plan); then the job and stage counts and the top
-  * stages by duration with their shuffle read/write volumes — the numbers
-  * that decide WHICH operator inside a multi-job pipeline is the one to
-  * optimize. An argument "warm" runs each query twice and profiles the
+  * and exec (running that plan); then the job, Janino-compile and stage
+  * counts and the top stages by duration with their shuffle read/write
+  * volumes — the numbers that decide WHICH operator inside a multi-job
+  * pipeline is the one to optimize. An argument "warm" runs each query twice and profiles the
   * second run (isolates plan shape from codegen/JIT).
   *
   * Run: sbt 'runMain graft.tools.Profile q_m5_edge_props warm'
@@ -61,6 +62,7 @@ object Profile {
       release()
       if (warm) { fn(spark, sfDir).count(); release() }
       stages.clear(); jobs.set(0)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val counted = fn(spark, sfDir).groupBy().count()
       val t1 = System.nanoTime()
@@ -68,13 +70,15 @@ object Profile {
       val t2 = System.nanoTime()
       counted.collect()
       val t3 = System.nanoTime()
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
       def secs(a: Long, b: Long) = (b - a) / 1e9
       Thread.sleep(400) // let the listener bus drain
       import scala.jdk.CollectionConverters._
       val rows = stages.asScala.toSeq.sortBy(-_.ms)
       println(f"%n========== $n%s  wall=${secs(t0, t3)}%.2fs build=${secs(t0, t1)}%.2fs " +
         f"plan=${secs(t1, t2)}%.2fs exec=${secs(t2, t3)}%.2fs " +
-        f"jobs=${jobs.get}%d stages=${rows.size}%d stageMsSum=${rows.map(_.ms).sum}%d")
+        f"jobs=${jobs.get}%d compiles=$compiles%d stages=${rows.size}%d " +
+        f"stageMsSum=${rows.map(_.ms).sum}%d")
       rows.take(14).foreach { r =>
         println(f"  stage ${r.id}%4d ${r.ms}%6dms task=${r.taskMs}%6dms cpu=${r.cpuMs}%6dms gc=${r.gcMs}%5dms shR=${r.shRead}%9d shW=${r.shWrite}%9d rec=${r.records}%9d  ${r.name.take(80)}%s")
       }

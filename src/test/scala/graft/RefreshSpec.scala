@@ -167,6 +167,17 @@ class RefreshSpec extends SparkTestBase {
     assert(got == want)
   }
 
+  test("Ingest.run over the golden workbook stays within its job budget") {
+    // Ingest.run's only actions are the batch barrier's two checkpoints;
+    // under AQE each distinct shuffle or broadcast in the statements' gate
+    // joins is one more job. One projection per gated row frame measures 55
+    // here; one frame per emitted node or edge kind measured 69.
+    val wb = SyntheticWorkbook.golden(spark)
+    val seeded = SyntheticWorkbook.seededStore(spark)
+    val (_, jobs) = countJobs(Ingest.run(wb, seeded.nodes, seeded.edges))
+    assert(jobs <= 58, s"Ingest.run ran $jobs jobs")
+  }
+
   test("refresh is idempotent (MERGE law, §5.2a)") {
     val store2 = Refresh.refresh(store1, SyntheticWorkbook.golden(spark))
     assert(store2.nodes.count() == nodes1.count())

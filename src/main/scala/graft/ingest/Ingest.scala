@@ -88,9 +88,9 @@ object Ingest {
     * from `src` — both only where `key` is set.
     */
   private final case class Dim(src: Column, rel: String, label: String, key: Column,
-      prop: String = "name", props: Map[String, Column] = Map.empty) {
+      prop: String = "name", linkProps: Map[String, Column] = Map.empty) {
     def node: NodeSpec = NodeSpec(label, lit(null), Seq(key), Map(prop -> key), when = key.isNotNull)
-    def edge: EdgeSpec = EdgeSpec(src, rel, id(label, key), props, when = key.isNotNull)
+    def edge: EdgeSpec = EdgeSpec(src, rel, id(label, key), linkProps, when = key.isNotNull)
   }
 
   /** Node and edge frames in the canonical column order, `_ord` last. */
@@ -105,9 +105,9 @@ object Ingest {
     */
   private def emit(rows: DataFrame, o: Column, nodes: Seq[NodeSpec],
       edges: Seq[EdgeSpec], dims: Seq[Dim] = Nil): Out = {
-    def project(structs: Seq[Column], id: String): Seq[DataFrame] =
+    def project(structs: Seq[Column], key: String): Seq[DataFrame] =
       if (structs.isEmpty) Nil
-      else Seq(rows.select(inline(array(structs: _*)), o.as("_ord")).filter(col(id).isNotNull))
+      else Seq(rows.select(inline(array(structs: _*)), o.as("_ord")).filter(col(key).isNotNull))
     Out(
       project((nodes ++ dims.map(_.node)).map(n => when(n.when,
         struct(Graph.nodeColumns(n.label, n.tenant, n.keys, n.props): _*))), "id"),
@@ -147,7 +147,7 @@ object Ingest {
         col("VI SDK UUID").as("_huid"), col("Object ID").as("_hobjid"), col("_rowno")),
       keys = Seq("_hname", "_hcluster", "_huid"), orderCols = Seq("_rowno")).drop("_rowno")
 
-    // sheet rows whose (Host, Cluster, uid) is a batch host (:143,:156,:167).
+    // sheet rows whose (Host, Cluster, uid) is a batch host (:143,:156,:168).
     def onHost(sheet: String) = wb(sheet).join(hostSet,
       col("Host") === col("_hname") && col("Cluster") === col("_hcluster") && uid === col("_huid"))
 
@@ -554,7 +554,7 @@ object Ingest {
       EdgeSpec(pool, "LOCATED_IN_CLUSTER", cluster, when = hasCc && hasPool && !hasParentPool),
       EdgeSpec(vm, "LOCATED_IN_CLUSTER", cluster, when = hasCc && !hasPool)), dims = Seq(
       Dim(vm, "HW_VERSION", "Vhwver", col("HW version").cast("int"),
-        props = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
+        linkProps = Map("upgradestatus" -> col("HW upgrade status"))), // :187,:212
       Dim(vm, "CONNECTION_STATE", "Vconnectionstate", col("Connection state")),
       Dim(vm, "CONFIG_STATUS", "Vconfigstatus", col("Config status")),
       Dim(vm, "IN_POWER_STATE", "Vmpwrstate", col("Powerstate")),

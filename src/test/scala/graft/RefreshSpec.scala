@@ -297,4 +297,18 @@ class RefreshSpec extends SparkTestBase {
     assert(sameStore(Refresh.load(spark, p.toString), store1))
     assert(!Files.exists(staged) && !Files.exists(Paths.get(s"$p.__old")))
   }
+
+  test("a store with an empty table round-trips with the declared schema") {
+    val seeded = SyntheticWorkbook.seededStore(spark)
+    def typed(s: org.apache.spark.sql.types.StructType) = s.map(f => f.name -> f.dataType)
+    Seq(Refresh.GraphStore(seeded.nodes, seeded.edges.limit(0)),
+        Refresh.GraphStore(seeded.nodes.limit(0), seeded.edges)).foreach { s =>
+      val p = java.nio.file.Files.createTempDirectory("graft_empty").resolve("store").toString
+      Refresh.write(s, p)
+      val back = Refresh.load(spark, p)
+      assert(typed(back.nodes.schema) == typed(Refresh.nodeSchema))
+      assert(typed(back.edges.schema) == typed(Refresh.edgeSchema))
+      assert(sameStore(back, s))
+    }
+  }
 }

@@ -22,9 +22,11 @@ import org.apache.spark.sql.types._
   * upserted here, never deleted.
   *
   * Scale: the whole refresh is three hash-joins on id plus the ingest
-  * shuffles; at 100 TB the store is stored partitioned by label (nodes) /
-  * relType (edges) so per-label reads prune partitions, and the tenant
-  * filters push down to parquet.
+  * shuffles. The store is flat parquet, at most one file per partition of
+  * the refreshed frame, each sorted by (label, id) for nodes and (relType,
+  * src, dst) for edges, so a label or relType filter pushes down to the
+  * scan and skips the row groups outside its run; the tenant filters push
+  * down too.
   */
 object Refresh {
 
@@ -94,9 +96,12 @@ object Refresh {
   def materialize(store: GraphStore): GraphStore =
     GraphStore(store.nodes.localCheckpoint(true), store.edges.localCheckpoint(true))
 
-  /** Persist partitioned for label/relType pruning at scale, as
-    * `path/nodes` and `path/edges`. Both are written under the sibling
-    * `path.__staged` first and then swapped in by directory renames
+  /** Persist as `path/nodes` and `path/edges`: flat, each output partition
+    * sorted by (label, id) and (relType, src, dst) in place — no shuffle —
+    * so a table has at most one file per partition of `store`'s frames
+    * (`partitionBy(label)` would write one per label per partition) and its
+    * row-group statistics cover label-contiguous runs. Both are written
+    * under the sibling `path.__staged` first and then swapped in by directory renames
     * (`path` → `path.__old`, staged → `path`, drop the old), so `store` may
     * be read from `path` itself — the in-place refresh — and a failure at
     * any step leaves either the previous or the new store for `load`.
@@ -105,19 +110,23 @@ object Refresh {
     val d = StoreDirs(store.nodes.sparkSession, path)
     d.heal()
     d.fs.delete(d.staged, true)
-    store.nodes.write.partitionBy("label").parquet(s"${d.staged}/nodes")
-    store.edges.write.partitionBy("relType").parquet(s"${d.staged}/edges")
+    store.nodes.sortWithinPartitions("label", "id").write.parquet(s"${d.staged}/nodes")
+    store.edges.sortWithinPartitions("relType", "src", "dst").write.parquet(s"${d.staged}/edges")
     d.fs.delete(d.old, true)
     if (d.fs.exists(d.dir)) d.rename(d.dir, d.old)
     d.rename(d.staged, d.dir)
     d.fs.delete(d.old, true)
   }
 
+  /** Read a store with the declared schemas: no inference job, an empty
+    * table loads, and a store in the earlier `label=`/`relType=` directory
+    * layout still reads (its partition column comes last, hence the
+    * select) and moves to the flat layout on its next `write`. */
   def load(spark: SparkSession, path: String): GraphStore = {
     StoreDirs(spark, path).heal()
-    GraphStore(
-      spark.read.parquet(s"$path/nodes").select(nodeSchema.fieldNames.map(col).toSeq: _*),
-      spark.read.parquet(s"$path/edges").select(edgeSchema.fieldNames.map(col).toSeq: _*))
+    def read(table: String, schema: StructType) =
+      spark.read.schema(schema).parquet(s"$path/$table").select(schema.fieldNames.map(col).toSeq: _*)
+    GraphStore(read("nodes", nodeSchema), read("edges", edgeSchema))
   }
 
   /** A store directory and the two siblings `write` swaps it through. */

@@ -6,7 +6,10 @@ import graft.ingest.Refresh
 
 /** Graph-ingest throughput benchmark (BASELINE.md): full mark→load→sweep
   * refresh of a range-generated RVTools workbook; reports input rows/sec
-  * through the upsert kernel. `runMain graft.tools.IngestBench [nHosts nVms]`.
+  * through the upsert kernel, then times the persist step — `Refresh.write`
+  * of the refreshed store to a temp directory, reloaded and counted — and
+  * reports the store's parquet file count and bytes.
+  * `runMain graft.tools.IngestBench [nHosts nVms]`.
   */
 object IngestBench {
   def main(args: Array[String]): Unit = {
@@ -21,7 +24,19 @@ object IngestBench {
     val nodes = store.nodes.count()
     val edges = store.edges.count()
     val secs = (System.nanoTime() - t0) / 1e9
-    println(f"""{"metric":"ingest_rows_per_sec","value":${inputRows / secs}%.0f,"input_rows":$inputRows,"nodes":$nodes,"edges":$edges,"sec":$secs%.2f}""")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ingestbench")
+    val path = dir.resolve("store").toString
+    val t1 = System.nanoTime()
+    Refresh.write(store, path)
+    val writeSecs = (System.nanoTime() - t1) / 1e9
+    val back = Refresh.load(spark, path)
+    val (backNodes, backEdges) = (back.nodes.count(), back.edges.count())
+    require(backNodes == nodes && backEdges == edges,
+      s"reloaded store has $backNodes nodes and $backEdges edges, the refresh gave $nodes and $edges")
+    val files = java.nio.file.Files.walk(dir).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].toFile)
+      .filter(_.getName.endsWith(".parquet"))
+    println(f"""{"metric":"ingest_rows_per_sec","value":${inputRows / secs}%.0f,"input_rows":$inputRows,"nodes":$nodes,"edges":$edges,"sec":$secs%.2f,"write_sec":$writeSecs%.2f,"store_files":${files.size},"store_bytes":${files.map(_.length).sum}}""")
     spark.stop()
+    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
   }
 }

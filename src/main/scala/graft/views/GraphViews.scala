@@ -23,8 +23,9 @@ final case class DatastoreRow(id: Long, tenant: String, url: String,
 /** Per-label DataFrame views of the property graph (SURVEY §7.1 step 5) and
   * the operational reports a user of the reference graph actually runs.
   * Everything is a plain DataFrame pipeline over the two store Datasets —
-  * label filters prune store partitions (nodes are partitioned by label on
-  * disk), and the edge hops are equi-joins on the 64-bit ids.
+  * label filters push down to the store's parquet scan (its files are sorted
+  * by label, so row-group statistics skip other labels), and the edge hops
+  * are equi-joins on the 64-bit ids.
   */
 object GraphViews {
 
@@ -54,7 +55,7 @@ object GraphViews {
     * the boundary, downstream code gets compile-checked field access.
     * Plans are identical to the DataFrame views (encoders are a
     * schema-level mapping, not a row-by-row conversion), so the label
-    * partition pruning is preserved.
+    * filter still pushes down to the store scan.
     */
   def vmsTyped(store: GraphStore): Dataset[VmRow] = {
     val df = vms(store)

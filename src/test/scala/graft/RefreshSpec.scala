@@ -286,7 +286,7 @@ class RefreshSpec extends SparkTestBase {
     val staged = Paths.get(s"$p.__staged")
     Refresh.write(SyntheticWorkbook.seededStore(spark), p.toString)
     // write's state after the staged `nodes` committed and before `edges`
-    store1.nodes.write.partitionBy("label").parquet(staged.resolve("nodes").toString)
+    store1.nodes.sortWithinPartitions("label", "id").write.parquet(staged.resolve("nodes").toString)
     assert(Files.exists(staged.resolve("nodes/_SUCCESS")) && !Files.exists(staged.resolve("edges")))
     // load neither adopts the half-staged store nor deletes the previous one
     assert(sameStore(Refresh.load(spark, p.toString), SyntheticWorkbook.seededStore(spark)))
@@ -296,6 +296,20 @@ class RefreshSpec extends SparkTestBase {
     Refresh.write(store1, p.toString)
     assert(sameStore(Refresh.load(spark, p.toString), store1))
     assert(!Files.exists(staged) && !Files.exists(Paths.get(s"$p.__old")))
+  }
+
+  test("a store in the label=/relType= directory layout loads, and its next write flattens it") {
+    import java.nio.file.Files
+    val p = Files.createTempDirectory("graft_oldlayout").resolve("store")
+    store1.nodes.write.partitionBy("label").parquet(p.resolve("nodes").toString)
+    store1.edges.write.partitionBy("relType").parquet(p.resolve("edges").toString)
+    assert(sameStore(Refresh.load(spark, p.toString), store1))
+    Refresh.write(Refresh.refresh(Refresh.load(spark, p.toString), SyntheticWorkbook.golden(spark)),
+      p.toString)
+    val dirs = Files.walk(p).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(Files.isDirectory(_)).map(_.getFileName.toString)
+    assert(!dirs.exists(d => d.startsWith("label=") || d.startsWith("relType=")), dirs.mkString(", "))
+    assert(sameStore(Refresh.load(spark, p.toString), store1))
   }
 
   test("a store with an empty table round-trips with the declared schema") {

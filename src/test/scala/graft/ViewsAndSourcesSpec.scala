@@ -153,17 +153,40 @@ class ViewsAndSourcesSpec extends SparkTestBase {
     assert(sheets("vInfo").columns.contains("VM UUID"))
   }
 
-  test("store persists partitioned and reloads identically") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_store").toString
-    Refresh.write(store, tmp)
+  test("store persists flat and key-sorted, reloads identically, and pushes label filters down") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft_store").resolve("store").toString
+    Refresh.write(Refresh.GraphStore(store.nodes.repartition(3), store.edges.repartition(3)), tmp)
     val back = Refresh.load(spark, tmp)
-    assert(back.nodes.count() == store.nodes.count())
-    assert(back.edges.count() == store.edges.count())
-    // label partitioning on disk → per-label reads prune directories.
-    val labelDirs = new java.io.File(s"$tmp/nodes").listFiles()
-      .filter(_.isDirectory).map(_.getName).filter(_.startsWith("label=")).toSet
-    assert(labelDirs.contains("label=Virtualmachine"))
-    assert(back.nodes.filter(col("label") === "Vspherehost").count() == 2)
+    // row for row; set ops need the props map as a sorted entries array.
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("props", array_sort(map_entries(col("props"))))
+    Seq(back.nodes -> store.nodes, back.edges -> store.edges).foreach { case (x, y0) =>
+      val y = y0.select(x.columns.map(col).toSeq: _*)
+      assert(canon(x).exceptAll(canon(y)).isEmpty && canon(y).exceptAll(canon(x)).isEmpty)
+    }
+    // at most one file per partition of the written frame, no label
+    // directories, and each file's rows in key order.
+    def sortedFiles(table: String, key: Seq[String]): Unit = {
+      val entries = new java.io.File(s"$tmp/$table").listFiles()
+      assert(!entries.exists(_.isDirectory), entries.map(_.getName).mkString(", "))
+      val files = entries.filter(_.getName.endsWith(".parquet"))
+      assert(files.nonEmpty && files.length <= 3, files.map(_.getName).mkString(", "))
+      files.foreach { f =>
+        val rows = spark.read.parquet(f.getPath).select(key.map(col): _*).collect()
+          .map(r => (r.getString(0), r.getLong(1), if (key.size > 2) r.getLong(2) else 0L)).toSeq
+        assert(rows == rows.sorted, s"${f.getName} is not sorted by ${key.mkString(", ")}")
+      }
+    }
+    sortedFiles("nodes", Seq("label", "id"))
+    sortedFiles("edges", Seq("relType", "src", "dst"))
+    // a label filter reaches the parquet scan, whose row-group statistics
+    // cover each file's label-contiguous runs.
+    val hosts = back.nodes.filter(col("label") === "Vspherehost")
+    val pushed = hosts.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metadata.getOrElse("PushedFilters", "")
+    }
+    assert(pushed.exists(_.contains("EqualTo(label,Vspherehost)")), pushed.mkString("; "))
+    assert(hosts.count() == 2)
   }
 
   test("Jsonl: corrupt lines quarantine, clean lines parse, shards round-trip") {

@@ -101,10 +101,11 @@ object Refresh {
     * so a table has at most one file per partition of `store`'s frames
     * (`partitionBy(label)` would write one per label per partition) and its
     * row-group statistics cover label-contiguous runs. Both are written
-    * under the sibling `path.__staged` first and then swapped in by directory renames
-    * (`path` → `path.__old`, staged → `path`, drop the old), so `store` may
-    * be read from `path` itself — the in-place refresh — and a failure at
-    * any step leaves either the previous or the new store for `load`.
+    * under the sibling `path.__staged` first and then swapped in by
+    * directory renames (`path` → `path.__old`, staged → `path`, drop the
+    * old), so `store` may be read from `path` itself — the in-place
+    * refresh — and a failure at any step leaves either the previous or the
+    * new store for `load`.
     */
   def write(store: GraphStore, path: String): Unit = {
     val d = StoreDirs(store.nodes.sparkSession, path)

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * driver-side id assignment, no monotonically_increasing_id drift.
   * `tenant` carries the reference's `managedby` scoping
   * (refresh-vmware.cypher:27,75,182): every mark-and-sweep refresh is
-  * tenant-local, which at 100 TB maps to partition pruning on the store.
+  * tenant-local, which at 100 TB maps to a tenant-leading sort key on the
+  * store (SCALE.md), so one tenant's rows share row groups.
   */
 final case class Node(
     id: Long,

@@ -3,6 +3,8 @@ package graft.tools
 import graft.GraftSession
 import graft.fixtures.{ScaledWorkbook, SyntheticWorkbook}
 import graft.ingest.Refresh
+import org.apache.commons.io.FileUtils
+import scala.jdk.CollectionConverters._
 
 /** Graph-ingest throughput benchmark (BASELINE.md): full mark→load→sweep
   * refresh of a range-generated RVTools workbook; reports input rows/sec
@@ -33,10 +35,9 @@ object IngestBench {
     val (backNodes, backEdges) = (back.nodes.count(), back.edges.count())
     require(backNodes == nodes && backEdges == edges,
       s"reloaded store has $backNodes nodes and $backEdges edges, the refresh gave $nodes and $edges")
-    val files = java.nio.file.Files.walk(dir).toArray.toSeq.map(_.asInstanceOf[java.nio.file.Path].toFile)
-      .filter(_.getName.endsWith(".parquet"))
+    val files = FileUtils.listFiles(dir.toFile, Array("parquet"), true).asScala
     println(f"""{"metric":"ingest_rows_per_sec","value":${inputRows / secs}%.0f,"input_rows":$inputRows,"nodes":$nodes,"edges":$edges,"sec":$secs%.2f,"write_sec":$writeSecs%.2f,"store_files":${files.size},"store_bytes":${files.map(_.length).sum}}""")
     spark.stop()
-    org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    FileUtils.deleteDirectory(dir.toFile)
   }
 }

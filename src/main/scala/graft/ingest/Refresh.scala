@@ -98,9 +98,9 @@ object Refresh {
 
   /** Persist as `path/nodes` and `path/edges`: flat, each output partition
     * sorted by (label, id) and (relType, src, dst) in place — no shuffle —
-    * so a table has at most one file per partition of `store`'s frames
-    * (`partitionBy(label)` would write one per label per partition) and its
-    * row-group statistics cover label-contiguous runs. Both are written
+    * so a table has at most one file per partition of `store`'s frames (a
+    * label-partitioned layout would write one per label per partition) and
+    * its row-group statistics cover label-contiguous runs. Both are written
     * under the sibling `path.__staged` first and then swapped in by
     * directory renames (`path` → `path.__old`, staged → `path`, drop the
     * old), so `store` may be read from `path` itself — the in-place

@@ -153,7 +153,7 @@ class ViewsAndSourcesSpec extends SparkTestBase {
     assert(sheets("vInfo").columns.contains("VM UUID"))
   }
 
-  test("store persists flat and key-sorted, reloads identically, and pushes label filters down") {
+  test("store persists flat, key-sorted, reloads identically, filters push down") {
     val tmp = java.nio.file.Files.createTempDirectory("graft_store").resolve("store").toString
     Refresh.write(Refresh.GraphStore(store.nodes.repartition(3), store.edges.repartition(3)), tmp)
     val back = Refresh.load(spark, tmp)

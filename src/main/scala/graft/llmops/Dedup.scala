@@ -70,9 +70,9 @@ object Dedup {
 
   /** The compiled per-doc shingle/signature struct over a text column. */
   private def shingleStruct(text: Column, n: Int, numHashTables: Int,
-      md5_52: Boolean): Column =
+      md5_52: Boolean, weightCap: Int = 0): Column =
     org.apache.spark.sql.graftfn.ShingleMinHash.of(
-      split(trim(text), "\\s+"), n, numHashTables, md5_52)
+      split(trim(text), "\\s+"), n, numHashTables, md5_52, weightCap)
 
   /** Exact n-gram Jaccard near-dup pairs (ids ordered a < b) via prefix
     * filtering (the All-Pairs/PPJoin bound): order each doc's shingles
@@ -306,16 +306,27 @@ object Dedup {
   def minHashPairs(
       df: DataFrame, idCol: String, textCol: String,
       maxJaccardDist: Double = 0.3, numHashTables: Int = 5, n: Int = 3,
-      maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
+      maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame =
+    signaturePairs(df, idCol, textCol, maxJaccardDist, numHashTables, n,
+      weightCap = 0, maxBandFreq)
+
+  /** The shared minhash pair pipeline of [[minHashPairs]] (distinct
+    * shingle sets, `weightCap = 0`) and [[weightedMinHashPairs]] (capped
+    * multisets): the element hashes, set sizes AND signature minima all
+    * come out of the one compiled per-doc pass — no groupBy exchange to
+    * build signatures or count elements (guide §2.4); only the banding
+    * join shuffles anything, and the exact verify intersects the
+    * candidates' hash arrays directly (r16 phase 2).
+    */
+  private def signaturePairs(
+      df: DataFrame, idCol: String, textCol: String, maxJaccardDist: Double,
+      numHashTables: Int, n: Int, weightCap: Int,
+      maxBandFreq: Option[Int]): DataFrame = {
     require(numHashTables <= PortableHash.MinHashA.length,
       s"at most ${PortableHash.MinHashA.length} hash tables supported")
-    // r16: shingle hashes, set sizes AND signature minima all come out of
-    // the one compiled per-doc pass — no groupBy exchange to build
-    // signatures, no groupBy to count set sizes (guide §2.4); only the
-    // banding join shuffles anything, and the exact verify intersects the
-    // candidates' hash arrays directly (r16 phase 2).
     val arr = df.select(col(idCol).as("doc"),
-      shingleStruct(col(textCol), n, numHashTables, md5_52 = true).as("__sh"))
+      shingleStruct(col(textCol), n, numHashTables, md5_52 = true, weightCap)
+        .as("__sh"))
       .cache()
     val hs = arr.select(col("doc"), col("__sh")("hashes").as("hs"))
     val allBanded = arr.select(col("doc"),
@@ -323,34 +334,6 @@ object Dedup {
     val out = pairsFromParts(hs, allBanded, maxJaccardDist, maxBandFreq)
     arr.unpersist()
     out
-  }
-
-  /** The shared minhash pair pipeline over an element-row frame (doc, s):
-    * signature minima per permutation, OR-amplified banding (+ the
-    * optional band-skew guard), and the exact set-Jaccard verify. Used by
-    * [[minHashPairs]] (distinct shingle hashes) and
-    * [[weightedMinHashPairs]] (capped-multiset expansion — the SAME set
-    * machinery computes the weighted Jaccard there, because expanded
-    * copies share their copy indices up to the pairwise minimum).
-    */
-  private def pairsFromElementRows(ex: DataFrame, maxJaccardDist: Double,
-      numHashTables: Int, maxBandFreq: Option[Int]): DataFrame = {
-    // ONE groupBy builds the per-doc element array AND the signature
-    // minima together (r16 phase 2; previously two groupBys — sigs and
-    // set sizes — plus the element-row verify joins). Element rows are
-    // distinct per doc by construction (the weighted expansion emits one
-    // row per (gram, copy-index)), so the collected array is a set and
-    // the array_intersect verify counts exactly what the equi-join
-    // count(*) did.
-    val sigAggs = (0 until numHashTables).map(i =>
-      min(PortableHash.minhashPerm(col("s"), i)).as(s"_m$i"))
-    val grouped = ex.groupBy("doc")
-      .agg(collect_list(col("s")).as("hs"), sigAggs: _*)
-    val allBanded = grouped.select(col("doc"),
-      posexplode(array((0 until numHashTables).map(i => col(s"_m$i")): _*))
-        .as(Seq("band", "sig")))
-    pairsFromParts(grouped.select("doc", "hs"), allBanded,
-      maxJaccardDist, maxBandFreq)
   }
 
   /** Banding + band-skew guard + exact set-Jaccard verify over
@@ -390,8 +373,17 @@ object Dedup {
     * share copies 1..min of each shingle, so set-intersection = Σ min and
     * set-union = Σ max). The whole existing minhash machinery — portable
     * signatures, banding, skew guard, exact verify — then runs UNCHANGED
-    * on the expanded elements; expansion multiplies element rows by at
-    * most `weightCap`.
+    * on the expanded elements; expansion multiplies a document's elements
+    * by at most `weightCap`.
+    *
+    * The expansion happens inside the row: the compiled shingle kernel
+    * ([[org.apache.spark.sql.graftfn.ShingleMinHash]] with `weightCap`)
+    * counts each gram string, hashes `hash52(gram || '#' || i)` for
+    * i = 1..min(tf, weightCap) and takes the signature minima in the same
+    * pass, so this runs [[minHashPairs]]' plan over a different element
+    * array: no gram-string rows, no counting or collecting shuffle. Every
+    * element is kept, also two that collide on their 52-bit hash, as the
+    * former `collect_list` over the expanded rows kept them.
     */
   def weightedMinHashPairs(
       df: DataFrame, idCol: String, textCol: String,
@@ -399,24 +391,8 @@ object Dedup {
       weightCap: Int = 3,
       maxBandFreq: Option[Int] = DefaultMaxBandFreq): DataFrame = {
     require(weightCap >= 1)
-    require(numHashTables <= PortableHash.MinHashA.length,
-      s"at most ${PortableHash.MinHashA.length} hash tables supported")
-    val toks = split(trim(col(textCol)), "\\s+")
-    val raw = df.select(col(idCol).as("doc"),
-      explode(when(size(toks) >= n,
-        transform(sequence(lit(1), size(toks) - (n - 1)),
-          i => concat_ws(" ", slice(toks, i, lit(n)))))
-        .otherwise(array().cast("array<string>"))).as("g"))
-    val ex = raw.groupBy("doc", "g").agg(count(lit(1)).as("tf"))
-      .select(col("doc"),
-        explode(sequence(lit(1L), least(col("tf"), lit(weightCap.toLong)))).as("i"),
-        col("g"))
-      .select(col("doc"), PortableHash.hash52(
-        concat(col("g"), lit("#"), col("i").cast("string"))).as("s"))
-      .cache()
-    val out = pairsFromElementRows(ex, maxJaccardDist, numHashTables, maxBandFreq)
-    ex.unpersist()
-    out
+    signaturePairs(df, idCol, textCol, maxJaccardDist, numHashTables, n,
+      weightCap, maxBandFreq)
   }
 
   /** Benchmark decontamination (the GPT-3/Pile n-gram collision rule):

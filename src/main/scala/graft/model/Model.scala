@@ -55,15 +55,20 @@ object Graph {
   def keyString(keyCols: Column*): Column =
     concat_ws(KeySep, keyCols.map(c => coalesce(c.cast("string"), lit(""))): _*)
 
-  /** `props` collects the given columns as a string map (null values kept
-    * out of the map — Cypher `SET n.p = null` removes the property).
+  /** `props` collects the given columns as a string map in key order (null
+    * values kept out of the map — Cypher `SET n.p = null` removes the
+    * property). Built as a `map_concat` of one-entry maps, each empty when
+    * its value is null, rather than `map_filter` over one map: a
+    * higher-order function is interpreted and takes every ingest emission
+    * projection out of whole-stage codegen.
     */
   private def propsMap(propCols: Map[String, Column]): Column = {
-    val propEntries = propCols.toSeq.sortBy(_._1).flatMap { case (name, c) =>
-      Seq(lit(name), c.cast("string"))
+    val empty = map().cast("map<string,string>")
+    val entries = propCols.toSeq.sortBy(_._1).map { case (name, c) =>
+      val v = c.cast("string")
+      when(v.isNotNull, map(lit(name), v)).otherwise(empty)
     }
-    if (propEntries.isEmpty) map().cast("map<string,string>")
-    else map_filter(map(propEntries: _*), (_, v) => v.isNotNull)
+    if (entries.isEmpty) empty else map_concat(entries: _*)
   }
 
   /** The node columns (id, label, tenant, key, props) of one entity. */

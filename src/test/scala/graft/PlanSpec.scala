@@ -801,4 +801,76 @@ class PlanSpec extends SparkTestBase {
     assert(!p.contains("CartesianProduct"), s"no cartesian:\n$p")
   }
 
+  /** Every executed physical plan of the queries `body` runs, captured
+    * with a QueryExecutionListener (eager checkpoints and table writes
+    * report too) once the listener bus is quiet.
+    */
+  private def executedPlans(body: => Unit): Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        plans.add(qe.executedPlan); ()
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      var prev = -1
+      var rounds = 0
+      while (prev != plans.size && rounds < 20) {
+        prev = plans.size; Thread.sleep(200); rounds += 1
+      }
+    } finally spark.listenerManager.unregister(l)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+  }
+
+  /** A plan and everything it runs: children, subqueries, AQE's final
+    * plan and its query stages, reused exchanges and the plans that
+    * build cached relations.
+    */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case _ => Nil
+    }
+    p +: (p.children ++ p.subqueries ++ inner).flatMap(allNodes)
+  }
+
+  test("curation lanes and ingest run no interpreted HOF and no ICU case mapping") {
+    import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, InitCap, Lower, Upper}
+    import graft.fixtures.SyntheticWorkbook
+    // ROADMAP direction 4: a higher-order function (transform, filter,
+    // aggregate, zip_with, map_filter, ...) is evaluated by the
+    // interpreter and takes its whole projection out of whole-stage
+    // codegen; Spark 4.1's lower/upper/initcap take the ICU path, whose
+    // first call in a JVM costs about 1.4 s of table set-up.
+    val runs: Seq[(String, () => Unit)] =
+      Seq("q_x_dedup_minhash_weighted", "q_x_dedup_clusters", "q_x_curation_stream")
+        .map(q => q -> (() => { SparkEntry.queries(q)(spark, dir).collect(); () })) :+
+        ("Ingest.run" -> (() => {
+          val seeded = SyntheticWorkbook.seededStore(spark)
+          graft.ingest.Ingest.run(SyntheticWorkbook.golden(spark), seeded.nodes, seeded.edges)
+          ()
+        }))
+    val offences = runs.flatMap { case (name, run) =>
+      val plans = executedPlans(run())
+      assert(plans.nonEmpty, s"$name: no executed plan was captured")
+      plans.flatMap(allNodes).flatMap(_.expressions).flatMap(_.collect {
+        case e: HigherOrderFunction =>
+          s"$name: higher-order function ${e.prettyName}: ${e.sql.take(300)}"
+        case e @ (_: Lower | _: Upper | _: InitCap) =>
+          s"$name: ICU case mapping: ${e.sql.take(300)}"
+      }).distinct
+    }
+    assert(offences.isEmpty, offences.mkString("\n"))
+  }
 }

@@ -16,9 +16,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * path (`spark.sql.icu.caseMappings.enabled`). The first call in a JVM
   * runs `CollationAwareUTF8String`'s static initialiser, which calls
   * `UCharacter.toTitleCase` on every code point to fill a title-case
-  * lookup table: about 1.4 s on one executor thread and 2.6 MB of heap,
-  * paid by whichever task lowercases first. This expression never loads
-  * that class.
+  * lookup table: about 1 s of one thread's CPU (the initialiser alone,
+  * fresh JDK 17 JVM, 4-core VM), paid by whichever task lowercases
+  * first. This expression does not use that class.
   *
   * Semantics: ASCII-only strings take `UTF8String.toLowerCaseAscii` (the
   * same fast path `lower()` takes); anything else is

@@ -797,7 +797,7 @@ object TextAnalysis {
     * Tokens are compared lowercased through the compiled
     * [[org.apache.spark.sql.graftfn.RootLower]], not `lower()`: this gauge
     * runs on every document of the quality gates, and in Spark 4.1 the
-    * first `lower()` of a JVM pays about 1.4 s of ICU table set-up on one
+    * first `lower()` of a JVM pays about 1 s of ICU table set-up on one
     * task. RootLower is `lower()` on every code point the JDK's Unicode
     * knows (the exceptions are listed in its scaladoc).
     */

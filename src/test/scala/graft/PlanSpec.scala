@@ -852,7 +852,7 @@ class PlanSpec extends SparkTestBase {
     // aggregate, zip_with, map_filter, ...) is evaluated by the
     // interpreter and takes its whole projection out of whole-stage
     // codegen; Spark 4.1's lower/upper/initcap take the ICU path, whose
-    // first call in a JVM costs about 1.4 s of table set-up.
+    // first call in a JVM costs about 1 s of table set-up.
     val runs: Seq[(String, () => Unit)] =
       Seq("q_x_dedup_minhash_weighted", "q_x_dedup_clusters", "q_x_curation_stream")
         .map(q => q -> (() => { SparkEntry.queries(q)(spark, dir).collect(); () })) :+

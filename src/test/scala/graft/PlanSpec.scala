@@ -823,7 +823,8 @@ class PlanSpec extends SparkTestBase {
         prev = plans.size; Thread.sleep(200); rounds += 1
       }
     } finally spark.listenerManager.unregister(l)
-    scala.jdk.CollectionConverters.CollectionHasAsScala(plans).asScala.toSeq
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq
   }
 
   /** A plan and everything it runs: children, subqueries, AQE's final
@@ -848,11 +849,11 @@ class PlanSpec extends SparkTestBase {
   test("curation lanes and ingest run no interpreted HOF and no ICU case mapping") {
     import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, InitCap, Lower, Upper}
     import graft.fixtures.SyntheticWorkbook
-    // ROADMAP direction 4: a higher-order function (transform, filter,
-    // aggregate, zip_with, map_filter, ...) is evaluated by the
-    // interpreter and takes its whole projection out of whole-stage
-    // codegen; Spark 4.1's lower/upper/initcap take the ICU path, whose
-    // first call in a JVM costs about 1 s of table set-up.
+    // A higher-order function (transform, filter, aggregate, zip_with,
+    // map_filter, ...) is evaluated by the interpreter and takes its
+    // whole projection out of whole-stage codegen; Spark 4.1's
+    // lower/upper/initcap take the ICU path, whose first call in a JVM
+    // costs about 1 s of table set-up.
     val runs: Seq[(String, () => Unit)] =
       Seq("q_x_dedup_minhash_weighted", "q_x_dedup_clusters", "q_x_curation_stream")
         .map(q => q -> (() => { SparkEntry.queries(q)(spark, dir).collect(); () })) :+

@@ -187,15 +187,19 @@ class ShingleMinHashSpec extends SparkTestBase {
   test("weightedMinHashPairs equals the old expansion's pipeline row for row") {
     import spark.implicits._
     val k = 5
-    // the sf0.001 corpus (planted near-dups) plus repetition-skewed pairs
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
-      .select(col("doc_id"), col("text"))
-      .unionByName(weightedTexts.map { case (d, t) => (10000L + d, t) }
-        .toDF("doc_id", "text"))
-      .unionByName(Seq(
-        (20000L, "one two three four five six " * 4 + "one two three"),
-        (20001L, "one two three four five six " * 3 + "one two three"),
-        (20002L, "one two three four five six one two three")).toDF("doc_id", "text"))
+    // 40 seeded base documents, each with three near-dup variants: one
+    // word replaced, three words replaced, and its first ten words
+    // repeated twice more (repetition-skewed); plus the cases above
+    val rnd = new scala.util.Random(7)
+    val based = (0 until 40).flatMap { b =>
+      val base = Vector.fill(30)(s"w${rnd.nextInt(200)}")
+      def swap(ws: Vector[String], n: Int) =
+        (0 until n).foldLeft(ws)((acc, _) => acc.updated(rnd.nextInt(30), s"x${rnd.nextInt(50)}"))
+      Seq(base, swap(base, 1), swap(base, 3), base.take(10) ++ base.take(10) ++ base)
+        .zipWithIndex.map { case (ws, v) => (b * 10L + v, ws.mkString(" ")) }
+    }
+    val docs = (based ++ weightedTexts.map { case (d, t) => (10000L + d, t) })
+      .toDF("doc_id", "text")
       .cache()
     for (cap <- Seq(1, 3)) {
       val got = Dedup.weightedMinHashPairs(docs, "doc_id", "text", weightCap = cap)

@@ -155,10 +155,28 @@ object Curation {
     * accepted counts (`sourceCounts` (source, n)), and the
     * decontamination state (`benchShingles` (s) + `bloomWords`
     * (w, bits)); empty frames degrade each stage to a no-op (batch one
-    * of a fresh corpus). Returns (accepted (doc, text, source), ledger
-    * (doc, source, stage, quality_reason, kept)), both eagerly
-    * checkpointed — six marker frames hang off the cascade (the batch
-    * [[ledger]] discipline).
+    * of a fresh corpus). Returns (accepted (doc, text, source, hs, sigs),
+    * ledger (doc, source, stage, quality_reason, kept)). `hs`/`sigs` are
+    * each accepted document's [[Dedup.shingleIndexRows]] columns, the
+    * rows a caller appends to the index, so the accepted documents are
+    * never shingled a second time.
+    *
+    * Shape: one eager checkpoint after the exact-dup window (stage 3)
+    * holds, for every exact-dup survivor, the compiled shingle struct
+    * both set-shaped stages need: hashes and MinHash signatures at `n`
+    * for near-dup, xxhash64 hashes at `contamN` for decontamination.
+    * Near-dup ([[Dedup.nearDupLosers]]) and decontamination
+    * ([[Dedup.bloomHits]]) then read that frame side by side, and each
+    * joins a doc-sized marker back. Decontamination runs over the
+    * stage-3 survivors, not over the near-dup survivors, so its input is
+    * not the near-dup result and no near-dup job sits inside its plan.
+    * The labels do not change: whether a document is contaminated is a
+    * fact of its own shingles, the same whichever other documents are
+    * probed, and the ledger's CASE reports the FIRST failing stage, so a
+    * near-dup loser that is also contaminated still reads `near_dup`,
+    * and a stage-5 survivor is still a near-dup survivor. A second eager
+    * checkpoint after the quota rank backs both the ledger and the
+    * accepted set.
     *
     * Stage semantics vs the batch ledger, where they differ:
     *   - `near_dup` covers both within-batch cluster losers and
@@ -186,11 +204,8 @@ object Curation {
     // are per-document predicates, exact dedup is one content-hash
     // window over stage-2 survivors, the arrival-order quota is one
     // per-source running count over stage-5 survivors); only the two
-    // set-shaped stages (the near-dup probe and the bloom
-    // decontamination) compute on the filtered survivor set and join
-    // a doc-sized marker back. One eager checkpoint after the window
-    // and one after the quota rank replace the previous six (the batch
-    // ledger and the accepted set are narrow filters of the second).
+    // set-shaped stages compute on the stage-3 survivor set and join a
+    // doc-sized marker back.
     val w = org.apache.spark.sql.expressions.Window
     // 1. blocklist (literal set — blocklists are driver-sized).
     val flagged = b0.withColumn("__blocked", col("source").isNull ||
@@ -202,28 +217,36 @@ object Curation {
         minTypeToken, maxDupGramFrac))
     val pass2 = !col("__blocked") && col("__qr") === "keep"
     // 3. within-batch exact dedup (min-id survivor among stage-2
-    // survivors; failed rows never enter the min).
+    // survivors; failed rows never enter the min). Survivors also get
+    // their near-dup and decontamination shingle structs here, once.
     val base = gated
       .withColumn("__keep3", min(when(pass2, col("doc"))).over(
         w.partitionBy(md5(col("text")))))
       .withColumn("__ex", pass2 && col("doc") =!= col("__keep3"))
       .withColumn("__pass3", pass2 && col("doc") === col("__keep3"))
       .drop("__keep3")
+      .withColumn("__sh", when(col("__pass3"), Dedup.shingleStruct(col("text"),
+        n, numHashTables, md5_52 = true)))
+      .withColumn("__xh", when(col("__pass3"), Dedup.shingleStruct(col("text"),
+        contamN, 0, md5_52 = false)("hashes")))
       .localCheckpoint(true)
+    val alive3 = base.filter(col("__pass3"))
     // 4. near-dup: within batch + against the accepted-corpus index.
-    val ndSurvive = Dedup.incrementalDedupStep(
-        base.filter(col("__pass3")).select("doc", "text"), "doc", "text",
-        corpusIndex, corpusBands, maxJaccardDist, numHashTables, n)
-      .select(col("doc"), lit(true).as("__ndok"))
-    val base4 = base.join(ndSurvive, Seq("doc"), "left")
-      .withColumn("__pass4", col("__pass3") && col("__ndok").isNotNull)
-    // 5. decontamination against the streamed bench state.
-    val ctFail = Dedup.decontaminateBloomWith(
-        base4.filter(col("__pass4")).select("doc", "text"), "doc", "text",
-        benchShingles, bloomWords, contamN, mBits, kProbes)
-      .filter(col("contaminated")).select(col("doc"), lit(true).as("__ct"))
-    val base5 = base4.join(ctFail, Seq("doc"), "left")
-      .withColumn("__pass5", col("__pass4") && col("__ct").isNull)
+    val ndFail = Dedup.nearDupLosers(
+        alive3.select(col("doc"), col("__sh")("hashes").as("hs"),
+          col("__sh")("sigs").as("sigs")),
+        corpusIndex, corpusBands, maxJaccardDist)
+      .select(col("doc"), lit(true).as("__nd"))
+    // 5. decontamination against the streamed bench state, over the
+    // same stage-3 survivors (the CASE below keeps near_dup first).
+    val ctFail = Dedup.bloomHits(alive3.select(col("doc"), col("__xh").as("hs")),
+        benchShingles, bloomWords, mBits, kProbes)
+      .select(col("doc"), lit(true).as("__ct"))
+    val base5 = base.drop("__xh")
+      .join(ndFail, Seq("doc"), "left")
+      .join(ctFail, Seq("doc"), "left")
+      .withColumn("__pass5",
+        col("__pass3") && col("__nd").isNull && col("__ct").isNull)
     // 6. incremental per-source quota: lifetime-accepted counts +
     // arrival rank (doc-id order within the batch; the running count
     // over stage-5 survivors equals their row_number in doc order).
@@ -236,14 +259,15 @@ object Curation {
       .withColumn("__acc",
         col("__pass5") && col("__sofar") + col("__rn") <= quota)
       .localCheckpoint(true)
-    val accepted = base6.filter(col("__acc")).select("doc", "text", "source")
+    val accepted = base6.filter(col("__acc")).select(col("doc"), col("text"),
+      col("source"), col("__sh")("hashes").as("hs"), col("__sh")("sigs").as("sigs"))
     // ledger rows for EVERY input doc, first failing stage wins.
     val ledger = base6
       .select(col("doc"), col("source"),
         when(col("__blocked"), "blocked_source")
           .when(col("__qr") =!= "keep", "quality")
           .when(col("__ex"), "exact_dup")
-          .when(col("__pass3") && col("__ndok").isNull, "near_dup")
+          .when(col("__nd"), "near_dup")
           .when(col("__ct"), "contaminated")
           .when(col("__pass5") && !col("__acc"), "quota")
           .otherwise("kept").as("stage"),

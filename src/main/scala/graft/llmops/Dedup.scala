@@ -69,7 +69,7 @@ object Dedup {
       explode(shingleStruct(col(textCol), n, 0, md5_52)("hashes")).as("s"))
 
   /** The compiled per-doc shingle/signature struct over a text column. */
-  private def shingleStruct(text: Column, n: Int, numHashTables: Int,
+  private[graft] def shingleStruct(text: Column, n: Int, numHashTables: Int,
       md5_52: Boolean, weightCap: Int = 0): Column =
     org.apache.spark.sql.graftfn.ShingleMinHash.of(
       split(trim(text), "\\s+"), n, numHashTables, md5_52, weightCap)
@@ -622,72 +622,86 @@ object Dedup {
   /** One greedy incremental-dedup step — the shared core of the daily
     * batch refresh and [[graft.streaming.EventStream.dedupStream]]:
     * deduplicate `batch` WITHIN itself (minhash pairs → components →
-    * min-id survivor), then drop every within-batch survivor that
-    * near-duplicates the standing corpus INDEX (`corpusIndex` /
-    * `corpusBands`, the [[shingleIndexRows]] (doc, hs, …) and
-    * (doc, band, sig) frames of all previously accepted documents).
-    * Returns the accepted (doc, text) rows. Empty index frames degrade
-    * to pure within-batch dedup — batch one of a fresh corpus.
+    * min-id survivor), then drop every document that near-duplicates the
+    * standing corpus INDEX (`corpusIndex` / `corpusBands`, the
+    * [[shingleIndexRows]] (doc, hs, …) and (doc, band, sig) frames of all
+    * previously accepted documents). Empty index frames degrade to pure
+    * within-batch dedup — batch one of a fresh corpus.
+    *
+    * Returns the accepted rows as (doc, text, hs, sigs): each survivor
+    * carries its own [[shingleIndexRows]] columns, built by the one
+    * compiled shingle pass the probe already ran, so a caller appends
+    * them to the index without shingling the survivors again.
     *
     * Greedy semantics (the production arrival-order contract): earlier
     * batches always win; within a batch the min id wins its cluster. A
     * document whose only near-dup was itself dropped by the cross probe
-    * still loses — its cluster elected one survivor and only that
-    * survivor got probed. That is the standard streaming-dedup
-    * approximation; the alternative (re-electing after the probe) would
-    * need an extra round trip per batch for a case that at dedup
-    * thresholds means the batch carried 3+ mutual near-dups.
+    * still loses — its cluster elected one survivor before the probe.
+    * That is the standard streaming-dedup approximation; the alternative
+    * (re-electing after the probe) would need an extra round trip per
+    * batch for a case that at dedup thresholds means the batch carried
+    * 3+ mutual near-dups.
     *
     * Scale: within-batch work is minhash on the DELTA only; the cross
     * probe is one equi-join of the batch's bands against the index bands
     * (never a text rescan of the corpus), and the exact verify touches
-    * only candidate ids' shingle rows. O(|batch|) + probe — yesterday's
+    * only candidate ids' hash arrays. O(|batch|) + probe — yesterday's
     * corpus never re-pairs with itself.
     */
   def incrementalDedupStep(batch: DataFrame, idCol: String, textCol: String,
       corpusIndex: DataFrame, corpusBands: DataFrame,
       maxJaccardDist: Double = 0.3, numHashTables: Int = 5,
       n: Int = 3): DataFrame = {
-    val b0 = batch.select(col(idCol).as("doc"), col(textCol).as("text"))
-    // r16: ONE compiled shingle pass for the whole batch, shared by the
-    // within-batch pair generation AND the cross-corpus probe (the
-    // survivors were previously re-shingled after the in-batch dedup —
-    // one full tokenize+hash pass and one checkpoint saved per step).
-    // `corpusIndex` is the [[shingleIndexRows]] (doc, hs, …) shape: the
-    // cross verify intersects hash arrays, so the standing index is never
-    // re-aggregated per batch (phase 2).
-    val arr0 = b0.select(col("doc"),
-      shingleStruct(col("text"), n, numHashTables, md5_52 = true).as("__sh"))
+    val arr = batch.select(col(idCol).as("doc"), col(textCol).as("text"),
+        shingleStruct(col(textCol), n, numHashTables, md5_52 = true).as("__sh"))
+      .select(col("doc"), col("text"), col("__sh")("hashes").as("hs"),
+        col("__sh")("sigs").as("sigs"))
       .localCheckpoint(true)
-    val hs0 = arr0.select(col("doc"), col("__sh")("hashes").as("hs"))
-    val banded0 = arr0.select(col("doc"),
-      posexplode(col("__sh")("sigs")).as(Seq("band", "sig")))
-    val inPairs = pairsFromParts(hs0, banded0, maxJaccardDist,
-      DefaultMaxBandFreq)
-    val inFail = resolveClusters(inPairs, "id_a", "id_b")
+    arr.join(nearDupLosers(arr, corpusIndex, corpusBands, maxJaccardDist),
+      Seq("doc"), "left_anti")
+  }
+
+  /** The near-dup losers (doc) of a batch whose [[shingleIndexRows]]
+    * columns (doc, hs, sigs) are already built: within-batch cluster
+    * losers (minhash pairs → components → every member but the min id)
+    * ∪ batch documents that near-duplicate the standing index
+    * (`corpusIndex` (doc, hs, …), `corpusBands` (doc, band, sig)), each
+    * id once.
+    *
+    * The cross probe runs on EVERY batch document, not only on the
+    * within-batch survivors, so the two halves read `arr` side by side and
+    * neither waits for the other's components. The loser set is the same
+    * as probing survivors only: a within-batch loser loses either way,
+    * and the cross verify is per (batch doc, corpus doc) pair, so a
+    * survivor's verdict does not depend on which other batch documents
+    * were probed.
+    */
+  private[graft] def nearDupLosers(arr: DataFrame, corpusIndex: DataFrame,
+      corpusBands: DataFrame, maxJaccardDist: Double): DataFrame = {
+    val hs = arr.select(col("doc"), col("hs"))
+    val banded = indexBandRows(arr)
+    val inFail = resolveClusters(
+        pairsFromParts(hs, banded, maxJaccardDist, DefaultMaxBandFreq),
+        "id_a", "id_b")
       .filter(col("cluster") =!= col("v")).select(col("v").as("doc"))
-    val b1 = b0.join(inFail, Seq("doc"), "left_anti")
-    val arrB = arr0.join(inFail, Seq("doc"), "left_anti")
-    val hsB = arrB.select(col("doc"), col("__sh")("hashes").as("hs"))
-    val cands = arrB
-      .select(col("doc").as("batch_id"),
-        posexplode(col("__sh")("sigs")).as(Seq("band", "sig")))
+    val cands = banded.select(col("doc").as("batch_id"), col("band"), col("sig"))
       .join(corpusBands.select(col("doc").as("corpus_id"), col("band"), col("sig")),
         Seq("band", "sig"))
       .select("batch_id", "corpus_id").distinct()
-    val crossFail = verifyCrossPairs(cands, hsB,
+    val crossFail = verifyCrossPairs(cands, hs,
         corpusIndex.select(col("doc"), col("hs")), maxJaccardDist)
-      .select(col("batch_id").as("doc")).distinct()
-    b1.join(crossFail, Seq("doc"), "left_anti")
+      .select(col("batch_id").as("doc"))
+    inFail.unionByName(crossFail).distinct()
   }
 
   private def bloomPos(h: Column, j: Int, mBits: Int): Column =
     pmod(lit(PortableHash.MinHashA(j)) * pmod(h, lit(PortableHash.P))
       + lit(PortableHash.MinHashB(j)), lit(PortableHash.P)) % mBits.toLong
 
-  private def bloomWordMask(p: Column): Seq[Column] = Seq(
-    (p / 64).cast("long").as("w"),
-    call_function("shiftleft", lit(1L), (p % 64).cast("int")).as("m"))
+  /** The word-table row and the bit inside that word of Bloom position `p`. */
+  private def bloomWord(p: Column): Column = call_function("shiftright", p, lit(6))
+  private def bloomBit(p: Column): Column =
+    call_function("shiftleft", lit(1L), (p % 64).cast("int"))
 
   /** The bench side's Bloom bitset as ≤ mBits/64 (word, bits) rows from a
     * distinct shingle frame (column `s`). `bit_or`-mergeable: the word
@@ -699,36 +713,67 @@ object Dedup {
       kProbes: Int): DataFrame =
     shingles
       .select(explode(array((0 until kProbes).map(j => bloomPos(col("s"), j, mBits)): _*)).as("p"))
-      .select(bloomWordMask(col("p")): _*)
+      .select(bloomWord(col("p")).as("w"), bloomBit(col("p")).as("m"))
       .groupBy("w").agg(bit_or(col("m")).as("bits"))
 
+  /** Verified benchmark hits (doc, n_hit), one row per document with at
+    * least one, of per-doc xxhash64 shingle arrays `hs` (doc, hs) against
+    * built decontamination state: the bench shingle set (column `s`, for
+    * the exact verify) and its Bloom word table `words` (w, bits).
+    *
+    * Each exploded (doc, s) row makes `kProbes` chained broadcast-hash
+    * probes of the one word table: probe j keeps the row when word
+    * `p_j / 64` exists and has bit `p_j % 64` set, so a row that passes
+    * them all has every probed bit set. The word table is broadcast once
+    * and the later probes reuse that exchange. The exact semi-join
+    * against the bench set kills the Bloom false positives, and `n_hit`
+    * counts the verified rows per doc. Nothing is shuffled between the
+    * explode and the verify: no distinct over the shingles and no
+    * per-shingle regrouping of the probe bits, and a shingle two
+    * documents share is probed once for each of them — the probes are
+    * map-side lookups, cheaper than the exchange that deduplicating them
+    * would cost (PlanSpec pins the exchange-free chain). Because `hs`
+    * holds each document's distinct hashes, `n_hit` counts distinct
+    * colliding shingles, as [[decontaminate]] does.
+    *
+    * Catalyst's semi-join pushdown moves the verify below the inner probe
+    * joins, so the executed plan verifies every exploded row first (a
+    * broadcast-hash lookup when the bench set fits the broadcast
+    * threshold) and the probes then re-check verified rows only. The rows
+    * that come out are the same; the Bloom table prefilters nothing
+    * until the verify is kept above the probes (ROADMAP).
+    */
+  private[graft] def bloomHits(hs: DataFrame, benchShingles: DataFrame,
+      words: DataFrame, mBits: Int, kProbes: Int): DataFrame = {
+    require(kProbes >= 1 && kProbes <= PortableHash.MinHashA.length)
+    require(mBits >= 64)
+    val table = broadcast(words.select(col("w").as("__w"), col("bits").as("__bits")))
+    val probed = (0 until kProbes).foldLeft(
+        hs.select(col("doc"), explode(col("hs")).as("s"))) { (rows, j) =>
+      val p = bloomPos(col("s"), j, mBits)
+      rows.join(table, col("__w") === bloomWord(p) &&
+          col("__bits").bitwiseAND(bloomBit(p)) =!= 0)
+        .select("doc", "s")
+    }
+    probed.join(benchShingles.select("s"), Seq("s"), "left_semi")
+      .groupBy("doc").agg(count(lit(1)).as("n_hit"))
+  }
+
   /** [[decontaminateBloom]] against ALREADY-BUILT state: the bench
-    * shingle frame (for the exact verify) and its Bloom word table. The
-    * probe/verify/aggregate pipeline shared by the one-shot and the
+    * shingle frame (for the exact verify) and its Bloom word table. One
+    * row per `train` document, (doc, n_hit, contaminated): the compiled
+    * xxhash64 shingle arrays go through [[bloomHits]], and a document
+    * without a verified hit gets n_hit 0. Shared by the one-shot and the
     * streamed shapes.
     */
   private[graft] def decontaminateBloomWith(
       train: DataFrame, idCol: String, textCol: String,
       benchShingles: DataFrame, words: DataFrame,
       n: Int, mBits: Int, kProbes: Int): DataFrame = {
-    require(kProbes >= 1 && kProbes <= PortableHash.MinHashA.length)
-    require(mBits >= 64)
-    val trainSh = hashedShingleRows(train, idCol, textCol, n, md5_52 = false)
-    val probed = trainSh.select(col("s")).distinct()
-      .select(col("s"),
-        posexplode(array((0 until kProbes).map(j => bloomPos(col("s"), j, mBits)): _*)).as(Seq("j", "p")))
-      .select(col("s") +: col("j") +: bloomWordMask(col("p")): _*)
-      .join(broadcast(words), Seq("w"), "left")
-      .groupBy("s")
-      .agg(min(when(coalesce(col("bits").bitwiseAND(col("m")) =!= 0, lit(false)), 1)
-        .otherwise(0)).as("_all_set"))
-    val survivors = probed.filter(col("_all_set") === 1).select("s")
-    // exact verify over the tiny survivor set — false positives die here.
-    val verified = survivors.join(benchShingles, Seq("s"), "left_semi")
-    val hits = trainSh.join(verified, Seq("s"), "left_semi")
-      .groupBy("doc").agg(count(lit(1)).as("n_hit"))
-    train.select(col(idCol).as("doc"))
-      .join(hits, Seq("doc"), "left")
+    val docs = train.select(col(idCol).as("doc"),
+      shingleStruct(col(textCol), n, 0, md5_52 = false)("hashes").as("hs"))
+    docs.select("doc")
+      .join(bloomHits(docs, benchShingles, words, mBits, kProbes), Seq("doc"), "left")
       .select(col("doc"), coalesce(col("n_hit"), lit(0L)).as("n_hit"),
         (coalesce(col("n_hit"), lit(0L)) > 0).as("contaminated"))
   }
@@ -745,9 +790,9 @@ object Dedup {
     * pmod-safe for signed xxhash64) against the broadcast word table; a
     * shingle survives only if every probed bit is set. Bloom filters have
     * no false negatives, so survivors ⊇ true hits, and the exact semi-join
-    * verify on the (ε·|train| + hits)-sized survivor set kills the false
-    * positives — the final frame is row-for-row IDENTICAL to
-    * `decontaminate` (same oracle), only the data movement changes.
+    * verify kills the false positives — the final frame is row-for-row
+    * IDENTICAL to `decontaminate` (same oracle), only the data movement
+    * changes. (Where the optimizer puts the verify: [[bloomHits]].)
     */
   def decontaminateBloom(
       train: DataFrame, bench: DataFrame, idCol: String, textCol: String,

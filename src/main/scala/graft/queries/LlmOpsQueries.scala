@@ -1621,13 +1621,13 @@ object LlmOpsQueries extends QueryModule {
     }) { (s, d) =>
       val docs = docsSpread(s, d)
       val emptyIdx = Dedup.shingleIndexRows(docs.limit(0), "doc_id", "text", 3)
+      // day 1's survivors carry their index rows (doc, text, hs, sigs).
       val day1 = Dedup.incrementalDedupStep(
         docs.filter(col("doc_id") % 2 === 1), "doc_id", "text",
-        emptyIdx, Dedup.indexBandRows(emptyIdx))
-      val ex1 = Dedup.shingleIndexRows(day1, "doc", "text", 3).localCheckpoint(true)
+        emptyIdx, Dedup.indexBandRows(emptyIdx)).localCheckpoint(true)
       val day2 = Dedup.incrementalDedupStep(
         docs.filter(col("doc_id") % 2 === 0), "doc_id", "text",
-        ex1, Dedup.indexBandRows(ex1))
+        day1, Dedup.indexBandRows(day1))
       day1.select(col("doc"), lit(1L).as("day"), md5(col("text")).as("content_md5"))
         .unionAll(day2.select(col("doc"), lit(2L).as("day"), md5(col("text")).as("content_md5")))
         .orderBy("doc")
@@ -2379,11 +2379,11 @@ object LlmOpsQueries extends QueryModule {
           minTokens = 20, maxAvgTokenLen = 5.0,
           minTypeToken = 0.35, maxDupGramFrac = 0.2)
       val emptySh = Dedup.shingleIndexRows(corpus.limit(0), "doc", "text", 3)
+      // day 1's accepted rows carry their index columns (doc, …, hs, sigs).
       val (acc1, led1) = day(corpus.filter(col("doc") % 40 < 20),
         emptySh, Seq.empty[(String, Long)].toDF("source", "n"))
-      val ex1 = Dedup.shingleIndexRows(acc1, "doc", "text", 3).localCheckpoint(true)
       val (_, led2) = day(corpus.filter(col("doc") % 40 >= 20),
-        ex1, acc1.groupBy("source").agg(count(lit(1)).as("n")))
+        acc1, acc1.groupBy("source").agg(count(lit(1)).as("n")))
       led1.withColumn("day", lit(1L))
         .unionByName(led2.withColumn("day", lit(2L)))
         .orderBy("doc")

@@ -885,14 +885,14 @@ object EventStream {
           maxAvgTokenLen, minTypeToken, maxDupGramFrac, maxJaccardDist,
           numHashTables, n, contamN, mBits, kProbes)
         // state updates: corpus + index append, counts merge, ledger append.
-        accepted.write.mode("append").saveAsTable(docsT)
+        accepted.select("doc", "text", "source").write.mode("append").saveAsTable(docsT)
         // index rows in the shingleIndexRows shape: per-doc hash array
-        // (the verify side) + banded sigs (the probe side) out of one
-        // compiled pass — the state is never re-aggregated per batch.
-        val idx = Dedup.shingleIndexRows(accepted, "doc", "text", n,
-          numHashTables).localCheckpoint(true)
-        idx.select("doc", "hs").write.mode("append").saveAsTable(shT)
-        Dedup.indexBandRows(idx)
+        // (the verify side) + banded sigs (the probe side), the columns
+        // the step built for its own near-dup probe — the accepted
+        // documents are not shingled again and the state is never
+        // re-aggregated per batch.
+        accepted.select("doc", "hs").write.mode("append").saveAsTable(shT)
+        Dedup.indexBandRows(accepted)
           .write.mode("append")
           .bucketBy(stateBuckets, "band", "sig").sortBy("band", "sig")
           .saveAsTable(bandT)
@@ -1239,16 +1239,15 @@ object EventStream {
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sess = batch.sparkSession
+        // survivors carry their own index rows (doc, text, hs, sigs) —
+        // see curationStream.
         val survivors = graft.llmops.Dedup.incrementalDedupStep(
             batch, idCol, textCol, sess.table(shT), sess.table(bandT),
             maxJaccardDist, numHashTables, n)
           .localCheckpoint(eager = true)
-        // index rows in the shingleIndexRows shape — see curationStream.
-        val idx = graft.llmops.Dedup.shingleIndexRows(
-          survivors, "doc", "text", n, numHashTables).localCheckpoint(eager = true)
-        survivors.write.mode("append").saveAsTable(docsT)
-        idx.select("doc", "hs").write.mode("append").saveAsTable(shT)
-        graft.llmops.Dedup.indexBandRows(idx)
+        survivors.select("doc", "text").write.mode("append").saveAsTable(docsT)
+        survivors.select("doc", "hs").write.mode("append").saveAsTable(shT)
+        graft.llmops.Dedup.indexBandRows(survivors)
           .write.mode("append")
           .bucketBy(stateBuckets, "band", "sig").sortBy("band", "sig")
           .saveAsTable(bandT)

@@ -827,11 +827,11 @@ class PlanSpec extends SparkTestBase {
     plans.asScala.toSeq
   }
 
-  /** A plan and everything it runs: children, subqueries, AQE's final
-    * plan and its query stages, reused exchanges and the plans that
-    * build cached relations.
+  /** The plans `p` runs directly: its children, subqueries, AQE's final
+    * plan, a query stage's plan, a reused exchange's original and the
+    * plan that builds a cached relation.
     */
-  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+  private def runs(p: org.apache.spark.sql.execution.SparkPlan)
       : Seq[org.apache.spark.sql.execution.SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
@@ -843,8 +843,13 @@ class PlanSpec extends SparkTestBase {
       case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
       case _ => Nil
     }
-    p +: (p.children ++ p.subqueries ++ inner).flatMap(allNodes)
+    p.children ++ p.subqueries ++ inner
   }
+
+  /** A plan and everything it runs, transitively ([[runs]]). */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] =
+    p +: runs(p).flatMap(allNodes)
 
   test("curation lanes and ingest run no interpreted HOF and no ICU case mapping") {
     import org.apache.spark.sql.catalyst.expressions.{HigherOrderFunction, InitCap, Lower, Upper}
@@ -873,5 +878,54 @@ class PlanSpec extends SparkTestBase {
       }).distinct
     }
     assert(offences.isEmpty, offences.mkString("\n"))
+  }
+
+  test("bloom probe: no exchange between the shingle explode and the exact verify") {
+    import org.apache.spark.sql.catalyst.plans.LeftSemi
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, ShuffleQueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import graft.llmops.Dedup
+    val docs = Tables.documents(spark, dir)
+    // built state, as the stream's tables and the replay's checkpoints hold it
+    val benchSh = Dedup.xxShingleRows(docs.filter(col("doc_id") % 2 === 1), "doc_id", "text", 5)
+      .select("s").distinct().localCheckpoint(true)
+    val words = Dedup.bloomWordTable(benchSh, 1 << 16, 4).localCheckpoint(true)
+    val df = Dedup.decontaminateBloomWith(docs.filter(col("doc_id") % 2 === 0),
+      "doc_id", "text", benchSh, words, 5, 1 << 16, 4)
+    assert(df.collect().exists(_.getBoolean(2)), "no hit: the verify was never exercised")
+    val root = df.queryExecution.executedPlan
+    val nodes = allNodes(root)
+    val verify = nodes.collect { case j: BaseJoinExec if j.joinType == LeftSemi => j }
+    assert(verify.size == 1, s"expected one exact verify:\n$root")
+    // the streamed side's chain from the verify down to the explode
+    def pathToExplode(p: SparkPlan): Option[Seq[SparkPlan]] = p match {
+      case g: GenerateExec => Some(Seq(g))
+      case _ => runs(p).iterator.map(pathToExplode).collectFirst { case Some(x) => p +: x }
+    }
+    val path = pathToExplode(verify.head.left)
+    assert(path.isDefined, s"the verify's streamed side does not reach the explode:\n$root")
+    val exchanges = path.get.filter {
+      case _: ShuffleExchangeLike | _: ShuffleQueryStageExec => true
+      case _ => false
+    }
+    assert(exchanges.isEmpty, s"shuffle between explode and verify:\n${path.get.mkString("\n")}")
+    // the k chained probes share one broadcast of the word table
+    val wordStages = nodes.collect {
+      case b: BroadcastQueryStageExec if b.output.exists(_.name == "__w") => b }
+    assert(wordStages.size == 4 &&
+      wordStages.count(!_.plan.isInstanceOf[ReusedExchangeExec]) == 1,
+      s"word table not broadcast exactly once for its 4 probes:\n$root")
+  }
+
+  test("q_x_curation_stream over sf0.001 runs at most 60 jobs") {
+    // 55 when near-dup and decontamination read the stage-3 checkpoint
+    // side by side and the accepted documents are not shingled again;
+    // 72 when decontamination's input nested the near-dup result and
+    // the replay re-shingled day 1's accepted documents.
+    val (_, jobs) = countJobs(SparkEntry.queries("q_x_curation_stream")(spark, dir).collect())
+    info(s"jobs=$jobs")
+    assert(jobs <= 60, s"q_x_curation_stream ran $jobs jobs")
   }
 }

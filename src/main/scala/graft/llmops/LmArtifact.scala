@@ -3,6 +3,7 @@ package graft.llmops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.RootLower
 
 /** Standard-format n-gram language-model artifact — the THIRD interop
   * envelope next to the tokenizer files ([[VocabArtifact]]) and the
@@ -53,6 +54,11 @@ import org.apache.spark.sql.functions._
   * the sentinel and silently absorb real mass — the trainer REFUSES it
   * loudly (the TokenBin out-of-range discipline).
   *
+  * Case folding: every trainer and scorer lowercases with
+  * [[org.apache.spark.sql.graftfn.RootLower]], not `lower()`, whose ICU
+  * path costs a cold JVM's first scan about a second of table set-up
+  * (see its scaladoc for the code points where the two differ).
+  *
   * Scale: the unigram/context tables are vocab-bounded and broadcast;
   * the bigram table GROWS with the reference corpus (the tfidf lesson —
   * see [[TextAnalysis.bigramLogProb]]) so every bigram join is a plain
@@ -99,7 +105,7 @@ object LmArtifact {
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0, 1), got $discount")
     val toks = reference
-      .select(explode(tokens(lower(col(refTextCol)))).as("w"))
+      .select(explode(tokens(RootLower.lower(col(refTextCol)))).as("w"))
     // the sentinel must not collide with a real token — refuse loudly,
     // on the data path (assert_true weaves into the kept value so the
     // check can't be pruned and costs no extra corpus scan).
@@ -132,7 +138,7 @@ object LmArtifact {
       .select("w", "cu", "nll10_micro")
     // adjacent-pair counts (the bigramLogProb gram shape).
     val grams = reference
-      .select(tokens(lower(col(refTextCol))).as("__toks"))
+      .select(tokens(RootLower.lower(col(refTextCol))).as("__toks"))
       .filter(size(col("__toks")) >= 2)
       .select(posexplode(expr(
         "transform(sequence(0, size(__toks) - 2), " +
@@ -215,7 +221,7 @@ object LmArtifact {
     val (cb, base0) = arpaParts(reference, refTextCol, tokens, discount)
     val base = base0.localCheckpoint(true)
     val toksArr = reference
-      .select(tokens(lower(col(refTextCol))).as("__toks"))
+      .select(tokens(RootLower.lower(col(refTextCol))).as("__toks"))
     // adjacent triples — the gram shape one order up.
     val tg = toksArr.filter(size(col("__toks")) >= 3)
       .select(posexplode(expr(
@@ -304,7 +310,7 @@ object LmArtifact {
     require(discount > 0.0 && discount < 1.0,
       s"discount must be in (0, 1), got $discount")
     val toks = reference
-      .select(explode(tokens(lower(col(refTextCol)))).as("w"))
+      .select(explode(tokens(RootLower.lower(col(refTextCol)))).as("w"))
     val cu0 = toks.groupBy("w").agg(count(lit(1)).as("cu"))
     // the <unk> sentinel guard — same weave as arpaTable
     val cu = cu0.select(coalesce(
@@ -314,7 +320,7 @@ object LmArtifact {
         .cast("string"),
       col("w")).as("w"), col("cu")).localCheckpoint(eager = true)
     val toksArr = reference
-      .select(tokens(lower(col(refTextCol))).as("__toks"))
+      .select(tokens(RootLower.lower(col(refTextCol))).as("__toks"))
     val grams = toksArr.filter(size(col("__toks")) >= 2)
       .select(posexplode(expr(
         "transform(sequence(0, size(__toks) - 2), " +
@@ -644,7 +650,7 @@ object LmArtifact {
     // literal string '<unk>' counts as OOV — matching a replay that maps
     // through training counts rather than the model's unigram table.
     val toks = df.select(col(idCol).as("doc"),
-        posexplode(tokens(lower(col(textCol)))).as(Seq("pos", "raw")))
+        posexplode(tokens(RootLower.lower(col(textCol)))).as(Seq("pos", "raw")))
       .join(broadcast(uni.filter(col("w") =!= lit(Unk))
           .select(col("w"), lit(1).as("__in"))),
         col("raw") === col("w"), "left")
@@ -709,7 +715,7 @@ object LmArtifact {
       .select(col("gram").as("__tg"), col("nll10_micro").as("t_nll"))
     // membership excludes '<unk>' — see arpaScore's rationale.
     val toks = df.select(col(idCol).as("doc"),
-        posexplode(tokens(lower(col(textCol)))).as(Seq("pos", "raw")))
+        posexplode(tokens(RootLower.lower(col(textCol)))).as(Seq("pos", "raw")))
       .join(broadcast(uni.filter(col("w") =!= lit(Unk))
           .select(col("w"), lit(1).as("__in"))),
         col("raw") === col("w"), "left")

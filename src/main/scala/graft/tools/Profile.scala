@@ -3,6 +3,9 @@ package graft.tools
 import graft.GraftSession
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, BroadcastQueryStageExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 /** Per-query profiler — the §1 "measure first" harness.
   *
@@ -15,6 +18,15 @@ import org.apache.spark.scheduler._
   * volumes — the numbers that decide WHICH operator inside a multi-job
   * pipeline is the one to optimize. An argument "warm" runs each query twice and profiles the
   * second run (isolates plan shape from codegen/JIT).
+  *
+  * Then it lists every query the profiled run executed, in order (eager
+  * checkpoints, `rdd` conversions such as GraphX inputs, and table
+  * writes report as their own queries): its action, its duration and how many shuffle and
+  * broadcast query stages adaptive execution ran for it, a stage that
+  * reuses another's exchange not counted. AQE runs each query stage as a
+  * job of its own whose call site is a CompletableFuture frame, not
+  * graft code, so this list is what names the operator that owns those
+  * jobs: stage jobs ≈ the summed stage counts.
   *
   * Run: sbt 'runMain graft.tools.Profile q_m5_edge_props warm'
   */
@@ -51,6 +63,16 @@ object Profile {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val queries = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit = {
+        val (sh, bc) = queryStages(qe.executedPlan)
+        queries.add(f"$action%-16s ${ns / 1e9}%6.2fs shuffleStages=$sh%d broadcastStages=$bc%d")
+        ()
+      }
+      override def onFailure(action: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(qeListener)
 
     // same inter-query hygiene as Bench: drop finished queries'
     // persisted RDDs so a multi-query profile batch doesn't charge
@@ -61,7 +83,7 @@ object Profile {
       val fn = graft.SparkEntry.queries(n)
       release()
       if (warm) { fn(spark, sfDir).count(); release() }
-      stages.clear(); jobs.set(0)
+      stages.clear(); jobs.set(0); queries.clear()
       val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       val counted = fn(spark, sfDir).groupBy().count()
@@ -82,7 +104,29 @@ object Profile {
       rows.take(14).foreach { r =>
         println(f"  stage ${r.id}%4d ${r.ms}%6dms task=${r.taskMs}%6dms cpu=${r.cpuMs}%6dms gc=${r.gcMs}%5dms shR=${r.shRead}%9d shW=${r.shWrite}%9d rec=${r.records}%9d  ${r.name.take(80)}%s")
       }
+      println(s"  queries=${queries.size}")
+      queries.asScala.zipWithIndex.foreach { case (q, i) => println(f"  query $i%3d $q%s") }
     }
     spark.stop()
+  }
+
+  /** (shuffle, broadcast) query stages an executed plan ran: AQE's
+    * final plan walked through its stages and subqueries; a stage that
+    * wraps a `ReusedExchange` ran no job and is not counted.
+    */
+  private def queryStages(p: SparkPlan): (Int, Int) = {
+    def walk(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case s: QueryStageExec => Seq(s.plan)
+        case _ => Nil
+      }
+      p +: (p.children ++ p.subqueries ++ inner).flatMap(walk)
+    }
+    val ran = walk(p).collect {
+      case s: QueryStageExec if !s.plan.isInstanceOf[ReusedExchangeExec] => s
+    }
+    (ran.count(_.isInstanceOf[ShuffleQueryStageExec]),
+      ran.count(_.isInstanceOf[BroadcastQueryStageExec]))
   }
 }

@@ -149,25 +149,4 @@ object Refresh {
         fs.delete(old, true)
       }
   }
-
-  /** Persist the store BUCKETED on the join keys (nodes by id, edges by
-    * src), for the write-once / join-many access pattern: every
-    * edge-resolution join (src = id) against a store bucketed with the same
-    * bucket count is shuffle-free — Spark matches the two sides' bucket
-    * partitioning and skips both Exchanges (asserted in PlanSpec). Size
-    * `buckets` so one bucket ≈ one task's worth of data at the target
-    * scale. Bucketing metadata needs the table catalog, hence saveAsTable.
-    */
-  def writeBucketed(store: GraphStore, tablePrefix: String, buckets: Int = 64): Unit = {
-    store.nodes.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "id").sortBy("id")
-      .saveAsTable(s"${tablePrefix}_nodes")
-    store.edges.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "src").sortBy("src")
-      .saveAsTable(s"${tablePrefix}_edges")
-  }
-
-  def loadBucketed(spark: SparkSession, tablePrefix: String): GraphStore = GraphStore(
-    spark.table(s"${tablePrefix}_nodes"),
-    spark.table(s"${tablePrefix}_edges"))
 }

@@ -136,14 +136,6 @@ object Selection {
         coalesce(col("score"), lit(0L)).as("score"))
   }
 
-  /** Keep documents scoring at least `minScore` — with `scale` = 10⁶ in
-    * the weight table, `minScore = 1000000` keeps documents whose mean
-    * bucket ratio favors the target. Deterministic; nested in the
-    * threshold (lowering it only adds documents).
-    */
-  def selectByImportance(scored: DataFrame, minScore: Long): DataFrame =
-    scored.filter(col("score") >= minScore)
-
   /** Keep EXACTLY `floor(n · keepBps / 10000)` documents — the top of the
     * (score DESC, doc ASC) ranking — without a global sort and without a
     * single-partition window (the resampling half of the DSIR shape,

@@ -592,29 +592,6 @@ object Similarity {
       .groupBy(col("label"), (col("pos") + 1).as("i"))
       .agg(avg(col("v").cast("double")).as("c"), count(lit(1)).as("n"))
 
-  /** Assemble [[labelCentroids]] rows back into one float vector per label
-    * (sorted by dimension — deterministic), small enough to broadcast.
-    */
-  def centroidVectors(centroids: DataFrame): DataFrame =
-    centroids.groupBy("label").agg(
-      transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        s => s("c").cast("float")).as("cvec"))
-
-  /** Nearest-centroid classification: each vector gets the label of its
-    * max-cosine prototype (ties → lowest label). The centroid table is
-    * nlabels × dim — broadcast; the corpus never shuffles.
-    */
-  def nearestCentroid(df: DataFrame, centroidVecs: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val scored = df.select(col(idCol).as("id"), col(vecCol).as("vec"))
-      .crossJoin(broadcast(centroidVecs))
-      .withColumn("cos", cosine(col("vec"), col("cvec")))
-    val w = Window.partitionBy("id").orderBy(col("cos").desc, col("label"))
-    scored.withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("id"), col("label").as("pred"), round(col("cos"), 6).as("cos"))
-  }
-
   /** SemDeDup-style semantic near-duplicate pairs (Abbas et al. 2023,
     * arXiv:2303.09540): assign every vector to its single nearest
     * centroid cell, then run exact cosine only WITHIN each cell and keep

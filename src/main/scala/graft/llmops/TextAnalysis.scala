@@ -1015,7 +1015,7 @@ object TextAnalysis {
     regexp_extract_all(text,
       lit(s"[$NoSpaceScriptRanges]|[^\\s$NoSpaceScriptRanges]+"), lit(0))
 
-  /** Per-script letter ranges for [[withScriptMix]] / [[withLangIdScript]]
+  /** Per-script letter ranges for [[scriptMixBySource]] / [[withLangIdScript]]
     * — same portable `\x{...}` syntax. `latin` spans ASCII letters plus
     * Latin-1/Extended-A/B (the European diacritics).
     */
@@ -1058,7 +1058,7 @@ object TextAnalysis {
         col("n_docs") >= minDocs && col("keep_bps") < minKeepBps)
 
   /** Code-switching SEGMENTS — consecutive same-script token runs, the
-    * structural view [[withScriptMix]]'s per-doc fractions can't give:
+    * structural view [[scriptMixBySource]]'s script shares can't give:
     * "40% Han characters" is one number for both a bilingual article
     * (two long runs) and keyword-stuffed spam (Han sprinkled every few
     * words) — segment count and lengths separate them, locate embedded
@@ -1089,25 +1089,6 @@ object TextAnalysis {
       .groupBy("doc", "seg", "script")
       .agg(count(lit(1)).as("n_tokens"),
         min(col("pos")).cast("long").as("start_pos"))
-  }
-
-  /** Data-card script gauge: per-document letter count and per-script
-    * character fractions (`script_latin`, `script_han`, …, 6 dp, 0 when
-    * the document has no letters). Pure codegen'd length arithmetic —
-    * scan speed, no shuffle.
-    */
-  def withScriptMix(df: DataFrame, textCol: String = "text"): DataFrame = {
-    val t = col(textCol)
-    def cnt(r: String): Column =
-      (length(t) - length(regexp_replace(t, s"[$r]", ""))).cast("long")
-    val nLetters = ScriptRanges.map { case (_, r) => cnt(r) }.reduce(_ + _)
-    ScriptRanges.foldLeft(df.withColumn("n_letters", nLetters)) {
-      case (acc, (name, r)) =>
-        acc.withColumn(s"script_$name",
-          when(col("n_letters") > 0,
-            round(cnt(r) / col("n_letters").cast("double"), 6))
-            .otherwise(lit(0.0)))
-    }
   }
 
   /** Per-GROUP script mix — the data-card gauge for multilingual
@@ -1634,29 +1615,6 @@ object TextAnalysis {
       .agg(sum("w").as("s"))
       .select(col("doc"), col("cand"), col("n").as("n_digits"),
         (col("s") % 10 === 0 && col("n").between(13, 19)).as("luhn_valid"))
-  }
-
-  /** Scrub Luhn-VALID card numbers to `[CARD]` — the two-stage PII pass
-    * [[redactPii]]'s pure-regex stages can't be (validity isn't
-    * regular): [[luhnCards]] decides, then each document folds its
-    * sorted valid candidates through `replace` (array_sort makes the
-    * fold order deterministic; candidates are exact substrings, so
-    * replace scrubs every occurrence). Emits (doc, n_cards = distinct
-    * valid numbers, redacted). Run BEFORE [[redactPii]] in a combined
-    * pass — its `[NUM]` stage would otherwise eat contiguous card
-    * digits before validation sees them.
-    */
-  def redactCards(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val valid = luhnCards(df, idCol, textCol)
-      .filter(col("luhn_valid"))
-      .groupBy("doc").agg(array_sort(collect_set(col("cand"))).as("cards"))
-    df.select(col(idCol).as("doc"), col(textCol).as("text"))
-      .join(valid, Seq("doc"), "left")
-      .withColumn("cards",
-        coalesce(col("cards"), array().cast("array<string>")))
-      .select(col("doc"), size(col("cards")).cast("long").as("n_cards"),
-        aggregate(col("cards"), col("text"),
-          (acc, c) => replace(acc, c, lit("[CARD]"))).as("redacted"))
   }
 
   /** robots.txt crawl-policy rules (RFC 9309) for the DEFAULT (`*`)

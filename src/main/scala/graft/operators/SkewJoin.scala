@@ -74,46 +74,6 @@ object SkewJoin {
     s.cold.unionByName(s.hot)
   }
 
-  /** Sketch-driven skew handling — [[saltedInnerJoin]] with the exact
-    * hot-key detection pass PRUNED by a CountMin sweep (the "broadcast
-    * vs salt planner move" the sketch family exists for): the default
-    * detection's `groupBy(keys).count` shuffles one row per DISTINCT
-    * key per partition, and at web scale the long tail of once-seen
-    * keys IS that shuffle. Here a d = 1 CountMin pass (w bounded
-    * counters, map-side combined — the shuffle carries ≤ w rows per
-    * partition) finds the buckets that could hold a hot key; only rows
-    * in those buckets reach the exact re-count. CMS never undercounts,
-    * so no truly-hot key can escape the prune (overcounted buckets just
-    * cost re-count work), and the exact counts make the final decision
-    * — the result is ROW-FOR-ROW the plain join, always.
-    *
-    * With no hot key the whole overhead is the sketch pass and the join
-    * plans plain; with hot keys only their rows salt. `w` trades prune
-    * precision (a tail bucket only survives when its TOTAL reaches
-    * `hotThreshold`) against the bounded counter table.
-    */
-  def adaptiveInnerJoin(left: DataFrame, right: DataFrame, key: String,
-      salts: Int = 8, hotThreshold: Long = 2000000L, w: Int = 512): DataFrame = {
-    import graft.functions.CountMin
-    import graft.llmops.PortableHash
-    require(salts >= 1 && hotThreshold >= 1 && w >= 1)
-    if (salts == 1) return left.join(right, Seq(key))
-    val hotBuckets = CountMin.sketch(left, key, d = 1, w = w)
-      .filter(col("cnt") >= hotThreshold)
-      .select(col("bucket").as("__b"))
-    val h = PortableHash.hash52(col(key).cast("string"))
-    // exact re-count over candidate-bucket rows only; the surviving set
-    // is bounded by |left| / hotThreshold keys — it always broadcasts.
-    val hot = left
-      .select(col(key), (PortableHash.minhashPerm(h, 0) % w).as("__b"))
-      .join(broadcast(hotBuckets), Seq("__b"))
-      .groupBy(key).agg(count(lit(1)).as("__cnt"))
-      .filter(col("__cnt") >= hotThreshold)
-      .select(col(key))
-      .localCheckpoint(true)
-    saltedInnerJoin(left, right, Seq(key), salts, hot)
-  }
-
   /** The two join branches, exposed for tests: `cold` is the plain join of
     * the non-hot keys (right side NOT replicated); `hot` is the salted
     * join of the hot keys only.

@@ -48,8 +48,7 @@ object Upsert {
       existing: DataFrame,
       incoming: DataFrame,
       keys: Seq[String],
-      onCreateOnly: Seq[String] = Nil,
-      nullSafeKeys: Boolean = true): DataFrame = {
+      onCreateOnly: Seq[String] = Nil): DataFrame = {
     val cols = existing.columns.toSeq
     require(incoming.columns.toSeq == cols, s"schema mismatch: $cols vs ${incoming.columns.toSeq}")
     val nonKey = cols.filterNot(keys.contains)
@@ -58,14 +57,7 @@ object Upsert {
     val inc = incoming
       .select(cols.map(col): _*)
       .withColumn("__inc_present", lit(true))
-    // nullSafeKeys=false swaps <=> for === on the join keys: identical
-    // result when keys are non-null, but Catalyst extracts PLAIN key
-    // expressions — which is what lets a state table bucketed on the keys
-    // join shuffle-free (a <=> key is extracted as (coalesce(k), isnull(k))
-    // composites that can never match the bucket columns).
-    val joinCond = keys.map(k =>
-      if (nullSafeKeys) inc(k) <=> ex(s"__ex_$k") else inc(k) === ex(s"__ex_$k"))
-      .reduce(_ && _)
+    val joinCond = keys.map(k => inc(k) <=> ex(s"__ex_$k")).reduce(_ && _)
     val joined = inc.join(ex, joinCond, "full_outer")
     // Matched or insert → incoming value (except onCreateOnly); keep-only →
     // existing. Match is decided by a presence flag, NOT per-column

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** SURVEY.md §2.10 streaming shapes, computed in batch mode over `events`
   * so the DuckDB oracle can check them. The same windowing logic runs as a
   * real Structured Streaming job in graft.streaming.EventStream (tested in
-  * EventStreamSpec); batch/stream parity is Spark's own guarantee for
+  * StreamingAndGraphSpec); batch/stream parity is Spark's own guarantee for
   * time-window aggregates.
   *
   * All window arithmetic is on exact integer epoch seconds (`ts_sec`) —

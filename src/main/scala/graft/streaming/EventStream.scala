@@ -26,20 +26,11 @@ final case class OpenSession(start: Long, end: Long, n: Long, sum: Double)
   *
   * The same transformations run in batch mode in StreamingQueries (that's
   * the DuckDB-checked surface); Spark guarantees batch/stream parity for
-  * time-window aggregates, and EventStreamSpec pins it with MemoryStream.
+  * time-window aggregates, and StreamingAndGraphSpec's MemoryStream test
+  * of [[sessionCounts]] pins the streaming side against the gap semantics
+  * of the q_st4 oracle.
   */
 object EventStream {
-
-  /** Tumbling-window counts per event type with a watermark: late events
-    * beyond `lateness` are dropped, state is bounded (the 100 TB/continuous
-    * operation requirement — unbounded state is the streaming OOM).
-    */
-  def tumblingCounts(events: DataFrame, window: String = "5 minutes",
-      lateness: String = "1 hour"): DataFrame =
-    events.withWatermark("ts", lateness)
-      .groupBy(org.apache.spark.sql.functions.window(col("ts"), window), col("event_type"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("event_type"), col("n"))
 
   /** Per-user session windows (gap-based) with a watermark — the streaming
     * sessionization operator. State per (user, open session) is bounded by
@@ -219,139 +210,6 @@ object EventStream {
       }
   }
 
-  /** [[incrementalAggregate]] with SKETCH state columns: each micro-batch
-    * folds KMV distinct-count and per-key CMS frequency sketches alongside
-    * the scalar partials via
-    * [[graft.operators.IncrementalAgg.mergeWithSketches]] — the merge law
-    * (`merge(partials(A), partials(B)) ≡ partials(A ∪ B)`, array-exact,
-    * IncrementalAggSpec) extends to streams, so after any number of
-    * micro-batches the state EQUALS the from-scratch batch sketch
-    * (spec-asserted). State stays one bounded row per key
-    * (≤ k + d·w longs of sketch per key).
-    */
-  def incrementalAggregateWithSketches(
-      events: DataFrame, keys: Seq[String], valCol: String,
-      initial: DataFrame, apply: DataFrame => Unit,
-      k: Int = 256, d: Int = 4, w: Int = 64): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.operators.IncrementalAgg
-    var state = initial
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        state = IncrementalAgg.mergeWithSketches(
-          state, IncrementalAgg.partialsWithSketches(batch, keys, valCol, k, d, w),
-          keys, k, d, w)
-          .localCheckpoint(eager = true)
-        apply(state)
-      }
-  }
-
-  /** [[incrementalUpsert]] with the state living in a PARTITIONED +
-    * BUCKETED parquet table instead of a cached in-memory frame — the
-    * production shape, with per-batch I/O proportional to the DELTA, not
-    * the state:
-    *
-    *   - `bucketBy(buckets, keys)` makes the per-batch upsert join
-    *     shuffle-free on the state side (only the micro-batch — tiny by
-    *     definition — shuffles to match the bucket layout);
-    *   - `partitionBy(__bucket)` with `__bucket = pmod(xxhash64(keys),
-    *     partitions)` makes the per-batch WRITE prunable: the micro-batch's
-    *     touched partition ids are a tiny distinct (≤ `partitions` values),
-    *     only those partitions are read for the upsert (partition pruning)
-    *     and only those are rewritten (dynamic partition overwrite).
-    *     Untouched partitions' files are never opened and never rewritten —
-    *     at a 100 TB state table a micro-batch touching 1% of partitions
-    *     reads and writes ~1 TB, not 100 TB. Size `partitions` so one
-    *     partition ≈ the I/O unit you accept re-writing per touched key
-    *     group (e.g. 4096 partitions at 100 TB ≈ 25 GB each); `buckets`
-    *     splits each partition into parallel tasks.
-    *
-    * Bucketed scans group same-bucket files ACROSS selected partitions, so
-    * the scan's HashPartitioning(keys, buckets) — and with it the
-    * no-Exchange join — survives partition pruning.
-    *
-    * The upserted slice is `localCheckpoint`ed before the overwrite: the
-    * write must not re-scan the very partitions it is replacing, and the
-    * checkpoint also cuts per-batch lineage. Keys must be NON-NULL: the
-    * bucketed join uses plain key equality so Catalyst can match the
-    * bucket partitioning — see `Upsert.upsertNodes(nullSafeKeys = false)`.
-    * The state table is created from `initial` only when ABSENT. When it
-    * already exists (a restart after a crash, or the next incremental run)
-    * the committed table IS the resumed state and `initial` is ignored —
-    * paired with the streaming checkpoint (which skips already-processed
-    * batches), a restart neither replays nor clobbers committed upserts.
-    * Drop the table to start fresh.
-    *
-    * `apply` receives (post-upsert state, the upsert's plan) — the plan
-    * ride-along lets tests assert the no-Exchange property on the real
-    * join.
-    */
-  def incrementalUpsertBucketed(
-      events: DataFrame, keys: Seq[String], orderCol: String,
-      initial: DataFrame, tablePrefix: String, buckets: Int = 8,
-      partitions: Int = 16,
-      apply: (DataFrame, org.apache.spark.sql.execution.QueryExecution) => Unit =
-        (_, _) => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
-    val spark = initial.sparkSession
-    val cols = initial.columns.toSeq
-    val table = s"${tablePrefix}_state"
-    def bucketId(df: DataFrame): DataFrame =
-      df.withColumn("__bucket",
-        pmod(xxhash64(keys.map(col): _*), lit(partitions.toLong)).cast("int"))
-    // Create-if-absent: an existing table is committed state from a prior
-    // run — overwriting it with `initial` while the checkpoint skips the
-    // already-processed batches would silently lose their upserts.
-    if (!spark.catalog.tableExists(table)) {
-      bucketId(initial.select(cols.map(col): _*))
-        .write.format("parquet")
-        .partitionBy("__bucket")
-        .bucketBy(buckets, keys.head, keys.tail: _*)
-        .sortBy(keys.head, keys.tail: _*)
-        .saveAsTable(table)
-    }
-    val stateCols = spark.table(table).columns.toSeq // data cols, __bucket last
-    events.writeStream
-      .outputMode(OutputMode.Update())
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val deduped = bucketId(Upsert.dedupeLastWriter(
-          batch.select(cols.map(col): _*), keys, Seq(orderCol)))
-          .select(stateCols.map(col): _*)
-          .localCheckpoint(eager = true) // reused: touched-bucket scan + upsert
-        // tiny by construction: ≤ `partitions` distinct ids, from the
-        // already-materialized micro-batch — not a data collect.
-        val touched = deduped.select("__bucket").distinct()
-          .collect().map(_.getInt(0)).sorted
-        val slice = spark.table(table)
-          .where(col("__bucket").isin(touched.map(Int.box): _*))
-        val next = Upsert.upsertNodes(slice, deduped, keys, nullSafeKeys = false)
-        val plan = next.queryExecution
-        // materialize BEFORE the overwrite: the insert must not re-scan the
-        // partitions it is about to replace.
-        // dynamic mode: only partitions PRESENT in `materialized` — exactly
-        // the touched ids (upsert never drops a slice row) — are replaced.
-        // The conf must be set on the session that OWNS the written frame:
-        // foreachBatch executes on a CLONED session whose conf snapshot
-        // predates any set() on the outer session, and insertInto ignores
-        // the per-write partitionOverwriteMode option (verified empirically
-        // — a static overwrite here silently drops every untouched
-        // partition, i.e. loses state).
-        val materialized = next.localCheckpoint(eager = true)
-        val writeSession = materialized.sparkSession
-        val prevMode = writeSession.conf.get("spark.sql.sources.partitionOverwriteMode")
-        try {
-          writeSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-          materialized.select(stateCols.map(col): _*)
-            .write.mode("overwrite").insertInto(table)
-        } finally {
-          writeSession.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
-        }
-        spark.catalog.refreshTable(table)
-        apply(spark.table(table), plan)
-      }
-  }
-
   /** Streaming per-source data card: the [[graft.llmops.Corpus.dataCard]]
     * report maintained incrementally across micro-batches of documents.
     * State is ONE bounded row per source — exact doc/token counts ride
@@ -373,8 +231,8 @@ object EventStream {
     * batched (spec-asserted against the one-batch card).
     *
     * RESTART-SAFE: the per-source partials persist to a
-    * `{prefix}_card` table (created by the first batch, resumed when
-    * present), so a crash between
+    * `{prefix}_card` table (opened with [[StateTable.open]] before the
+    * stream starts), so a crash between
     * batches loses nothing: the streaming checkpoint skips the
     * already-processed batches AND their counts are already in the
     * table. The table is bounded at one row per source (scalars +
@@ -406,23 +264,19 @@ object EventStream {
         KMinValues.mergeSketch(col("kmv"), k).as("kmv"),
         BottomKSample.mergeSample(col("qs"), k).as("qs"),
         LongHistogram.mergeSketch(col("hist"), histBuckets).as("hist"))
+    StateTable.open(docs.sparkSession, table, partials(docs).schema)
     docs.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sess = batch.sparkSession
-        val p = partials(batch)
         // one row per source → one file per overwrite: the card table is
         // bounded and replaced whole each batch, so it never fragments —
         // coalesce(1) keeps it from scattering its handful of rows across
         // shuffle-partition-many tiny files instead.
-        if (!sess.catalog.tableExists(table)) {
-          p.coalesce(1).write.format("parquet").saveAsTable(table)
-        } else {
-          val merged = mergeCards(sess.table(table), p)
-            .localCheckpoint(eager = true)
-          merged.coalesce(1).write.mode("overwrite").saveAsTable(table)
-        }
+        val merged = mergeCards(sess.table(table), partials(batch))
+          .localCheckpoint(eager = true)
+        merged.coalesce(1).write.mode("overwrite").saveAsTable(table)
         sess.catalog.refreshTable(table)
         apply(sess.table(table)
           .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -449,8 +303,8 @@ object EventStream {
     * Scale: the state table is ≤ mBits/32 rows however many URLs ever
     * arrive — it broadcasts in the probe and overwrites WHOLE per batch
     * (the [[dataCardStream]] bounded-state discipline: coalesce(1), no
-    * fragmentation, no compaction needed, restart resumes
-    * create-if-absent). Merge ≡ build-of-union exactly (OR commutes), so
+    * fragmentation, no compaction needed, restart resumes through
+    * [[openSeenSet]]). Merge ≡ build-of-union exactly (OR commutes), so
     * the stream state equals the one-shot batch filter at every point —
     * the parity the spec pins.
     */
@@ -458,93 +312,79 @@ object EventStream {
       mBits: Long = 1L << 20, k: Int = 4,
       apply: DataFrame => Unit = _ => ()): DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.functions.Bloom
-    val table = s"${tablePrefix}_seen_bloom"
+    val table = openSeenSet(urls.sparkSession, tablePrefix, mBits, k)
     urls.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sess = batch.sparkSession
-        // SELF-DESCRIBING state: a filter's bit positions are a function
-        // of (mBits, k) — probing or merging with different parameters
-        // yields silent FALSE NEGATIVES (wrong bit positions), violating
-        // the filter's one law with no detection. The state stamps its
-        // parameters in `{prefix}_seen_bloom_meta` (the quantizer_meta
-        // precedent); every later batch and every probe verifies first.
-        // Seeding is legal only while the STATE table doesn't exist
-        // either — stamping the caller's parameters over a pre-existing
-        // unstamped (legacy) state would bless exactly the mismatch the
-        // stamp prevents; a legacy state must be migrated explicitly.
-        verifyBloomMeta(sess, tablePrefix, mBits, k,
-          seedIfAbsent = !sess.catalog.tableExists(table))
-        val delta = Bloom.build(batch, urlCol, mBits, k)
-        val state =
-          if (sess.catalog.tableExists(table)) sess.table(table)
-          else delta.limit(0) // empty filter: everything probes new
+        verifyBloomMeta(sess, tablePrefix, mBits, k)
+        val state = sess.table(table)
         apply(Bloom.mightContain(state, batch, urlCol, mBits, k))
-        val merged = Bloom.merge(state, delta).localCheckpoint(eager = true)
+        val merged = Bloom.merge(state, Bloom.build(batch, urlCol, mBits, k))
+          .localCheckpoint(eager = true)
         merged.coalesce(1).write.mode("overwrite").format("parquet")
           .saveAsTable(table)
         sess.catalog.refreshTable(table)
       }
   }
 
-  /** Probe the [[bloomSeenStream]] state WITHOUT re-supplying (mBits, k):
-    * the parameters come from the state's own meta table, so a reader
-    * cannot mismatch them (the foot-gun a bare [[graft.functions.Bloom
-    * .mightContain]] call with default parameters would be — different
-    * bit positions, silent false negatives). Throws if the state has no
-    * meta stamp (pre-self-description state or wrong prefix).
+  /** Open the Bloom seen-set pair [[bloomSeenStream]] and
+    * [[frontierStream]] share, before the stream starts; returns the word
+    * table's name. SELF-DESCRIBING state: a filter's bit positions are a
+    * function of (mBits, k) — probing or merging with different
+    * parameters yields silent FALSE NEGATIVES (wrong bit positions),
+    * violating the filter's one law with no detection. So the parameters
+    * are stamped, at generation 0, in `{prefix}_seen_bloom_meta` (the
+    * quantizer_meta precedent), and every batch verifies them first
+    * ([[verifyBloomMeta]]). Both tables go through [[StateTable.open]],
+    * after an interrupted rotation is completed ([[StateTable.heal]]).
+    * The stamp is seeded only when the word table is absent too: stamping
+    * the caller's parameters over an existing unstamped (legacy) word
+    * table would bless exactly the mismatch the stamp prevents, so that
+    * table stays unstamped and the first batch refuses it.
     */
-  def bloomSeenProbe(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, probes: DataFrame, keyCol: String): DataFrame = {
-    import graft.functions.Bloom
-    val metaT = s"${tablePrefix}_seen_bloom_meta"
-    require(spark.catalog.tableExists(metaT),
-      s"no bloom meta table $metaT — the seen-set state is unstamped or the prefix is wrong")
-    spark.catalog.refreshTable(metaT)
-    spark.catalog.refreshTable(s"${tablePrefix}_seen_bloom")
-    val m = spark.table(metaT).head()
-    Bloom.mightContain(spark.table(s"${tablePrefix}_seen_bloom"), probes,
-      keyCol, m.getAs[Long]("m_bits"), m.getAs[Int]("k"))
+  private def openSeenSet(spark: org.apache.spark.sql.SparkSession,
+      tablePrefix: String, mBits: Long, k: Int): String = {
+    import spark.implicits._
+    val (bloomT, metaT) = (s"${tablePrefix}_seen_bloom", s"${tablePrefix}_seen_bloom_meta")
+    StateTable.heal(spark, Seq(bloomT, metaT))
+    if (spark.catalog.tableExists(metaT) || !spark.catalog.tableExists(bloomT))
+      StateTable.open(spark, metaT, fromDDL("m_bits bigint, k int, generation bigint"),
+        seed = Some(Seq((mBits, k, 0L)).toDF("m_bits", "k", "generation")))
+    StateTable.open(spark, bloomT, fromDDL("word_idx bigint, word bigint"))
+    bloomT
   }
 
-  /** Require the stamped (mBits, k) to equal the caller's; seed the stamp
-    * on first contact when asked. A mismatch THROWS — wrong parameters
-    * must never reach a probe or merge. Runs [[StateTable.heal]] first,
-    * so every writer of the pair completes an interrupted rotation before use.
+  /** Require the stamped (mBits, k) to equal the caller's. A mismatch,
+    * or a missing stamp, THROWS — wrong parameters must never reach a
+    * probe or merge. Runs [[StateTable.heal]] first, so every writer of
+    * the pair completes an interrupted rotation before use.
     */
   private def verifyBloomMeta(sess: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, mBits: Long, k: Int, seedIfAbsent: Boolean): Unit = {
-    import sess.implicits._
+      tablePrefix: String, mBits: Long, k: Int): Unit = {
     val metaT = s"${tablePrefix}_seen_bloom_meta"
     StateTable.heal(sess, Seq(s"${tablePrefix}_seen_bloom", metaT))
-    if (sess.catalog.tableExists(metaT)) {
-      sess.catalog.refreshTable(metaT)
-      val m = sess.table(metaT).head()
-      val (sm, sk) = (m.getAs[Long]("m_bits"), m.getAs[Int]("k"))
-      require(sm == mBits && sk == k,
-        s"bloom parameter mismatch for $tablePrefix: state is (mBits=$sm, k=$sk), " +
-          s"caller passed (mBits=$mBits, k=$k) — probing/merging across parameters " +
-          "produces silent false negatives")
-    } else if (seedIfAbsent) {
-      // generation 0 — rotated forward by [[frontierNewGeneration]];
-      // pre-generation metas (no column) read as 0 via bloomGeneration.
-      Seq((mBits, k, 0L)).toDF("m_bits", "k", "generation")
-        .coalesce(1).write.mode("overwrite").format("parquet").saveAsTable(metaT)
-      sess.catalog.refreshTable(metaT)
-    } else {
-      // state exists but carries no stamp: stamping the CALLER'S
-      // parameters over it would bless exactly the mismatch the stamp
-      // prevents — migration must be explicit.
-      throw new IllegalStateException(
-        s"${tablePrefix}_seen_bloom exists without a meta stamp (legacy " +
-          "state) — write the (m_bits, k) it was built with into " +
-          s"$metaT before streaming into it")
-    }
+    // no stamp: stamping the CALLER'S parameters over the state would
+    // bless exactly the mismatch the stamp prevents — migration must be
+    // explicit.
+    if (!sess.catalog.tableExists(metaT)) throw new IllegalStateException(
+      s"${tablePrefix}_seen_bloom exists without a meta stamp (legacy " +
+        "state) — write the (m_bits, k, generation) it was built with into " +
+        s"$metaT before streaming into it")
+    sess.catalog.refreshTable(metaT)
+    val m = sess.table(metaT).head()
+    val (sm, sk) = (m.getAs[Long]("m_bits"), m.getAs[Int]("k"))
+    require(sm == mBits && sk == k,
+      s"bloom parameter mismatch for $tablePrefix: state is (mBits=$sm, k=$sk), " +
+        s"caller passed (mBits=$mBits, k=$k) — probing/merging across parameters " +
+        "produces silent false negatives")
   }
 
   /** The seen-set's generation: 0 until the first rotation;
-    * pre-generation meta stamps (r12 state) read as 0.
+    * pre-generation meta stamps (r12 state) read as 0. A stream start
+    * refuses such a stamp (its layout has no `generation`) until a
+    * [[frontierNewGeneration]] rotation restamps it.
     */
   def bloomGeneration(sess: org.apache.spark.sql.SparkSession,
       tablePrefix: String): Long = {
@@ -588,7 +428,7 @@ object EventStream {
       tablePrefix: String, mBits: Long = 1L << 20, k: Int = 4): Long = {
     import sess.implicits._
     import graft.functions.Bloom
-    verifyBloomMeta(sess, tablePrefix, mBits, k, seedIfAbsent = false)
+    verifyBloomMeta(sess, tablePrefix, mBits, k)
     val frontierT = s"${tablePrefix}_frontier"
     val gen = bloomGeneration(sess, tablePrefix) + 1L
     StateTable.swap(sess,
@@ -636,8 +476,10 @@ object EventStream {
     *      the queue).
     *
     * Serve the fetch plan with [[frontierWaves]]; retire fetched URLs
-    * with [[frontierDequeue]]. Restarts resume create-if-absent; the
-    * frontier table self-heals fragmentation like every appending state.
+    * with [[frontierDequeue]]. The frontier table and the seen-set
+    * ([[openSeenSet]]) are opened with [[StateTable.open]] before the
+    * stream starts, so restarts resume them; the frontier table
+    * self-heals fragmentation like every appending state.
     *
     * Scale: rules broadcast; the Bloom state is ≤ mBits/32 rows whatever
     * arrives; the batch pipeline is batch-sized (canonicalize is a
@@ -648,23 +490,19 @@ object EventStream {
       tablePrefix: String, rules: DataFrame,
       mBits: Long = 1L << 20, k: Int = 4,
       maxStateFiles: Int = 64): DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.functions.Bloom
-    import graft.llmops.TextAnalysis
+    val spark = links.sparkSession
     val frontierT = s"${tablePrefix}_frontier"
-    val bloomT = s"${tablePrefix}_seen_bloom"
+    StateTable.open(spark, frontierT, fromDDL(
+      s"url string, host string, priority ${links.schema(priorityCol).dataType.sql}"))
+    val bloomT = openSeenSet(spark, tablePrefix, mBits, k)
     links.writeStream
       .outputMode(OutputMode.Update())
       .trigger(Trigger.AvailableNow())
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val sess = batch.sparkSession
-        verifyBloomMeta(sess, tablePrefix, mBits, k,
-          seedIfAbsent = !sess.catalog.tableExists(bloomT))
-        val state =
-          if (sess.catalog.tableExists(bloomT)) sess.table(bloomT)
-          else Bloom.build(batch.limit(0)
-            .select(lit("").as("url")), "url", mBits, k).limit(0)
+        verifyBloomMeta(sess, tablePrefix, mBits, k)
         val (enqueue, merged) = frontierStep(batch, urlCol, priorityCol,
-          rules, state, mBits, k)
+          rules, sess.table(bloomT), mBits, k)
         enqueue.write.mode("append").format("parquet").saveAsTable(frontierT)
         merged.localCheckpoint(eager = true)
           .coalesce(1).write.mode("overwrite").format("parquet")
@@ -762,34 +600,6 @@ object EventStream {
     fresh.write.mode("append").format("parquet").saveAsTable(t)
     spark.catalog.refreshTable(t)
     fresh.count()
-  }
-
-  /** Refresh queued-URL priorities from a new authority table — the
-    * [[graft.analytics.GraphAnalytics.pageRankKeys]] detect→act loop
-    * closed for the LIVE frontier (the IVF-rebuild discipline): ranks
-    * recompute periodically as the link graph grows, and the queue's
-    * yet-unfetched URLs should dispatch under the NEW ranks, not the
-    * ones they arrived with. `hostPriorities` is (host, priority),
-    * host-cardinality → broadcast; hosts absent from it keep their
-    * stored priority. One join + whole-table rewrite (the
-    * [[frontierDequeue]] cost shape — run it at rank-refresh cadence,
-    * not per batch). Returns rows updated (= table size).
-    */
-  def frontierReprioritize(spark: org.apache.spark.sql.SparkSession,
-      tablePrefix: String, hostPriorities: DataFrame): Long = {
-    val t = s"${tablePrefix}_frontier"
-    spark.catalog.refreshTable(t)
-    val updated = spark.table(t)
-      .join(broadcast(hostPriorities
-        .select(col("host"), col("priority").as("__np"))), Seq("host"), "left")
-      .withColumn("priority", coalesce(col("__np"), col("priority")))
-      .drop("__np")
-      .select("url", "host", "priority")
-      .localCheckpoint(eager = true)
-    updated.coalesce(8).write.mode("overwrite").format("parquet")
-      .saveAsTable(t)
-    spark.catalog.refreshTable(t)
-    updated.count()
   }
 
   /** Drift probe over the LIVE [[dataCardStream]] state: PSI of each
@@ -1027,17 +837,21 @@ object EventStream {
     * snapshot stored in `{prefix}_quantizer_meta`, and — when
     * `max(occ_ratio) ≥ maxSkew` or `weighted mean_cdist ≥ cdistFactor ×
     * calibration` — runs [[rebuildQuantizer]] and re-seeds the
-    * calibration row from the rebuilt state. The first call seeds the
-    * meta table and never rebuilds (there is no baseline to drift
-    * from). Returns whether a rebuild ran. Run it on the same
-    * monitoring cadence as [[dataCardDrift]]; cost when nothing fires
-    * is one cellStats pass (broadcast join + bounded aggs).
+    * calibration row from the rebuilt state. The meta table is opened
+    * with [[StateTable.open]] before anything is read — this method is
+    * its only reader and writer, so a stale layout is refused here, not
+    * at [[annIndexStream]]'s start. The first call seeds the calibration
+    * row and never rebuilds (there is no baseline to drift from).
+    * Returns whether a rebuild ran. Run it on the same monitoring
+    * cadence as [[dataCardDrift]]; cost when nothing fires is one
+    * cellStats pass (broadcast join + bounded aggs).
     */
   def maybeRebuild(spark: org.apache.spark.sql.SparkSession,
       tablePrefix: String, nlist: Int, iters: Int, stateBuckets: Int = 8,
       maxSkew: Double = 4.0, cdistFactor: Double = 2.0): Boolean = {
     import spark.implicits._
     val metaT = s"${tablePrefix}_quantizer_meta"
+    StateTable.open(spark, metaT, fromDDL("calib_w_cdist double"))
     val (centT, cellT) = healQuantizer(spark, tablePrefix)
     def gauges(): (Double, Double) = {
       Seq(cellT, centT).foreach(spark.catalog.refreshTable)
@@ -1051,21 +865,22 @@ object EventStream {
       Seq(wCdist).toDF("calib_w_cdist")
         .write.mode("overwrite").format("parquet").saveAsTable(metaT)
     val (skew, wCdist) = gauges()
-    if (!spark.catalog.tableExists(metaT)) {
-      seed(wCdist)
-      false
-    } else {
-      spark.catalog.refreshTable(metaT)
-      val calib = spark.table(metaT).head().getDouble(0)
-      // a zero calibration (perfect initial assignment) drifts at the
-      // first nonzero distance — the epsilon floor keeps the ratio form.
-      val fire = skew >= maxSkew ||
-        wCdist >= cdistFactor * math.max(calib, 1e-12)
-      if (fire) {
-        rebuildQuantizer(spark, tablePrefix, nlist, iters, stateBuckets)
-        seed(gauges()._2)
-      }
-      fire
+    spark.catalog.refreshTable(metaT)
+    spark.table(metaT).collect().headOption match {
+      case None =>
+        seed(wCdist)
+        false
+      case Some(calibRow) =>
+        val calib = calibRow.getDouble(0)
+        // a zero calibration (perfect initial assignment) drifts at the
+        // first nonzero distance — the epsilon floor keeps the ratio form.
+        val fire = skew >= maxSkew ||
+          wCdist >= cdistFactor * math.max(calib, 1e-12)
+        if (fire) {
+          rebuildQuantizer(spark, tablePrefix, nlist, iters, stateBuckets)
+          seed(gauges()._2)
+        }
+        fire
     }
   }
 

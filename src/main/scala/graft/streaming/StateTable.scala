@@ -12,6 +12,14 @@ import org.apache.spark.sql.types.StructType
   *     (`t__rebuild`), so the failable writes run while the live ones serve;
   *   - [[heal]] completes a swap that a crash interrupted.
   *
+  * Every persisted [[EventStream]] state table goes through [[open]]
+  * before its first write: a stream's tables before `.start()`, and
+  * `{prefix}_quantizer_meta` in `maybeRebuild`, its only reader and
+  * writer. One exception is deliberate: an existing `{prefix}_seen_bloom`
+  * without its `_meta` stamp (pre-stamp state) gets no stamp seeded at
+  * open, since that would bless whatever parameters the caller passed;
+  * its first batch refuses it instead.
+  *
   * The catalog has no atomic multi-table replace, so a swap is a DROP +
   * RENAME per table, ordered so that every crash state is readable:
   * leftover twins are reclaimed last table first, then twins are staged

@@ -407,15 +407,6 @@ class LlmOpsSpec extends SparkTestBase {
       (2L, "4111-1111-1111-1112", false),
       (4L, "4111111111111111", true),
       (4L, "5500 0000 0000 0004", true)), s"audit: $audit")
-    val red = TextAnalysis.redactCards(docs, "doc_id", "text")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toList
-      .sortBy(_._1)
-    assert(red(0) == ((1L, 1L, "pay [CARD] today")))
-    // invalid number: NOT redacted — the checksum is the point.
-    assert(red(1) == ((2L, 0L, "ref 4111-1111-1111-1112 invalid")))
-    assert(red(2)._2 == 0L)
-    assert(red(3) == ((4L, 2L, "two cards [CARD] and [CARD] here")))
-    assert(red(4) == ((5L, 0L, "no digits at all")))
   }
 
   test("stratified sampling is per-stratum, deterministic, and nested") {
@@ -1009,23 +1000,6 @@ class LlmOpsSpec extends SparkTestBase {
       .select(array_max(transform(col("qvec"), b => abs(b.cast("int")))).as("m"))
       .agg(max("m")).collect().head.getInt(0)
     assert(mx <= 127)
-  }
-
-  test("nearest-centroid classification beats the random baseline decisively") {
-    val cents = Similarity.centroidVectors(Similarity.labelCentroids(emb))
-    val nLabels = cents.count()
-    val preds = Similarity.nearestCentroid(emb, cents)
-      .join(emb.select(col("vec_id").as("id"), col("label").as("truth")), Seq("id"))
-    val acc = preds.filter(col("pred") === col("truth")).count().toDouble / emb.count()
-    // measured 0.374 on this fixture vs 1/10 random — assert a robust
-    // margin, not the point estimate.
-    assert(acc >= 2.0 / nLabels, s"accuracy $acc vs random ${1.0 / nLabels}")
-    // deterministic: same input → same predictions.
-    val again = Similarity.nearestCentroid(emb, cents)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val first = Similarity.nearestCentroid(emb, cents)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(again == first)
   }
 
   test("int8 two-stage ANN keeps high recall vs exact brute force") {

@@ -63,35 +63,6 @@ class PlanSpec extends SparkTestBase {
     assert(df.columns.toSeq == Seq("id_a", "id_b", "jaccard_dist"))
   }
 
-  test("bucketed store joins shuffle-free (write-once / join-many)") {
-    import graft.ingest.Refresh
-    import scala.jdk.CollectionConverters._
-    val nodes = spark.createDataFrame(
-      (0L until 20L).map(i => org.apache.spark.sql.Row(
-        i, "Part", null, s"k$i", Map.empty[String, String].asJava.asScala.toMap)).asJava,
-      Refresh.nodeSchema)
-    val edges = spark.createDataFrame(
-      (0L until 19L).map(i => org.apache.spark.sql.Row(
-        i, i + 1, "NEXT", null, Map.empty[String, String].asJava.asScala.toMap)).asJava,
-      Refresh.edgeSchema)
-    Refresh.writeBucketed(Refresh.GraphStore(nodes, edges), "bkt_test", buckets = 4)
-    try {
-      val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val b = Refresh.loadBucketed(spark, "bkt_test")
-        val joined = b.edges.join(b.nodes, b.edges("src") === b.nodes("id"))
-        val p = plan(joined)
-        assert(!p.contains("Exchange"),
-          s"bucketed join must not shuffle either side:\n$p")
-        assert(joined.count() == 19)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS bkt_test_nodes")
-      spark.sql("DROP TABLE IF EXISTS bkt_test_edges")
-    }
-  }
-
   test("tfidf term join degrades to a shuffle join when the vocabulary is large") {
     // threshold -1 simulates a document-frequency table too big to
     // broadcast (the vocabulary is unbounded at corpus scale): with no

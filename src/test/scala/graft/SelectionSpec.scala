@@ -55,19 +55,6 @@ class SelectionSpec extends SparkTestBase {
     assert(s._2 == 1000000L)    // all-default mean = ratio 1
   }
 
-  test("selectByImportance is nested in the threshold") {
-    val w = Selection.importanceWeights(raw, target, "doc_id", "text",
-      n = 2, nBuckets = 1024)
-    val sc = Selection.importanceScores(raw, "doc_id", "text", w,
-      n = 2, nBuckets = 1024)
-    val strict = Selection.selectByImportance(sc, 1000000L)
-      .select("doc").as[Long].collect().toSet
-    val loose = Selection.selectByImportance(sc, 1L)
-      .select("doc").as[Long].collect().toSet
-    assert(strict.subsetOf(loose))
-    assert(strict.nonEmpty && strict.forall(Set(1L, 2L)))
-  }
-
   test("topShare keeps exactly floor(n*bps/10000), equals the naive ranking") {
     // 40 docs, many tied scores (score = doc % 4 style ties via repetition)
     val docs = (1L to 40L).map(i =>

@@ -71,30 +71,6 @@ class SketchAndSkewSpec extends SparkTestBase {
     assert(salted == plain && salted.size == 7)
   }
 
-  test("adaptiveInnerJoin: sketch finds the planted hot key, results stay row-identical") {
-    import spark.implicits._
-    // 500 rows on one hot key + a long tail of singleton keys; the right
-    // side has matches for the hot key and a few tail keys.
-    val left = ((1 to 500).map(_ => (7L, "hot")) ++
-      (100L to 199L).map(k => (k, s"t$k"))).toDF("k", "lv")
-    val right = (Seq((7L, "H1"), (7L, "H2")) ++
-      (100L to 104L).map(k => (k, s"R$k"))).toDF("k", "rv")
-    def sorted(df: org.apache.spark.sql.DataFrame) =
-      df.select("k", "lv", "rv").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).sorted.toSeq
-    val plain = sorted(left.join(right, Seq("k")))
-    // threshold 100: only k=7 (500 rows) is hot — the sketch prune must
-    // catch it and the result must be row-identical, duplicates included.
-    val adaptive = sorted(SkewJoin.adaptiveInnerJoin(left, right, "k",
-      salts = 4, hotThreshold = 100L, w = 16))
-    assert(adaptive == plain && adaptive.size == 500 * 2 + 5)
-    // no key reaches the threshold → detection comes back empty and the
-    // join must still be row-identical (the plain-path degenerate).
-    val calm = sorted(SkewJoin.adaptiveInnerJoin(left, right, "k",
-      salts = 4, hotThreshold = 1000L, w = 16))
-    assert(calm == plain)
-  }
-
   test("saltedInnerJoin replicates the right side for hot keys only") {
     import spark.implicits._
     // k=1 is hot (3 left rows ≥ threshold 3); k=2, k=3 are cold.

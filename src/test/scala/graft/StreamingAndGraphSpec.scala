@@ -10,33 +10,6 @@ import org.apache.spark.sql.functions._
 /** Structured Streaming parity + GraphX analytics over the fixture graph. */
 class StreamingAndGraphSpec extends SparkTestBase {
 
-  test("streaming tumbling counts match the batch computation (MemoryStream)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(Long, String, Double)]
-    val streamDf = mem.toDF()
-      .select(expr("timestamp_micros(_1 * 1000000)").as("ts"), col("_2").as("event_type"),
-        col("_3").as("value"))
-    val agg = EventStream.tumblingCounts(streamDf, window = "10 seconds", lateness = "0 seconds")
-    val query = agg.writeStream.format("memory").queryName("tumbling")
-      .outputMode("append").start()
-    val base = 1700000000L
-    mem.addData((base, "a", 1.0), (base + 3, "a", 2.0), (base + 11, "b", 3.0),
-      (base + 12, "a", 4.0), (base + 25, "b", 5.0), (base + 100, "a", 6.0))
-    query.processAllAvailable()
-    // watermark 0s + append mode: windows close once the watermark (max ts)
-    // passes window end → first three windows emitted, the base+100 window
-    // still open.
-    val rows = spark.table("tumbling")
-      .select(col("window_start").cast("long"), col("event_type"), col("n"))
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    query.stop()
-    val expected = Set(
-      (base, "a", 2L), ((base / 10 * 10) + 10, "b", 1L), ((base / 10 * 10) + 10, "a", 1L),
-      ((base / 10 * 10) + 20, "b", 1L))
-    assert(rows == expected, s"got $rows")
-  }
-
   test("streaming session windows (MemoryStream) match gap semantics") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -66,162 +39,6 @@ class StreamingAndGraphSpec extends SparkTestBase {
       (base + 40, base + 50, 1L, 1L, 3.0),     // second session after the gap
       (base + 2, base + 22, 2L, 2L, 9.0))      // exact-boundary event merged
     assert(rows == expected, s"got $rows")
-  }
-
-  test("bucketed incremental upsert: ≥3 micro-batches, state side joins without Exchange") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAuto = spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    // the upsert join sits above an __ex_* rename Project, which hides the
-    // join from DisableUnnecessaryBucketedScan's benefit check — force the
-    // bucketed scan; alias-aware output partitioning does the rest.
-    spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    try {
-      val mem = MemoryStream[(Long, String, Long)]
-      val streamDf = mem.toDF()
-        .select(col("_1").as("k"), col("_2").as("v"), col("_3").as("seq"))
-      val initial = Seq((1L, "init", 0L)).toDF("k", "v", "seq")
-      var plans = List.empty[String]
-      var last: org.apache.spark.sql.DataFrame = null
-      val ckpt = java.nio.file.Files.createTempDirectory("inc_bkt_ckpt").toString
-      val writer = EventStream.incrementalUpsertBucketed(streamDf, Seq("k"), "seq",
-        initial, "inc_bkt_test", buckets = 4,
-        apply = (st, qe) => { last = st; plans ::= qe.executedPlan.toString })
-        .option("checkpointLocation", ckpt)
-      // AvailableNow + checkpoint = the production incremental-batch shape:
-      // each run picks up only the data added since the last one.
-      def runOnce(): Unit = {
-        val q = writer.start(); q.processAllAvailable(); q.stop()
-      }
-      mem.addData((1L, "x", 1L)); runOnce()
-      mem.addData((2L, "y", 2L)); runOnce()
-      mem.addData((2L, "z", 3L), (3L, "w", 4L)); runOnce()
-      assert(plans.size >= 3, s"expected ≥3 micro-batches, got ${plans.size}")
-      plans.foreach { p =>
-        // the state side reads its bucket partitioning straight off the
-        // table — if it shuffled, 'Bucketed: true' would not appear and a
-        // second Exchange would.
-        assert(p.contains("Bucketed: true"), s"state scan not bucketed:\n$p")
-        val exchanges = "Exchange".r.findAllIn(p).size
-        assert(exchanges <= 2,
-          s"state side of the upsert join must not shuffle ($exchanges Exchanges):\n$p")
-      }
-      val state = last.orderBy("k").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(state == Seq((1L, "x"), (2L, "z"), (3L, "w")))
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", prevAuto)
-      spark.sql("DROP TABLE IF EXISTS inc_bkt_test_state")
-    }
-  }
-
-  test("bucketed incremental upsert rewrites ONLY the touched partitions (O(delta) writes)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val partitions = 8
-    // derive each key's partition id with the SAME expression the operator
-    // uses — never hardcode hash values.
-    def bucketOf(k: Long): Int = Seq(k).toDF("k")
-      .select(pmod(xxhash64(col("k")), lit(partitions.toLong)).cast("int"))
-      .collect().head.getInt(0)
-    // two keys in DIFFERENT partitions: batch 2 updates only kB, so kA's
-    // partition must come through byte-identical.
-    val kA = 1L
-    val kB = (2L to 64L).find(bucketOf(_) != bucketOf(kA)).get
-    try {
-      val mem = MemoryStream[(Long, String, Long)]
-      val streamDf = mem.toDF()
-        .select(col("_1").as("k"), col("_2").as("v"), col("_3").as("seq"))
-      val initial = Seq((kA, "initA", 0L), (kB, "initB", 0L)).toDF("k", "v", "seq")
-      var last: org.apache.spark.sql.DataFrame = null
-      val ckpt = java.nio.file.Files.createTempDirectory("inc_prune_ckpt").toString
-      val writer = EventStream.incrementalUpsertBucketed(streamDf, Seq("k"), "seq",
-        initial, "inc_prune_test", buckets = 2, partitions = partitions,
-        apply = (st, _) => last = st)
-        .option("checkpointLocation", ckpt)
-      def runOnce(): Unit = { val q = writer.start(); q.processAllAvailable(); q.stop() }
-
-      // data-file fingerprints per partition directory: path → content hash.
-      val loc = java.nio.file.Paths.get(java.net.URI.create(
-        spark.sessionState.catalog
-          .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier("inc_prune_test_state"))
-          .location.toString))
-      def fingerprint(): Map[String, Map[String, String]] = {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(loc).iterator().asScala
-          .filter(p => java.nio.file.Files.isRegularFile(p) &&
-            p.getFileName.toString.startsWith("part-"))
-          .toList.groupBy(_.getParent.getFileName.toString)
-          .map { case (dir, files) =>
-            dir -> files.map { f =>
-              val md = java.security.MessageDigest.getInstance("MD5")
-              f.toString -> md.digest(java.nio.file.Files.readAllBytes(f))
-                .map("%02x".format(_)).mkString
-            }.toMap
-          }
-      }
-
-      mem.addData((kA, "x", 1L), (kB, "y", 2L)); runOnce()
-      val before = fingerprint()
-      val dirA = s"__bucket=${bucketOf(kA)}"
-      val dirB = s"__bucket=${bucketOf(kB)}"
-      assert(before.contains(dirA) && before.contains(dirB))
-
-      mem.addData((kB, "z", 3L)); runOnce() // touches ONLY kB's partition
-      val after = fingerprint()
-      // untouched partition: same files, same bytes — never rewritten.
-      assert(after(dirA) == before(dirA),
-        s"untouched partition $dirA was rewritten:\nbefore=${before(dirA)}\nafter=${after(dirA)}")
-      // touched partition: rewritten (file set or content differs).
-      assert(after(dirB) != before(dirB), s"touched partition $dirB was not rewritten")
-      // and per-batch write volume = the touched partition only.
-      assert((after.keySet - dirB).forall(d => after(d) == before(d)),
-        "a partition outside the touched set was rewritten")
-      // convergence: the table equals the batch-upsert answer.
-      val state = last.select("k", "v").orderBy("k").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(state == Seq((kA, "x"), (kB, "z")).sortBy(_._1))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS inc_prune_test_state")
-    }
-  }
-
-  test("bucketed incremental upsert: a restart resumes committed state, not `initial`") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    try {
-      val mem = MemoryStream[(Long, String, Long)]
-      val streamDf = mem.toDF()
-        .select(col("_1").as("k"), col("_2").as("v"), col("_3").as("seq"))
-      val ckpt = java.nio.file.Files.createTempDirectory("inc_restart_ckpt").toString
-      var last: org.apache.spark.sql.DataFrame = null
-      def mkWriter(initial: org.apache.spark.sql.DataFrame) =
-        EventStream.incrementalUpsertBucketed(streamDf, Seq("k"), "seq",
-          initial, "inc_restart_test", buckets = 2,
-          apply = (st, _) => last = st)
-          .option("checkpointLocation", ckpt)
-      def runOnce(w: org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row]): Unit = {
-        val q = w.start(); q.processAllAvailable(); q.stop()
-      }
-      // run 1: fresh table, upsert lands.
-      mem.addData((1L, "x", 1L))
-      runOnce(mkWriter(Seq((1L, "init", 0L)).toDF("k", "v", "seq")))
-      // "crash + restart": a NEW writer on the same prefix + checkpoint,
-      // with a DIFFERENT initial. The checkpoint skips batch 0, so if the
-      // builder overwrote the table with this initial, (1,"x") would be
-      // lost. Create-if-absent must resume the committed table instead.
-      mem.addData((2L, "y", 2L))
-      runOnce(mkWriter(Seq((1L, "WRONG", 0L)).toDF("k", "v", "seq")))
-      val state = last.select("k", "v").orderBy("k").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toSeq
-      assert(state == Seq((1L, "x"), (2L, "y")),
-        s"restart clobbered committed state: $state")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS inc_restart_test_state")
-    }
   }
 
   test("dedupStream: greedy cross-batch near-dup dedup over the persisted index") {
@@ -1039,7 +856,8 @@ class StreamingAndGraphSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     val prefix = "stale_state_test"
     val tables = Seq("docs", "shingles", "bands", "ledger", "source_counts",
-      "bench_shingles", "bloom").map(t => s"${prefix}_$t")
+      "bench_shingles", "bloom", "card", "seen_bloom", "seen_bloom_meta",
+      "frontier", "quantizer_meta").map(t => s"${prefix}_$t")
     def stateRows(): Long =
       tables.filter(spark.catalog.tableExists).map(spark.table(_).count()).sum
     val mem = MemoryStream[(Long, String, String)]
@@ -1073,6 +891,33 @@ class StreamingAndGraphSpec extends SparkTestBase {
       assert(e.getMessage.contains(s"${prefix}_ledger") &&
         e.getMessage.contains("kept boolean"), e.getMessage)
       assert(stateRows() == 0L, "a refused start must not write state")
+      // the tables the data-card, seen-set and frontier streams and
+      // maybeRebuild keep are refused up front too
+      val urls = MemoryStream[String].toDF().toDF("url")
+      val links = MemoryStream[(String, Long)].toDF().toDF("url", "prio")
+      val rules = Seq.empty[(String, String, String)].toDF("host", "rule", "path")
+      for ((table, stale, start) <- Seq[(String, org.apache.spark.sql.DataFrame, () => Any)](
+          // a card without its sketch columns
+          ("card", Seq(("s1", 1L, 3L)).toDF("source", "n_docs", "n_tokens"),
+            () => EventStream.dataCardStream(docs, "doc_id", "text", "source", prefix)),
+          // 64-bit (w, bits) words, the decontamination Bloom's layout
+          ("seen_bloom", Seq((0L, 5L)).toDF("w", "bits"),
+            () => EventStream.bloomSeenStream(urls, "url", prefix)),
+          // a stamp without its generation
+          ("seen_bloom_meta", Seq((1L << 20, 4)).toDF("m_bits", "k"),
+            () => EventStream.bloomSeenStream(urls, "url", prefix)),
+          // a frontier without its host column
+          ("frontier", Seq(("https://h0.example/a", 1L)).toDF("url", "priority"),
+            () => EventStream.frontierStream(links, "url", "prio", prefix, rules)),
+          // a float calibration
+          ("quantizer_meta", Seq(0.5f).toDF("calib_w_cdist"),
+            () => EventStream.maybeRebuild(spark, prefix, nlist = 2, iters = 1)))) {
+        dropAll()
+        stale.write.format("parquet").saveAsTable(s"${prefix}_$table")
+        val e = intercept[IllegalStateException](start())
+        assert(e.getMessage.contains(s"${prefix}_$table has layout"), e.getMessage)
+        assert(stateRows() == 1L, s"a refused $table must not write state")
+      }
     } finally dropAll()
   }
 
@@ -1233,34 +1078,6 @@ class StreamingAndGraphSpec extends SparkTestBase {
     // from-scratch over the union of all batches:
     assert(got == Seq((1L, 3L, 15L, 1L, 10L), (2L, 2L, 25L, 5L, 20L),
       (3L, 1L, 7L, 7L, 7L)))
-  }
-
-  test("streaming sketch-state fold equals the from-scratch batch sketches (array-exact)") {
-    import graft.operators.IncrementalAgg
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val (k, d, w) = (8, 4, 16)
-    val mem = MemoryStream[(Long, Long)]
-    val streamDf = mem.toDF().select(col("_1").as("key"), col("_2").as("v"))
-    val initial = spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
-      IncrementalAgg.partialsWithSketches(
-        Seq.empty[(Long, Long)].toDF("key", "v"), Seq("key"), "v", k, d, w).schema)
-    var last = initial
-    val writer = EventStream.incrementalAggregateWithSketches(streamDf, Seq("key"), "v",
-      initial, st => last = st, k, d, w)
-    val batches = Seq(
-      Seq((1L, 10L), (2L, 5L), (1L, 10L)),
-      Seq((1L, 7L), (3L, 2L)),
-      Seq((2L, 5L), (1L, 11L), (3L, 9L)))
-    batches.foreach(b => mem.addData(b: _*))
-    val q = writer.start(); q.processAllAvailable(); q.stop()
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.select(col("key"), col("cnt"), col("kmv"), col("cms")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toSeq, r.getSeq[Long](3).toSeq))
-        .sortBy(_._1).toSeq
-    val scratch = IncrementalAgg.partialsWithSketches(
-      batches.flatten.toDF("key", "v"), Seq("key"), "v", k, d, w)
-    assert(canon(last) == canon(scratch))
   }
 
   test("mapGroupsWithState running totals accumulate across micro-batches") {
@@ -1439,13 +1256,6 @@ class StreamingAndGraphSpec extends SparkTestBase {
       spark.catalog.refreshTable("bloom_stream_test_seen_bloom_meta")
       val meta = spark.table("bloom_stream_test_seen_bloom_meta").head()
       assert(meta.getAs[Long]("m_bits") === (1L << 16) && meta.getAs[Int]("k") === 4)
-      // a reader-side probe takes its parameters FROM the stamp — no way
-      // to mismatch — and routes exactly like mightContain with them
-      val viaProbe = EventStream.bloomSeenProbe(spark, "bloom_stream_test",
-          Seq("https://a.example/2", "https://new.example/9").toDF("url"), "url")
-        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toMap
-      assert(viaProbe === Map("https://a.example/2" -> true,
-        "https://new.example/9" -> false))
       // a restart with DIFFERENT parameters must throw, not silently
       // produce false negatives from mismatched bit positions
       val ckpt2 = java.nio.file.Files.createTempDirectory("bloom_ckpt2").toString
@@ -1555,16 +1365,6 @@ class StreamingAndGraphSpec extends SparkTestBase {
       mem.addData(("https://h0.example/a", 50L))
       runOnce()
       assert(frontier() === Set(("https://h0.example/b", "h0.example", 1L)))
-      // authority refresh: a new host rank table re-prioritizes queued
-      // urls in place; unlisted hosts keep their stored priority
-      mem.addData(("https://h9.example/z", 2L))
-      runOnce()
-      val n = EventStream.frontierReprioritize(spark, "frontier_test",
-        Seq(("h0.example", 77L)).toDF("host", "priority"))
-      assert(n === 2L)
-      assert(frontier() === Set(
-        ("https://h0.example/b", "h0.example", 77L),
-        ("https://h9.example/z", "h9.example", 2L)))
     } finally {
       spark.sql("DROP TABLE IF EXISTS frontier_test_frontier")
       spark.sql("DROP TABLE IF EXISTS frontier_test_seen_bloom")

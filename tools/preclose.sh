@@ -6,12 +6,18 @@
 # CORRECTNESS/BENCH artifacts for the whole round. This script is the
 # mechanical guard: run it IMMEDIATELY before any end-of-round commit.
 #
-#   tools/preclose.sh            # compile gate (minimum, ~10 s warm)
+#   tools/preclose.sh            # dead-surface + compile gate (~10 s warm)
 #   tools/preclose.sh --test     # compile + full ScalaTest suite
 #
 # Exit code 0 = safe to commit. Anything else = DO NOT COMMIT.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+
+echo "[preclose] dead-surface check..."
+python3 tools/surface.py || {
+  echo "[preclose] public defs with no caller — delete them or keep-list them in tools/surface_keep.txt"
+  exit 1
+}
 
 echo "[preclose] sbt compile..."
 sbt -batch compile > /tmp/preclose_compile.log 2>&1 || {

@@ -7,7 +7,7 @@
 # mechanical guard: run it IMMEDIATELY before any end-of-round commit.
 #
 #   tools/preclose.sh            # dead-surface + compile gate (~10 s warm)
-#   tools/preclose.sh --test     # compile + full ScalaTest suite
+#   tools/preclose.sh --test     # the same + full ScalaTest suite
 #
 # Exit code 0 = safe to commit. Anything else = DO NOT COMMIT.
 set -euo pipefail
